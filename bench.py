@@ -73,28 +73,22 @@ HEADLINE = [
 
 
 def _new_session(cpus: int, tag: str):
-    from pyspark.sql import SparkSession
+    from geojson_spark.session import get_spark
 
-    from geojson_spark.session import attach_package
-
-    s = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(f"bench-{tag}")
-        .config("spark.sql.shuffle.partitions", str(max(8, cpus)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        # finer scan granularity: the 300k-image table otherwise packs into
-        # ~5 read-partitions at local[2] (waves of 2/2/1 strand a core);
-        # ~16 MB splits give every level full waves + load balancing
-        .config("spark.sql.files.maxPartitionBytes", "16m")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        .getOrCreate()
+    s = get_spark(
+        master=f"local[{cpus}]",
+        app_name=f"bench-{tag}",
+        shuffle_partitions=max(8, cpus),
+        extra_conf={
+            # finer scan granularity: the 300k-image table otherwise packs
+            # into ~5 read-partitions at local[2] (waves of 2/2/1 strand a
+            # core); ~16 MB splits give every level full waves + load
+            # balancing
+            "spark.sql.files.maxPartitionBytes": "16m",
+            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+        },
     )
     s.sparkContext.setLogLevel("ERROR")
-    attach_package(s)
     return s
 
 

@@ -1,23 +1,31 @@
-"""Spatial joins: point-in-polygon, kNN, raster-tile↔vector-cell.
+"""Spatial joins: point-in-polygon, kNN, distance, raster-tile↔vector-cell.
 
-All three are *compositions of built-in DataFrame ops* around one vectorized
+All of them are *compositions of built-in DataFrame ops* around one vectorized
 refine kernel (SURVEY.md §2.8): cover/explode → equi-join on cell keys
 (Catalyst picks broadcast-hash vs sort-merge; we force broadcast for small
 polygon sides per the north rule's 'adaptive broadcast') → exact NumPy
 refinement in an Arrow-batched UDF. No driver-side loops over rows; the only
 driver logic is plan construction.
 
+Grid kNN, hex kNN and the distance join share one ring-candidate core:
+``_grid_ring`` explodes each query to the grid cells of its Chebyshev ring
+(hex kNN explodes its k-ring in a UDF instead), and ``_topk`` re-ranks the
+candidates, checks completeness and re-solves the rest by brute force. Per
+index only the ring and the completeness bound differ.
+
 Scale notes (100 TB design point):
 - polygon covers are multi-level: each polygon picks the coarsest cell level
   whose cover fits ``max_cover_cells``, so a continent-sized polygon costs
   ~1k join keys instead of 10^8 level-13 cells; points join each level via
   pure-bit-arithmetic ancestor keys (no UDF, no extra shuffle).
-- kNN ring-expansion is Column-only (explode over a (2r+1)² delta array);
+- kNN ring-expansion is Column-only (two sequence-explodes per query);
   the guarantee check + brute-force fallback touches only unsatisfied
   queries (usually none), so the crossJoin never sees the big table.
 """
 
 from __future__ import annotations
+
+import math as _math
 
 import numpy as np
 import pandas as pd
@@ -26,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, BooleanType, LongType
 
 from geojson_spark.functions import cells as _cells
-from geojson_spark.functions.geometry import points_in_polygon
+from geojson_spark.functions.geometry import EARTH_RADIUS_KM, points_in_polygon
 from geojson_spark.functions.spark_funcs import (
     GRID_K,
     grid_cell,
@@ -35,10 +43,6 @@ from geojson_spark.functions.spark_funcs import (
     s2_cell_udf,
     s2_parent_col,
 )
-
-import math as _math
-
-from geojson_spark.functions.geometry import EARTH_RADIUS_KM
 
 # derived from the ONE shared radius constant (spark_funcs re-exports it
 # from geometry.py) — a hardcoded 111.19… literal would silently keep the
@@ -307,10 +311,21 @@ def pip_join(
             # length are positively correlated (big polygons have both),
             # so the product of means can undershoot by an order of
             # magnitude on a mostly-tiny + few-coastlines mix
-            probe = polygons.where(sampled).select(
-                F.avg(F.size(cover_expr)).alias("m"),
-                F.avg(bytes_expr).alias("pb"),
-            ).first()
+            def stats(df: DataFrame):
+                return df.select(
+                    F.count(F.lit(1)).alias("n"),
+                    F.avg(F.size(cover_expr)).alias("m"),
+                    F.avg(bytes_expr).alias("pb"),
+                ).first()
+
+            probe = stats(polygons.where(sampled))
+            if probe["n"] < min(n_polys, 32):
+                # a hash sample can come up (nearly) empty — ids that all
+                # hash off residue 0 — and an empty sample's null means
+                # would read as 0 bytes and approve the broadcast. Too few
+                # sampled rows → measure the whole side exactly (never
+                # reached when mod == 1: the sample IS the whole side)
+                probe = stats(polygons)
             mean_cover, mean_bytes = probe["m"], probe["pb"]
             est_rows = n_polys * (mean_cover or 1.0)
             # per exploded row: coords doubles (8 B each) + offsets/key/id
@@ -339,6 +354,67 @@ def pip_join(
     return refined.drop(*drop)
 
 
+def _grid_ring(queries: DataFrame, cols, q_lon: str, q_lat: str, cpd: int,
+               rx: int | Column, ry: int | Column) -> DataFrame:
+    """``cols`` of each query, one row per grid cell within Chebyshev
+    radius ``rx`` (lon) / ``ry`` (lat) of the query's cell, keyed
+    ``cell_id``. Radii are ints or per-query Columns (``sequence`` takes
+    Column bounds)."""
+    rx, ry = (r if isinstance(r, Column) else F.lit(r) for r in (rx, ry))
+    gx = F.floor((F.col(q_lon) + 180.0) * cpd).cast("bigint")
+    gy = F.floor((F.col(q_lat) + 90.0) * cpd).cast("bigint")
+    # two sequence-explodes instead of a (2r+1)^2 literal array: plan size
+    # stays O(1) in the ring radius (auto rings can reach r~20)
+    return (
+        queries.select(*cols, gx.alias("_gx"), gy.alias("_gy"),
+                       F.explode(F.sequence(-rx, rx)).alias("_dx"))
+        .select(*cols, "_gx", "_gy", "_dx", F.explode(F.sequence(-ry, ry)).alias("_dy"))
+        .select(*cols, ((F.col("_gx") + F.col("_dx")) * GRID_K
+                        + (F.col("_gy") + F.col("_dy"))).alias("cell_id"))
+    )
+
+
+def _topk(cand, queries, points, k, dist, bound, safe, out_cols, names) -> DataFrame:
+    """Top-``k`` of the ring candidates ``cand`` per query, by the
+    ``dist = (name, Column)`` metric with ties broken by point id (fully
+    deterministic), as ``out_cols``.
+
+    ``bound=None`` returns the ring answer as is. Otherwise a query's
+    answer is provably complete iff it has ≥ k candidates, its k-th
+    distance ≤ ``bound`` (the minimum possible distance to any point
+    outside the ring) and ``safe`` holds; the rest are re-solved by brute
+    force — an anti-joined, usually-empty residual crossJoined with
+    ``points``. ``names`` = (q_id, p_id, q_lon, q_lat, p_lon, p_lat)."""
+    from pyspark.sql.window import Window
+
+    dist_name, dist_col = dist
+    q_id, p_id, q_lon, q_lat, p_lon, p_lat = names
+    w = Window.partitionBy(q_id).orderBy(F.col(dist_name).asc(), F.col(p_id).asc())
+
+    def rank(df: DataFrame) -> DataFrame:
+        df = df.withColumn(dist_name, dist_col).withColumn("rn", F.row_number().over(w))
+        return df.where(F.col("rn") <= k)
+
+    topk = rank(cand)
+    if bound is None:
+        return topk.select(*out_cols)
+    # topk feeds three consumers (bound stats, the complete join, the
+    # residual anti-join) — eager localCheckpoint materializes it once AND
+    # lets the ContextCleaner reclaim the blocks when the DataFrame is
+    # GC'd (a .cache() here would leak storage across repeated calls)
+    topk = topk.localCheckpoint(eager=True)
+    ok = (
+        topk.groupBy(q_id, q_lon, q_lat)
+        .agg(F.count("*").alias("n_cand"), F.max(dist_name).alias("kth"))
+        .where((F.col("n_cand") >= k) & (F.col("kth") <= bound) & safe)
+        .select(q_id)
+    )
+    complete = topk.join(F.broadcast(ok), q_id)
+    residual = queries.join(F.broadcast(ok), q_id, "left_anti").select(q_id, q_lon, q_lat)
+    brute = rank(residual.crossJoin(points.select(p_id, p_lon, p_lat)))
+    return complete.select(*out_cols).unionByName(brute.select(*out_cols))
+
+
 def knn_join(
     queries: DataFrame,
     points: DataFrame,
@@ -358,9 +434,9 @@ def knn_join(
     """k nearest neighbors by haversine via grid ring expansion + re-rank.
 
     Phase 1: candidates = equi-join on all cells within Chebyshev ring
-    ``ring`` of the query cell (explode of a (2r+1)² literal delta array —
-    pure Column ops, whole-stage codegen). Window re-rank keeps the top k
-    (ties broken by point id → fully deterministic).
+    ``ring`` of the query cell (two ``sequence`` explodes — pure Column
+    ops, whole-stage codegen). Window re-rank keeps the top k (ties broken
+    by point id → fully deterministic).
 
     Phase 2 (``exact``): a query's result is provably complete iff its k-th
     distance ≤ the minimum possible distance to any point outside the ring.
@@ -374,8 +450,6 @@ def knn_join(
     equi-join and a crossJoin over the whole point table. The density probe
     is one cheap count() (parquet row-group metadata).
     """
-    from pyspark.sql.window import Window
-
     if ring == "auto":
         n_points = points.count()
         total_cells = (360 * cpd) * (180 * cpd)
@@ -384,81 +458,22 @@ def knn_join(
         ring = int(np.ceil((np.sqrt(4.0 * k / density) - 1.0) / 2.0))
         ring = max(1, min(ring, 24))
 
-    q = queries.select(
-        q_id,
-        q_lon,
-        q_lat,
-        F.floor((F.col(q_lon) + 180.0) * cpd).cast("bigint").alias("qgx"),
-        F.floor((F.col(q_lat) + 90.0) * cpd).cast("bigint").alias("qgy"),
-    )
-    # two sequence-explodes instead of a (2r+1)^2 literal array: plan size
-    # stays O(1) in the ring radius (auto rings can reach r~20)
-    ring_seq = F.sequence(F.lit(-ring), F.lit(ring))
-    q_exp = (
-        q.select(q_id, q_lon, q_lat, "qgx", "qgy", F.explode(ring_seq).alias("dx"))
-        .select(q_id, q_lon, q_lat, "qgx", "qgy", "dx", F.explode(ring_seq).alias("dy"))
-        .select(
-            q_id,
-            q_lon,
-            q_lat,
-            "qgx",
-            "qgy",
-            ((F.col("qgx") + F.col("dx")) * GRID_K + (F.col("qgy") + F.col("dy"))).alias(
-                "cell_id"
-            ),
-        )
-    )
-    p = points.select(
-        p_id, p_lon, p_lat, grid_cell(F.col(p_lon), F.col(p_lat), cpd).alias("cell_id")
-    )
-    if metric == "haversine":
-        def dist_expr():
-            return haversine_km(F.col(q_lon), F.col(q_lat), F.col(p_lon), F.col(p_lat))
-    elif metric == "euclidean_deg2":
-        # squared equirectangular-degree distance: only IEEE +/* — bit-exact
-        # reproducible in any SQL engine (used by the DuckDB-oracle query)
-        def dist_expr():
-            dx = F.col(p_lon) - F.col(q_lon)
-            dy = F.col(p_lat) - F.col(q_lat)
-            return dx * dx + dy * dy
-    else:
-        raise ValueError(f"unknown metric {metric!r}")
-
-    cand = q_exp.join(p, "cell_id").withColumn("dist_km", dist_expr())
-    w = Window.partitionBy(q_id).orderBy(F.col("dist_km").asc(), F.col(p_id).asc())
-    ranked = cand.withColumn("rn", F.row_number().over(w))
-    topk = ranked.where(F.col("rn") <= k)
-
-    if not exact:
-        return topk.select(q_id, q_lon, q_lat, p_id, p_lon, p_lat, "dist_km", "rn")
-
-    # topk feeds three consumers (bound stats, the complete join, the
-    # residual anti-join) — eager localCheckpoint materializes it once AND
-    # lets the ContextCleaner reclaim the blocks when the DataFrame is
-    # GC'd (a .cache() here would leak storage across repeated calls)
-    topk = topk.localCheckpoint(eager=True)
-
-    # completeness bound: a point outside Chebyshev ring r differs by ≥ r
-    # whole cells (r/cpd degrees) in lon or lat. The great-circle distance
-    # for an angular separation θ is 2R·sin(θ/2) — the CHORD-derived form,
-    # NOT the arc length R·θ: for lat-separation d, dist = 2R·sin(d/2); for
-    # lon-separation d at |φ| ≤ lat_worst, dist = 2R·asin(√h) ≥ 2R·√h ≥
-    # 2R·cos(lat_worst)·sin(d/2). The previous linear bound
-    # 0.999·r·cell_deg·KM_PER_DEG overstated the true minimum once the
-    # ring spanned more than ~8.9° (sin(x)/x < 0.999), so wide rings could
-    # wrongly mark queries complete; 2R·sin(θ/2)·cos is exact-direction for
-    # ANY θ (0.999 retained purely as float-rounding slack).
     cell_deg = 1.0 / cpd
-    stats = topk.groupBy(q_id, q_lon, q_lat).agg(
-        F.count("*").alias("n_cand"), F.max("dist_km").alias("kth_dist")
-    )
     if metric == "haversine":
-        import math
-
-        from geojson_spark.functions.geometry import EARTH_RADIUS_KM
-
+        dist = haversine_km(F.col(q_lon), F.col(q_lat), F.col(p_lon), F.col(p_lat))
+        # completeness bound: a point outside Chebyshev ring r differs by ≥
+        # r whole cells (r/cpd degrees) in lon or lat. The great-circle
+        # distance for an angular separation θ is 2R·sin(θ/2) — the
+        # CHORD-derived form, NOT the arc length R·θ: for lat-separation d,
+        # dist = 2R·sin(d/2); for lon-separation d at |φ| ≤ lat_worst,
+        # dist = 2R·asin(√h) ≥ 2R·√h ≥ 2R·cos(lat_worst)·sin(d/2). The
+        # previous linear bound 0.999·r·cell_deg·KM_PER_DEG overstated the
+        # true minimum once the ring spanned more than ~8.9° (sin(x)/x <
+        # 0.999), so wide rings could wrongly mark queries complete;
+        # 2R·sin(θ/2)·cos is exact-direction for ANY θ (0.999 retained
+        # purely as float-rounding slack).
         lat_worst = F.least(F.lit(89.9), F.abs(F.col(q_lat)) + F.lit((ring + 1) * cell_deg))
-        half_sin = math.sin(math.radians(min(ring * cell_deg, 180.0)) / 2.0)
+        half_sin = _math.sin(_math.radians(min(ring * cell_deg, 180.0)) / 2.0)
         bound = F.lit(0.999 * 2.0 * EARTH_RADIUS_KM * half_sin) * F.least(
             F.lit(1.0), F.cos(F.radians(lat_worst))
         )
@@ -468,28 +483,30 @@ def knn_join(
         # thousands of cells away in gx) — such queries are never marked
         # complete and fall through to the brute-force residual
         margin = (ring + 1) * cell_deg
-        wrap_safe = (F.abs(F.col(q_lon)) <= 180.0 - margin) & (
+        safe = (F.abs(F.col(q_lon)) <= 180.0 - margin) & (
             F.abs(F.col(q_lat)) <= 90.0 - margin
         )
-    else:  # euclidean_deg2: dist² ≥ (r·cell_deg)²; the metric itself is
-        # planar-degree, so no wraparound concern
+    elif metric == "euclidean_deg2":
+        # squared equirectangular-degree distance: only IEEE +/* — bit-exact
+        # reproducible in any SQL engine (used by the DuckDB-oracle query)
+        dx = F.col(p_lon) - F.col(q_lon)
+        dy = F.col(p_lat) - F.col(q_lat)
+        dist = dx * dx + dy * dy
+        # dist² ≥ (r·cell_deg)²; the metric itself is planar-degree, so no
+        # wraparound concern
         bound = F.lit((ring * cell_deg) ** 2)
-        wrap_safe = F.lit(True)
-    ok = stats.where(
-        (F.col("n_cand") >= k) & (F.col("kth_dist") <= bound) & wrap_safe
-    ).select(q_id)
-    complete = topk.join(F.broadcast(ok), q_id)
+        safe = F.lit(True)
+    else:
+        raise ValueError(f"unknown metric {metric!r}")
 
-    residual_q = queries.join(F.broadcast(ok), q_id, "left_anti").select(q_id, q_lon, q_lat)
-    brute = (
-        residual_q.crossJoin(points.select(p_id, p_lon, p_lat))
-        .withColumn("dist_km", dist_expr())
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
+    q = _grid_ring(queries, (q_id, q_lon, q_lat), q_lon, q_lat, cpd, ring, ring)
+    p = points.select(
+        p_id, p_lon, p_lat, grid_cell(F.col(p_lon), F.col(p_lat), cpd).alias("cell_id")
     )
-    return complete.select(q_id, q_lon, q_lat, p_id, p_lon, p_lat, "dist_km", "rn").unionByName(
-        brute.select(q_id, q_lon, q_lat, p_id, p_lon, p_lat, "dist_km", "rn")
-    )
+    names = (q_id, p_id, q_lon, q_lat, p_lon, p_lat)
+    out_cols = [q_id, q_lon, q_lat, p_id, p_lon, p_lat, "dist_km", "rn"]
+    return _topk(q.join(p, "cell_id"), queries, points, k, ("dist_km", dist),
+                 bound if exact else None, safe, out_cols, names)
 
 
 def knn_join_hex(
@@ -513,17 +530,15 @@ def knn_join_hex(
     Queries explode to their ring-``ring`` hex neighborhood (NumPy k_ring in
     one Arrow batch), equi-join points on hex cell, window re-rank. With
     ``exact``, completeness uses the lattice bound: hexes at hex-distance
-    > r have center separation ≥ r·√3·size, points deviate ≤ size from
-    centers, so any point outside the ring is ≥ (r√3−2)·size away; failing
-    queries fall back to brute force.
+    > r have center separation ≥ 1.5·(r+1)·size along the lattice
+    diagonal, points deviate ≤ size from centers; failing queries fall
+    back to brute force.
 
     ``res="auto"`` picks the finest resolution whose ring-``ring``
     neighborhood is expected to hold ~4k points at the measured global
     density — a fixed fine res on sparse data sends every query down the
     brute-force fallback (same rationale as knn_join's auto ring).
     """
-    from pyspark.sql.window import Window
-
     from geojson_spark.functions.cells import _hex_size, hex_k_ring
     from geojson_spark.functions.spark_funcs import hex_cell_udf
 
@@ -547,34 +562,16 @@ def knn_join_hex(
     p = points.select(p_id, p_lon, p_lat, hex_cell_udf(res)(F.col(p_lon), F.col(p_lat)).alias("hex_id"))
     dx = F.col(p_lon) - F.col(q_lon)
     dy = F.col(p_lat) - F.col(q_lat)
-    cand = q.join(p, "hex_id").withColumn("dist2", dx * dx + dy * dy)
-    w = Window.partitionBy(q_id).orderBy(F.col("dist2").asc(), F.col(p_id).asc())
-    topk = cand.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k)
-    if not exact:
-        return topk.select(q_id, p_id, "dist2", "rn")
-    topk = topk.localCheckpoint(eager=True)  # GC-reclaimable, unlike cache()
-    size = _hex_size(res)
     # a point outside hex-ring r has hex-distance ≥ r+1; center separation
     # per unit hex distance is MINIMIZED along the lattice diagonal at
     # 1.5·size (the √3·size axis value is the maximum, not the minimum, so
     # √3·r − 2 over-promises for r ≥ 7); points deviate ≤ size from their
     # centers
-    bound2 = max(0.0, (1.5 * (ring + 1) - 2.0) * size) ** 2
-    stats = topk.groupBy(q_id, q_lon, q_lat).agg(
-        F.count("*").alias("n_cand"), F.max("dist2").alias("kth")
-    )
-    ok = stats.where((F.col("n_cand") >= k) & (F.col("kth") <= F.lit(bound2))).select(q_id)
-    complete = topk.join(F.broadcast(ok), q_id)
-    residual = queries.join(F.broadcast(ok), q_id, "left_anti").select(q_id, q_lon, q_lat)
-    brute = (
-        residual.crossJoin(points.select(p_id, p_lon, p_lat))
-        .withColumn("dist2", dx * dx + dy * dy)
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-    )
-    return complete.select(q_id, p_id, "dist2", "rn").unionByName(
-        brute.select(q_id, p_id, "dist2", "rn")
-    )
+    bound2 = max(0.0, (1.5 * (ring + 1) - 2.0) * _hex_size(res)) ** 2
+    names = (q_id, p_id, q_lon, q_lat, p_lon, p_lat)
+    return _topk(q.join(p, "hex_id"), queries, points, k, ("dist2", dx * dx + dy * dy),
+                 F.lit(bound2) if exact else None, F.lit(True),
+                 [q_id, p_id, "dist2", "rn"], names)
 
 
 def distance_join(
@@ -615,16 +612,6 @@ def distance_join(
     Scale: one equi-join shuffle; fan-out = ring² cells per query; AQE
     skew-join splits dense cells. No UDF anywhere.
     """
-    p = points.select(
-        p_id, p_lon, p_lat, grid_cell(F.col(p_lon), F.col(p_lat), cpd).alias("cell_id")
-    )
-    q = queries.select(
-        q_id,
-        q_lon,
-        q_lat,
-        F.floor((F.col(q_lon) + 180.0) * cpd).cast("bigint").alias("qgx"),
-        F.floor((F.col(q_lat) + 90.0) * cpd).cast("bigint").alias("qgy"),
-    )
     dxc = F.col(p_lon) - F.col(q_lon)
     dyc = F.col(p_lat) - F.col(q_lat)
     if metric == "euclidean_deg2":
@@ -656,24 +643,19 @@ def distance_join(
     else:
         raise ValueError(f"unknown metric {metric!r}")
 
-    ringed = q.where(safe).select(
-        q_id, q_lon, q_lat, "qgx", "qgy", F.explode(F.sequence(-rx, rx)).alias("dx")
-    ).select(q_id, q_lon, q_lat, "qgx", "qgy", "dx", F.explode(F.sequence(-ry, ry)).alias("dy"))
-    cells = ringed.select(
-        q_id,
-        q_lon,
-        q_lat,
-        ((F.col("qgx") + F.col("dx")) * GRID_K + (F.col("qgy") + F.col("dy"))).alias("cell_id"),
+    q_cols = (q_id, q_lon, q_lat)
+    cells = _grid_ring(queries.where(safe), q_cols, q_lon, q_lat, cpd, rx, ry)
+    p = points.select(
+        p_id, p_lon, p_lat, grid_cell(F.col(p_lon), F.col(p_lat), cpd).alias("cell_id")
     )
-    near = cells.join(p, "cell_id").where(pred)
-
     out_cols = [q_id, q_lon, q_lat, p_id, p_lon, p_lat]
+    near = cells.join(p, "cell_id").where(pred)
     result = near.select(*out_cols)
     # unsafe queries (wrap hazard or ring > max_ring) re-solve by brute
     # force; when `safe` is literally true Catalyst's PropagateEmptyRelation
     # prunes the entire crossJoin branch, so the common case pays nothing
-    residual = q.where(~safe).select(q_id, q_lon, q_lat)
-    brute = residual.crossJoin(p.drop("cell_id")).where(pred).select(*out_cols)
+    residual = queries.where(~safe).select(*q_cols)
+    brute = residual.crossJoin(points.select(p_id, p_lon, p_lat)).where(pred).select(*out_cols)
     return result.unionByName(brute)
 
 

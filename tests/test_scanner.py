@@ -67,10 +67,15 @@ def test_empty_features():
     assert scan('{"type":"FeatureCollection","features":[]}') == []
 
 
-def test_large_real_document():
-    with open("/root/reference/tests/fixtures/countries.geojson", encoding="utf-8") as fh:
+def test_large_real_document(tmp_path, countries_geojson):
+    path = tmp_path / "countries.geojson"
+    path.write_text(countries_geojson, encoding="utf-8")
+    with open(path, encoding="utf-8") as fh:
         feats = list(iter_feature_strings(fh, chunk_size=8192))
     assert len(feats) == 180
+    # features straddle the 8192-character read chunks of the scan
+    starts = [countries_geojson.index(f) for f in feats]
+    assert any(s // 8192 != (s + len(f)) // 8192 for s, f in zip(starts, feats))
     for f in feats[:5] + feats[-5:]:
         obj = json.loads(f)
         assert obj["type"] == "Feature"

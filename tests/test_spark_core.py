@@ -194,6 +194,34 @@ def test_pip_broadcast_bounded_by_bytes(spark, monkeypatch):
     assert [r.poly_id for r in joined.collect()] == ["fat0"]
 
 
+def test_pip_broadcast_probe_empty_hash_sample(spark, monkeypatch):
+    # 4096 polygons → hash-sample modulus 2; every poly_id hashes to
+    # residue 1, so the residue-0 sample is empty. The probe must then
+    # measure the side exactly instead of reading the empty sample as
+    # 0 bytes and approving the broadcast.
+    from geojson_spark.operators import joins as joins_mod
+
+    ids = spark.range(12_000).select(F.concat(F.lit("p"), F.col("id").cast("string")).alias("i"))
+    ids = [r.i for r in ids.where(F.pmod(F.xxhash64("i"), F.lit(2)) == 1).limit(4096).collect()]
+    assert len(ids) == 4096
+    polys = spark.createDataFrame(
+        pd.DataFrame([_square_poly(pid, (j % 64) * 2.0 - 64.0, (j // 64) * 2.0 - 64.0, 0.5)
+                      for j, pid in enumerate(ids)])
+    )
+    pts = spark.createDataFrame(pd.DataFrame({"pt_id": [1], "lon": [-63.75], "lat": [-63.75]}))
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    # ~4096 polygons × ~25 cover cells × 144 B ≈ 15 MB exploded
+    monkeypatch.setattr(joins_mod, "PIP_BROADCAST_MAX_BYTES", 1 << 20)
+    try:
+        joined = pip_join(pts, polys)
+        plan = joined._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastExchange" not in plan
+        assert [r.poly_id for r in joined.collect()] == [ids[0]]
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
 @pytest.mark.parametrize("metric", ["haversine", "euclidean_deg2"])
 def test_knn_exact_vs_bruteforce(spark, images, metric):
     queries = spark.createDataFrame(
@@ -305,11 +333,10 @@ def test_salted_agg_equals_plain(spark, images):
     assert plain == salted
 
 
-def test_geojson_write_read_roundtrip(spark, tmp_path):
-    src = open("/root/reference/tests/fixtures/countries.geojson", encoding="utf-8").read()
+def test_geojson_write_read_roundtrip(spark, tmp_path, countries_geojson):
     p_in = tmp_path / "in"
     p_in.mkdir()
-    (p_in / "countries.geojson").write_text(src)
+    (p_in / "countries.geojson").write_text(countries_geojson, encoding="utf-8")
     df = read_geojson(spark, str(p_in))
     assert df.count() == 180
     # names survive in properties JSON
