@@ -217,19 +217,21 @@ def tile_pixels(tiles: DataFrame) -> DataFrame:
             out = []
             for (w, h, fmt), grp in pdf.groupby(["w", "h", "fmt"], sort=False):
                 w, h = int(w), int(h)
-                bufs = [bytes(b) for b in grp["bytes"]]
-                n = len(bufs)
                 if fmt in ("raw", "q8"):
-                    flat = np.frombuffer(b"".join(bufs), dtype=np.uint8)
+                    pix = [np.frombuffer(bytes(b), dtype=np.uint8) for b in grp["bytes"]]
                 elif fmt == "rle":
-                    flat = np.concatenate([rle_decode(b) for b in bufs])
+                    pix = [rle_decode(bytes(b)) for b in grp["bytes"]]
                 else:
                     raise ValueError(f"unknown fmt {fmt!r}")
-                if flat.size != n * w * h * 3:
-                    raise ValueError(
-                        f"decoded {flat.size} bytes, expected {n * w * h * 3}"
-                    )
-                imgs = flat.reshape(n, h, w, 3)[:, :, :, 0]
+                # per tile, not per stack: a long and a short buffer in one
+                # group would otherwise sum to the right total and decode
+                # into shifted pixels
+                for tid, p in zip(grp["tile_id"], pix):
+                    if p.size != w * h * 3:
+                        raise ValueError(
+                            f"tile {tid}: decoded {p.size} bytes, expected {w * h * 3}"
+                        )
+                imgs = np.concatenate(pix).reshape(len(pix), h, w, 3)[:, :, :, 0]
                 ti, py, px = np.nonzero(imgs)
                 if len(px):
                     out.append(

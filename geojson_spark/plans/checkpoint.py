@@ -305,6 +305,7 @@ def resumable_apply(
         # otherwise a resume that spent sibling_wait_s on its own buckets
         # would time out the moment it finished working.
         deadline: float | None = None
+        n_left = n_buckets
         while True:
             remaining = [
                 b for b in range(n_buckets)
@@ -312,6 +313,9 @@ def resumable_apply(
             ]
             if not remaining:
                 break
+            if len(remaining) < n_left:
+                deadline = None  # a sibling committed: it is alive and progressing
+            n_left = len(remaining)
             claimed_any = False
             for b in remaining:
                 if fail_after is not None and processed >= fail_after:

@@ -8,21 +8,14 @@ import pytest
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
+    from geojson_spark.session import get_spark
 
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("geojson-spark-tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "4g")
-        .getOrCreate()
+    s = get_spark(
+        master="local[4]",
+        app_name="geojson-spark-tests",
+        shuffle_partitions=8,
+        extra_conf={"spark.driver.memory": "4g"},
     )
-    from geojson_spark.session import attach_package
-
-    attach_package(s)
     yield s
     s.stop()
 

@@ -301,3 +301,24 @@ def test_rle_tiles_roundtrip_through_stored_bytes(spark):
     assert r.phash == average_phash(dec, 4, 4)
     idx1 = np.arange(16, dtype=np.int64).reshape(4, 4) + 1
     assert r.checksum == int((idx1 * gray.astype(np.int64)).sum())
+
+
+@pytest.mark.parametrize("fmt", ["rle", "raw"])
+def test_tile_pixels_rejects_length_errors_that_cancel(spark, fmt):
+    """Two corrupt tiles in one (w, h, fmt) group, one a pixel too long and
+    one a pixel too short: the stack's total length is right, so only a
+    per-tile check sees that every pixel after the first tile is shifted."""
+    from geojson_spark.operators.rasterize import tile_pixels
+    from geojson_spark.sources.images import rle_encode
+
+    w = h = 4
+    long_px = np.full((w * h + 1) * 3, 7, dtype=np.uint8)
+    short_px = np.full((w * h - 1) * 3, 9, dtype=np.uint8)
+    enc = rle_encode if fmt == "rle" else (lambda px: px.tobytes())
+    tiles = spark.createDataFrame(
+        [(1, bytearray(enc(long_px)), w, h, fmt),
+         (2, bytearray(enc(short_px)), w, h, fmt)],
+        "tile_id bigint, bytes binary, w int, h int, fmt string",
+    ).coalesce(1)
+    with pytest.raises(Exception, match=r"tile 1: decoded 51 bytes, expected 48"):
+        tile_pixels(tiles).collect()

@@ -1,8 +1,9 @@
 """Round-5 regression tests for the ADVICE findings + VERDICT items.
 
 1. resumable_apply must never return a partial result when a concurrent
-   resume holds claims: it waits for live siblings' commits (or raises on
-   timeout) and reclaims buckets whose owner died.
+   resume holds claims: it waits for live siblings' commits (each commit
+   restarts the wait budget; it raises once a sibling stalls for the whole
+   budget) and reclaims buckets whose owner died.
 2. stateful session fold: a below-range straggler within gap of the first
    retained event bridges into that session — one session, not two.
 3. property-key JSON paths: keys Spark's JsonPathParser can't express
@@ -92,6 +93,45 @@ def test_resumable_apply_waits_for_sibling_commit(spark, tmp_path):
             stage="s", bucket_col="k", n_buckets=n_buckets, sibling_wait_s=30.0,
         )
         assert out.count() == 40  # nothing missing
+        assert sorted(r.k for r in out.collect()) == list(range(40))
+    finally:
+        t.join()
+
+
+def test_resumable_apply_waits_while_sibling_keeps_committing(spark, tmp_path):
+    """A live sibling that commits one bucket every second for longer than
+    ``sibling_wait_s`` in total is making progress: each of its commits
+    restarts the wait budget, so there is no TimeoutError and the returned
+    frame is the full output."""
+    from geojson_spark.plans.checkpoint import CheckpointTable, resumable_apply
+
+    ckpt = CheckpointTable(str(tmp_path / "c"))
+    df = _mk_input(spark)
+    n_buckets = 4
+    hashed = df.withColumn("_b", F.pmod(F.xxhash64(F.col("k")), F.lit(n_buckets)))
+    staged = {}
+    for b in range(n_buckets):
+        part = hashed.where(F.col("_b") == b).drop("_b")
+        staged[b] = (str(tmp_path / f"sibling_{b}"), part.count())
+        part.write.mode("overwrite").parquet(staged[b][0])
+        assert ckpt.claim_bucket(b, stage="s", owner="sibling")
+
+    def sibling_commits():
+        for b in range(n_buckets):  # 4 s of commits against a 2 s budget
+            time.sleep(1.0)
+            os.replace(staged[b][0], ckpt.bucket_data_path(b))
+            ckpt.commit_bucket(
+                b, {"stage": "s", "bucket": b, "rows_out": staged[b][1]},
+                meta={"stage": "s", "n_buckets": n_buckets},
+            )
+
+    t = threading.Thread(target=sibling_commits)
+    t.start()
+    try:
+        out = resumable_apply(
+            spark, df, lambda part: part, ckpt,
+            stage="s", bucket_col="k", n_buckets=n_buckets, sibling_wait_s=2.0,
+        )
         assert sorted(r.k for r in out.collect()) == list(range(40))
     finally:
         t.join()
