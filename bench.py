@@ -1,22 +1,32 @@
-"""Benchmark harness.
+"""Benchmark harness: the one timing loop and the one quiet-host gate.
 
-Prints ONE JSON line:
-  {"metric": ..., "value": <total headline sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ...,
-   "images_tiled_per_sec@local[8]": ..., "images_tiled_per_sec@local[32]": ...,
-   "scaling_efficiency_8_to_32": ...}
+    python bench.py                          # headline + scaling
+    python bench.py --ab q1 [q2 ...] --reps N  # per-query A/B
+
+The last stdout line is ONE compact JSON summary (< 2000 bytes):
+  {"metric", "value": <total headline sec>, "unit": "sec", "sf", "n_images",
+   "queries": {name: min sec}, "host_probe_before_sec", "host_probe_after_sec",
+   "images_tiled_per_sec@local[lo]", "images_tiled_per_sec@local[hi]",
+   "scaling_efficiency_<lo>_to_<hi>", "host_ceiling_efficiency", "gate"}
+The full record (per-rep walls and totals, gate polls, pre/post-pair
+ceilings, lineage partitions) goes to BENCH/bench_latest.json.
 
 Two parts:
 1. headline queries from __spark_entry__ at $SPARK_GRAFT_SF_DIR
    (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 2. the north-star metric (BASELINE.json): images-tiled/sec for the
-   generate→S2-assign→PIP-join→salted-agg pipeline, measured at local[8]
-   and local[32] on the SAME pre-generated parquet input; scaling
-   efficiency = (thr32/thr8)/4 (in-sandbox stand-in for N vs 4N executors).
+   verify→S2-assign→PIP-join→salted-agg pipeline, measured at the pinned
+   core pair $SPARK_GRAFT_SCALE_PAIR (default 2,8) on the SAME
+   pre-generated parquet input; scaling efficiency = (thr_hi/thr_lo) /
+   (hi/lo) (in-sandbox stand-in for N vs 4N executors).
+
+``--ab`` runs part 1's loop over the named queries only; its rep 0 is
+the cold rep and the per-query min excludes it.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import shutil
@@ -92,7 +102,14 @@ def _new_session(cpus: int, tag: str):
     return s
 
 
-def run_headline(sf_dir: str, cpus: int) -> dict[str, float]:
+def _probe() -> float:
+    t0 = time.time()
+    _calib_task(0)
+    return round(time.time() - t0, 3)
+
+
+def run_headline(sf_dir: str, cpus: int, names: list[str] = HEADLINE,
+                 reps: int | None = None, skip_cold: bool = False) -> dict:
     """Per-query seconds = MIN over interleaved full-list reps.
 
     One rep per query let a single throttle spike on this shared host
@@ -101,26 +118,21 @@ def run_headline(sf_dir: str, cpus: int) -> dict[str, float]:
     then runs again — so one bad weather window cannot hit the same
     query twice; the min is the closest observable to the engine's own
     cost. Single-core NumPy probes bracket every rep boundary so the
-    record carries its own weather normalizer."""
+    record carries its own weather normalizer. ``skip_cold`` leaves rep 0
+    (plan compilation, shuffle files, page cache) out of the min."""
     import __spark_entry__ as E
 
     spark = _new_session(cpus, "headline")
     _warm_python_workers(spark, cpus)  # long-running executors are warm
     qs = E.queries()
-    reps = int(os.environ.get("SPARK_GRAFT_HEADLINE_REPS", "2"))
-    times: dict[str, float] = {}
-    probes: list[float] = []
+    if reps is None:
+        reps = int(os.environ.get("SPARK_GRAFT_HEADLINE_REPS", "2"))
+    walls: dict[str, list[float]] = {name: [] for name in names}
+    probes = [_probe()]
     rep_totals: list[float] = []
-
-    def probe():
-        t0 = time.time()
-        _calib_task(0)
-        probes.append(round(time.time() - t0, 3))
-
-    probe()
     for rep in range(reps):
         rep_t0 = time.time()
-        for name in HEADLINE:
+        for name in names:
             t0 = time.time()
             df = qs[name](spark, sf_dir)
             # noop sink, NOT count(): count() prunes every column, so a
@@ -129,18 +141,19 @@ def run_headline(sf_dir: str, cpus: int) -> dict[str, float]:
             # and record ~0s — the exact CLAUDE.md profiling trap. The
             # noop write materializes every output column JVM-side.
             df.write.format("noop").mode("overwrite").save()
-            dt = round(time.time() - t0, 3)
-            times[name] = min(times.get(name, dt), dt)
-            print(f"  [rep {rep}] {name}: {dt}s", file=sys.stderr)
+            walls[name].append(round(time.time() - t0, 3))
+            print(f"  [rep {rep}] {name}: {walls[name][-1]}s", file=sys.stderr)
         rep_totals.append(round(time.time() - rep_t0, 3))
-        probe()
-    times["host_probe_before_sec"] = probes[0]
-    times["host_probe_after_sec"] = probes[-1]
-    times["host_probe_per_rep"] = probes
-    times["headline_rep_totals"] = rep_totals
-    times["headline_reps"] = reps
+        probes.append(_probe())
     spark.stop()
-    return times
+    first = 1 if skip_cold and reps > 1 else 0
+    return {
+        "queries": {name: min(w[first:]) for name, w in walls.items()},
+        "query_walls": walls,
+        "host_probe_per_rep": probes,
+        "headline_rep_totals": rep_totals,
+        "headline_reps": reps,
+    }
 
 
 def tiling_job(spark, images_path: str, ckpt_dir: str | None = None) -> int:
@@ -319,32 +332,30 @@ def _wait_for_quiet_host(max_wait_s: float, ceiling_pair: tuple[int, int] | None
     scale p_lo→p_hi at ≥ the gate efficiency (default 0.85) right now —
     a quiet single core does not imply multi-core headroom on this
     hypervisor (the r5 first attempt: probe 0.2 s but host ceiling 0.43,
-    so no engine number could have reached 0.8)."""
+    so no engine number could have reached 0.8). Healthy windows are rare
+    and short (one 108-minute poll saw none), so every poll is recorded."""
     healthy = float(os.environ.get("SPARK_GRAFT_HEALTHY_PROBE_S", "0.17"))
     factor = float(os.environ.get("SPARK_GRAFT_QUIET_FACTOR", "1.5"))
     min_ceiling = float(os.environ.get("SPARK_GRAFT_GATE_CEILING", "0.85"))
     t0 = time.time()
-    waited = 0.0
+    polls: list[dict] = []
     while True:
-        p0 = time.time()
-        _calib_task(0)
-        probe = time.time() - p0
+        start = round(time.time() - t0, 1)
+        probe = _probe()
+        quiet = probe <= healthy * factor
         ceiling = None
-        if probe <= healthy * factor:
-            if ceiling_pair is None:
-                return {"probe": round(probe, 3), "waited_s": round(waited, 1), "met": True}
+        if quiet and ceiling_pair is not None:
             ceiling = host_ceiling(*ceiling_pair, n_tasks=16)["host_ceiling_efficiency"]
-            if ceiling >= min_ceiling:
-                return {"probe": round(probe, 3), "ceiling": ceiling,
-                        "waited_s": round(waited, 1), "met": True}
+        met = quiet and (ceiling_pair is None or ceiling >= min_ceiling)
+        polls.append({"t": start, "probe": probe, "ceiling": ceiling})
         waited = time.time() - t0
-        if waited >= max_wait_s:
-            return {"probe": round(probe, 3), "ceiling": ceiling,
-                    "waited_s": round(waited, 1), "met": False}
+        if met or waited >= max_wait_s:
+            return {"probe": probe, "ceiling": ceiling, "met": met, "polls": polls,
+                    "waited_s": start if met else round(waited, 1)}
         time.sleep(min(15.0, max(1.0, max_wait_s - waited)))
 
 
-def run_scaling(n_images: int) -> dict[str, float]:
+def run_scaling(n_images: int, images_path: str | None = None) -> dict:
     """North-rule scaling evidence: the same tiling job at N and 4N cores.
 
     Default pair is (2, 8): raw-multiprocessing calibration shows this
@@ -352,101 +363,57 @@ def run_scaling(n_images: int) -> dict[str, float]:
     NumPy throughput (8→32 procs gives 1.5×, not 4× — hypervisor
     throttling), so 2→8 is the largest honest 4× the hardware supports.
     Override with SPARK_GRAFT_SCALE_PAIR=8,32 to measure the saturated pair.
+
+    The image table is generated once (or read from ``images_path``),
+    then the quiet-host gate polls across the whole
+    SPARK_GRAFT_SCALE_BUDGET_S and exactly one pinned pair is measured:
+    the first window whose gate is met, else one pair labelled
+    ``"gate": "fallback"`` when the budget runs out. Worst-case wall:
+    budget + one pair + probes.
     """
     from geojson_spark.sources.images import generate_images
 
     pair = os.environ.get("SPARK_GRAFT_SCALE_PAIR", "2,8")
     p_lo, p_hi = (int(v) for v in pair.split(","))
+    budget_s = float(os.environ.get("SPARK_GRAFT_SCALE_BUDGET_S", "560"))
 
     tmp = tempfile.mkdtemp(prefix="bench_images_")
-    images_path = os.path.join(tmp, "images")
-    out: dict[str, float] = {}
+    out: dict = {}
     try:
-        gen_cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-        spark = _new_session(gen_cpus, "gen")
-        t0 = time.time()
-        generate_images(spark, n_images, skew=True, partitions=gen_cpus).write.mode(
-            "overwrite"
-        ).parquet(images_path)
-        out["generate_sec"] = round(time.time() - t0, 2)
-        spark.stop()
+        if images_path is None:
+            images_path = os.path.join(tmp, "images")
+            gen_cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+            spark = _new_session(gen_cpus, "gen")
+            t0 = time.time()
+            generate_images(spark, n_images, skew=True, partitions=gen_cpus).write.mode(
+                "overwrite"
+            ).parquet(images_path)
+            out["generate_sec"] = round(time.time() - t0, 2)
+            spark.stop()
 
-        # Two measurement hazards on this host, both handled explicitly:
-        # 1. Unpinned local[N] is NOT an N-core cluster — the JVM's GC /
-        #    shuffle / Arrow threads soak extra cores, flattering the small
-        #    level and deflating efficiency. Each measurement runs in a
-        #    SUBPROCESS pinned (sched_setaffinity before exec, inherited by
-        #    its fresh JVM and Python workers) to exactly N CPUs, making
-        #    the "N vs 4N executors" emulation exact.
-        # 2. Absolute throughput swings ~2x over minutes (shared tenancy):
-        #    interleave FULL PAIRS of both levels, keep going until the wall
-        #    budget is spent (so one throttled window can't define the
-        #    record), and take the best PAIRED rep — both levels of one rep
-        #    run back-to-back in the same weather window, where min-of-each
-        #    across reps could pair a throttled window with a healthy one.
-        #    The level order alternates per rep ((lo,hi),(hi,lo),…) so a
-        #    monotonic host drift can't bias every rep the same way, and a
-        #    pure-NumPy host-ceiling probe runs adjacent to each rep so the
-        #    chosen rep carries its own window's ceiling.
-        max_reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "6"))
-        budget_s = float(os.environ.get("SPARK_GRAFT_SCALE_BUDGET_S", "560"))
-        walls: list[dict[int, float]] = []
-        lineages: list[dict[int, int]] = []
-        probes: list[dict[str, float]] = []
-        gates: list[dict] = []
-        t_scale0 = time.time()
-        for rep in range(max_reps):
-            # rep 1 always runs; later reps only start within the budget so a
-            # slow host can't push the whole bench past a harness timeout
-            if rep > 0 and time.time() - t_scale0 > budget_s:
-                break
-            # quiet-host gate: don't START a paired measurement inside a
-            # throttle window — wait (bounded by the remaining budget, and
-            # by half the budget before the mandatory first rep) for the
-            # probe to return to ~healthy. A gate timeout still measures.
-            gate_budget = (
-                budget_s / 2 if rep == 0
-                else max(0.0, budget_s - (time.time() - t_scale0))
-            )
-            gates.append(_wait_for_quiet_host(gate_budget, ceiling_pair=(p_lo, p_hi)))
-            order = (p_lo, p_hi) if rep % 2 == 0 else (p_hi, p_lo)
-            w: dict[int, float] = {}
-            lin: dict[int, int] = {}
-            for p in order:
-                ckpt_dir = os.path.join(tmp, f"ckpt{p}_{rep}")
-                r = _scale_measurement(p, images_path, ckpt_dir, n_images)
-                w[p] = r["wall"]
-                lin[p] = r["lineage_partitions"]
-            walls.append(w)
-            lineages.append(lin)
-            probes.append(host_ceiling(p_lo, p_hi))
-        ceilings = [p["host_ceiling_efficiency"] for p in probes]
-        ratio = p_hi / p_lo
-        per_rep = [round((w[p_lo] / w[p_hi]) / ratio, 3) for w in walls]
-        # engine-vs-host per rep: each rep's efficiency normalized by ITS
-        # OWN adjacent ceiling probe, so a throttle window that caps both
-        # numbers cancels out instead of defining the record
-        vs_host = [round(e / c, 3) if c else None for e, c in zip(per_rep, ceilings)]
-        out["engine_vs_host_per_rep"] = vs_host
-        best_i = per_rep.index(max(per_rep))
-        for p, wall in walls[best_i].items():
-            out[f"images_tiled_per_sec@local[{p}]"] = round(n_images / wall, 1)
-            out[f"tiling_sec@local[{p}]"] = round(wall, 2)
-            # lineage from the SAME rep as the headline throughput (the
-            # old per-rep overwrite reported the LAST rep's value, mixing
-            # reps in one record)
-            out[f"lineage_partitions@local[{p}]"] = lineages[best_i][p]
-        out["scaling_reps"] = len(walls)
-        out["scaling_efficiency_per_rep"] = per_rep
-        out["host_ceiling_per_rep"] = ceilings
-        out["quiet_gate_per_rep"] = gates
+        # Unpinned local[N] is NOT an N-core cluster — the JVM's GC /
+        # shuffle / Arrow threads soak extra cores, flattering the small
+        # level and deflating efficiency. Each measurement runs in a
+        # SUBPROCESS pinned (sched_setaffinity before exec, inherited by
+        # its fresh JVM and Python workers) to exactly N CPUs, making the
+        # "N vs 4N executors" emulation exact. Both levels run
+        # back-to-back right after the gate, in the same weather window.
+        gate = _wait_for_quiet_host(budget_s, ceiling_pair=(p_lo, p_hi))
+        out["gate"] = "met" if gate["met"] else "fallback"
+        out["gate_waited_s"] = gate["waited_s"]
+        out["gate_polls"] = gate["polls"]
+        out["pre_pair_ceiling"] = gate["ceiling"]
+        walls = {}
+        for p in (p_lo, p_hi):
+            r = _scale_measurement(p, images_path, os.path.join(tmp, f"ckpt{p}"), n_images)
+            walls[p] = r["wall"]
+            out[f"images_tiled_per_sec@local[{p}]"] = round(n_images / r["wall"], 1)
+            out[f"tiling_sec@local[{p}]"] = round(r["wall"], 2)
+            out[f"lineage_partitions@local[{p}]"] = r["lineage_partitions"]
         out["cpu_pinned"] = True
-        # headline ceiling = the probe adjacent to the chosen rep (same
-        # weather window); the full per-rep list is reported above
-        out.update(probes[best_i])
-        thr_lo = out[f"images_tiled_per_sec@local[{p_lo}]"]
-        thr_hi = out[f"images_tiled_per_sec@local[{p_hi}]"]
-        eff = round((thr_hi / thr_lo) / (p_hi / p_lo), 3)
+        # the post-pair ceiling is the pair's own window's host ceiling
+        out.update(host_ceiling(p_lo, p_hi))
+        eff = round((walls[p_lo] / walls[p_hi]) / (p_hi / p_lo), 3)
         out[f"scaling_efficiency_{p_lo}_to_{p_hi}"] = eff
         ceiling = out.get("host_ceiling_efficiency")
         if ceiling:
@@ -456,10 +423,37 @@ def run_scaling(n_images: int) -> dict[str, float]:
     return out
 
 
-def main():
+def summary_line(metric: str, sf, n_images: int, headline: dict, scaling: dict) -> str:
+    """The compact last stdout line: per-query minimums, the first and last
+    host probes and the scaling pair's headline numbers. The driver keeps
+    only a 2000-byte tail, so everything else stays in the detail file."""
+    probes = headline["host_probe_per_rep"]
+    return json.dumps({
+        "metric": metric,
+        "value": round(sum(headline["queries"].values()), 3),
+        "unit": "sec",
+        "sf": sf,
+        "n_images": n_images,
+        "queries": headline["queries"],
+        "host_probe_before_sec": probes[0],
+        "host_probe_after_sec": probes[-1],
+        **{k: v for k, v in scaling.items()
+           if k.startswith(("images_tiled_per_sec@", "scaling_efficiency_"))
+           or k in ("host_ceiling_efficiency", "gate")},
+    }, separators=(",", ":"))
+
+
+def main(argv: list[str]) -> None:
+    ap = argparse.ArgumentParser(description="Headline + scaling benchmark.")
+    ap.add_argument("--ab", nargs="+", metavar="QUERY",
+                    help="time only these headline queries (rep 0 is cold)")
+    ap.add_argument("--reps", type=int, help="reps for --ab (default 3)")
+    args = ap.parse_args(argv)
+    if args.reps is not None and not args.ab:
+        ap.error("--reps applies to --ab only (headline: SPARK_GRAFT_HEADLINE_REPS)")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    n_images = int(os.environ.get("SPARK_GRAFT_BENCH_IMAGES", "300000"))
+    n_images = 0 if args.ab else int(os.environ.get("SPARK_GRAFT_BENCH_IMAGES", "300000"))
     try:
         sf = float(sf_dir.rstrip("/").split("sf")[-1])
     except ValueError:
@@ -467,26 +461,21 @@ def main():
         # multi-minute run completed — report the raw path instead
         sf = sf_dir
 
-    times = run_headline(sf_dir, cpus)
-    probes = {
-        k: times.pop(k)
-        for k in list(times)
-        if k.startswith(("host_probe_", "headline_"))
-    }
+    if args.ab:
+        headline = run_headline(sf_dir, cpus, args.ab, args.reps or 3, skip_cold=True)
+        metric = "per-query A/B: min over warm reps"
+    else:
+        headline = run_headline(sf_dir, cpus)
+        metric = "headline queries + images-tiled/sec, pinned scaling pair"
     scaling = run_scaling(n_images) if n_images > 0 else {}
 
-    result = {
-        "metric": "headline queries + images-tiled/sec (S2 assign + PIP join), "
-        "scaling local[8] vs local[32]",
-        "value": round(sum(times.values()), 3),
-        "unit": "sec",
-        "queries": times,
-        **probes,
-        "sf": sf,
-        "n_images": n_images,
-        **scaling,
-    }
-    print(json.dumps(result))
+    line = summary_line(metric, sf, n_images, headline, scaling)
+    detail = {**json.loads(line), **headline, **scaling}
+    detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                               "BENCH", "bench_latest.json")
+    with open(detail_path, "w", encoding="utf-8") as fh:
+        json.dump(detail, fh, indent=1)
+    print(line)
 
 
 if __name__ == "__main__":
@@ -495,4 +484,4 @@ if __name__ == "__main__":
             int(sys.argv[2]), sys.argv[3], sys.argv[4], int(sys.argv[5])
         )
     else:
-        main()
+        main(sys.argv[1:])

@@ -24,9 +24,11 @@ Concurrency: a bucket is CLAIMED under the manifest lock before any work
 (two simultaneous resumes partition the todo list instead of racing
 overwrite-writes into one directory), data is staged to a temp dir and
 published with an atomic rename before the manifest commit, and a claim
-whose owner pid has died is reclaimed on the next resume (same-host
-liveness via signal 0 — cross-host claim arbitration is out of scope for
-this single-host Iceberg emulation and documented as such).
+whose owner has died is reclaimed on the next resume (same-host
+liveness: the pid answers signal 0 and still has the start time the
+claim recorded, so a recycled pid does not revive a dead claim —
+cross-host claim arbitration is out of scope for this single-host
+Iceberg emulation and documented as such).
 """
 
 from __future__ import annotations
@@ -56,6 +58,30 @@ def _pid_alive(pid: int) -> bool:
         return False
 
 
+def _start_time(pid: int) -> int | None:
+    """Start time of ``pid`` in clock ticks after boot: field 22 of
+    ``/proc/<pid>/stat``, read after the last ')' because the command
+    name (field 2) may itself hold spaces and parentheses. None when the
+    process is gone or there is no procfs."""
+    try:
+        with open(f"/proc/{pid}/stat", "rb") as fh:
+            return int(fh.read().rpartition(b")")[2].split()[19])
+    except (OSError, ValueError, IndexError):
+        return None
+
+
+def _claim_alive(rec: dict) -> bool:
+    """A claim is live while its owner pid exists AND, when the claim
+    recorded one, that pid still has the owner's start time — after a
+    crash the kernel may hand the pid to an unrelated process, which
+    would otherwise keep the dead claim alive until the sibling wait
+    times out. Claims without a start time get the pid-only check."""
+    pid = rec.get("pid")
+    if pid is None or not _pid_alive(int(pid)):
+        return False
+    return rec.get("start") is None or rec["start"] == _start_time(int(pid))
+
+
 class CheckpointTable:
     def __init__(self, root: str):
         self.root = root
@@ -72,6 +98,14 @@ class CheckpointTable:
                 return json.load(fh)
         except FileNotFoundError:
             return {"buckets": {}, "seq": 0}
+
+    def _write_manifest(self, m: dict) -> None:
+        """Write-temp + ``os.replace``: readers see the old or the new
+        manifest, never a torn one. Callers hold the manifest lock."""
+        tmp = self._manifest_path + f".tmp{os.getpid()}"
+        with open(tmp, "w", encoding="utf-8") as fh:
+            json.dump(m, fh)
+        os.replace(tmp, self._manifest_path)
 
     def _with_lock(self, fn):
         """Serialize manifest read-modify-write across processes: flock on a
@@ -109,20 +143,18 @@ class CheckpointTable:
                 m.update(meta)
             m["buckets"][str(bucket)] = record
             m["seq"] += 1
-            tmp = self._manifest_path + f".tmp{os.getpid()}"
-            with open(tmp, "w", encoding="utf-8") as fh:
-                json.dump(m, fh)
-            os.replace(tmp, self._manifest_path)
+            self._write_manifest(m)
 
         self._with_lock(_commit)
 
     def claim_bucket(self, bucket: int, *, stage: str, owner: str) -> bool:
         """Atomically claim a bucket for processing (manifest RMW under the
         commit lock). Returns False when the bucket is already DONE or
-        claimed by a committer whose pid is still alive on this host; a
-        claim whose owner pid is gone is treated as crashed and reclaimed
-        (same-host liveness is best-effort — cross-host arbitration is out
-        of scope for this emulation, documented in the module docstring)."""
+        claimed by a committer that is still alive on this host; a claim
+        whose owner is gone (see ``_claim_alive``) is treated as crashed
+        and reclaimed (same-host liveness is best-effort — cross-host
+        arbitration is out of scope for this emulation, documented in the
+        module docstring)."""
 
         def _claim() -> bool:
             m = self.read_manifest()
@@ -130,18 +162,15 @@ class CheckpointTable:
             if rec is not None:
                 if rec.get("state") != "claimed":
                     return False  # done
-                pid = rec.get("pid")
-                if pid is not None and _pid_alive(int(pid)) and rec.get("owner") != owner:
+                if _claim_alive(rec) and rec.get("owner") != owner:
                     return False  # live concurrent committer owns it
             m["buckets"][str(bucket)] = {
                 "state": "claimed", "stage": stage, "bucket": bucket,
-                "owner": owner, "pid": os.getpid(), "ts": time.time(),
+                "owner": owner, "pid": os.getpid(),
+                "start": _start_time(os.getpid()), "ts": time.time(),
             }
             m["seq"] += 1
-            tmp = self._manifest_path + f".tmp{os.getpid()}"
-            with open(tmp, "w", encoding="utf-8") as fh:
-                json.dump(m, fh)
-            os.replace(tmp, self._manifest_path)
+            self._write_manifest(m)
             return True
 
         return self._with_lock(_claim)
@@ -156,10 +185,7 @@ class CheckpointTable:
             if rec is not None and rec.get("state") == "claimed" and rec.get("owner") == owner:
                 del m["buckets"][str(bucket)]
                 m["seq"] += 1
-                tmp = self._manifest_path + f".tmp{os.getpid()}"
-                with open(tmp, "w", encoding="utf-8") as fh:
-                    json.dump(m, fh)
-                os.replace(tmp, self._manifest_path)
+                self._write_manifest(m)
 
         self._with_lock(_release)
 

@@ -189,9 +189,12 @@ def average_phash_batch(gray: np.ndarray) -> np.ndarray:
         S[:, yi1, xi1] - S[:, yi0, xi1] - S[:, yi1, xi0] + S[:, yi0, xi0]
     )
     counts = ((y1 - y0)[:, None] * (x1 - x0)[None, :])[None, :, :]
-    blocks = sums / counts
-    bits = blocks > blocks.mean(axis=(1, 2), keepdims=True)
-    packed = np.packbits(bits.reshape(T, 64), axis=1)  # (T, 8) big-endian bytes
+    # each image's 64 block means as one contiguous row: its mean is then
+    # summed in the scalar path's order, so a block that ties the mean
+    # (repeated blocks make ties common) compares the same way
+    blocks = np.ascontiguousarray(sums / counts).reshape(T, 64)
+    bits = blocks > blocks.mean(axis=1, keepdims=True)
+    packed = np.packbits(bits, axis=1)  # (T, 8) big-endian bytes
     vals = np.zeros(T, dtype=np.uint64)
     for i in range(8):
         vals |= packed[:, i].astype(np.uint64) << np.uint64(8 * (7 - i))

@@ -13,7 +13,7 @@ from __future__ import annotations
 import json
 import math
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from geojson_spark.functions.geojson_codec import parse_geojson, serialize_geojson
@@ -264,6 +264,7 @@ def test_streaming_scanner_equals_whole_doc_parse(feats, chunk):
     st.integers(min_value=4, max_value=40),  # w
     st.integers(min_value=0, max_value=2**31 - 1),
 )
+@example(t=2, h=5, w=24, seed=5)  # a block ties the mean of block means
 @settings(max_examples=60, deadline=None)
 def test_average_phash_batch_bit_identical_to_scalar(t, h, w, seed):
     """The (T,h,w) batched phash must reproduce the scalar per-image hash

@@ -162,6 +162,44 @@ def test_resumable_apply_reclaims_dead_siblings_bucket(spark, tmp_path):
     assert sorted(r.k for r in out.collect()) == list(range(40))
 
 
+def _claim_by_other_owner(root, start):
+    """A checkpoint whose bucket 0 is claimed by another owner under THIS
+    process's pid (alive), with the given recorded start time."""
+    from geojson_spark.plans.checkpoint import CheckpointTable
+
+    ckpt = CheckpointTable(root)
+    m = ckpt.read_manifest()
+    m["buckets"]["0"] = {
+        "state": "claimed", "stage": "s", "bucket": 0, "owner": "other-run",
+        "pid": os.getpid(), "start": start, "ts": time.time(),
+    }
+    with open(os.path.join(root, "manifest.json"), "w") as fh:
+        json.dump(m, fh)
+    return ckpt
+
+
+def _own_start_time() -> int:
+    with open(f"/proc/{os.getpid()}/stat", "rb") as fh:
+        return int(fh.read().rpartition(b")")[2].split()[19])
+
+
+def test_claim_with_recycled_pid_is_reclaimed(tmp_path):
+    """The claim's pid exists but belongs to a process started at another
+    time: the owner died and the kernel reused its pid, so the claim is
+    dead and the bucket is reclaimed."""
+    ckpt = _claim_by_other_owner(str(tmp_path / "c"), _own_start_time() + 1)
+    assert ckpt.claim_bucket(0, stage="s", owner="me")
+    assert ckpt.read_manifest()["buckets"]["0"]["owner"] == "me"
+
+
+def test_claim_with_matching_start_time_is_refused(tmp_path):
+    """Same pid and the same start time: the owner is alive, the bucket
+    stays theirs."""
+    ckpt = _claim_by_other_owner(str(tmp_path / "c"), _own_start_time())
+    assert not ckpt.claim_bucket(0, stage="s", owner="me")
+    assert ckpt.read_manifest()["buckets"]["0"]["owner"] == "other-run"
+
+
 # ---------------------------------------------------------------------------
 # stateful sessions: below-range straggler bridging the first retained event
 # ---------------------------------------------------------------------------
