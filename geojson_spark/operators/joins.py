@@ -298,14 +298,14 @@ def pip_join(
             broadcast_polygons = True
         else:
             # Step 2 (small sides only): cover/bytes stats over a
-            # deterministic hash sample capped at ~2048 EXPECTED rows —
+            # deterministic hash sample of at most 2048 EXPECTED rows —
             # an absolute bound on cover-UDF evaluations, not a fraction
             # that grows with the table. n is known here, so the modulus
-            # adapts; sides under 2048 rows are measured exactly.
+            # adapts; sides of at most 2048 rows are measured exactly.
             bytes_expr = F.size(cover_expr) * (
                 F.size(F.col("coords")) * F.lit(8.0) + F.lit(64.0)
             )
-            mod = max(1, n_polys // 2048)
+            mod = -(-n_polys // 2048)  # ceil: n / mod ≤ 2048
             sampled = F.pmod(F.xxhash64(F.col("poly_id")), F.lit(mod)) == 0
             # E[cover·bytes], NOT E[cover]·E[bytes]: cover size and coords
             # length are positively correlated (big polygons have both),

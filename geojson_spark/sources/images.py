@@ -14,6 +14,25 @@ Codecs (all pure NumPy, no PIL/cv2 in this container — SURVEY.md §7.1):
          for every image, not just in expectation.
 
 phash — 64-bit average-hash: mean of each 8×8 block grid vs global mean.
+
+Batch kernel — generation (``_gen_batch``) and the invariant checker
+(``verify_invariants``) share one whole-batch code path, no per-row pixel
+work:
+  pixels — ``_regen_pixels``: one ``_splitmix64`` over the concatenated
+           counter ranges of every image in the batch;
+  decode — raw/q8 pixels are the joined stored bytes (the Arrow data
+           buffer); every rle buffer's (count, value) pairs expand in one
+           ``np.repeat``;
+  PSNR   — each image's squared error is an exact integer segment sum
+           (``np.add.reduceat``), so the flags equal ``psnr_db``'s;
+  phash  — ``_phash_concat``: images of mixed sizes zero-padded into one
+           stack, one :func:`average_phash_batch` call with each image's
+           own block bounds, bit-identical to :func:`average_phash`.
+Memory: the checker walks each Arrow batch in sub-batches of about
+``_SUB_BATCH_BYTES`` (1 MiB) of stored bytes plus regenerated pixels, and
+the generator in sub-batches of at most that many regenerated pixel
+bytes, so a Python worker's scratch memory (a few uint64/float64 copies of
+a sub-batch) does not grow with the Arrow batch size.
 """
 
 from __future__ import annotations
@@ -22,6 +41,8 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 
 from geojson_spark.schema import IMAGE_SCHEMA
@@ -36,12 +57,13 @@ _WORDS = (
 
 
 def _splitmix64(x: np.ndarray) -> np.ndarray:
-    """Deterministic 64-bit mix (public splitmix64 constants)."""
-    x = (x + np.uint64(0x9E3779B97F4A7C15)).astype(np.uint64)
+    """Deterministic 64-bit mix (public splitmix64 constants) of a uint64
+    array; the input is not modified."""
+    x = x + np.uint64(0x9E3779B97F4A7C15)  # a fresh array: mix it in place
     x ^= x >> np.uint64(30)
-    x = (x * np.uint64(0xBF58476D1CE4E5B9)).astype(np.uint64)
+    x *= np.uint64(0xBF58476D1CE4E5B9)
     x ^= x >> np.uint64(27)
-    x = (x * np.uint64(0x94D049BB133111EB)).astype(np.uint64)
+    x *= np.uint64(0x94D049BB133111EB)
     x ^= x >> np.uint64(31)
     return x
 
@@ -169,26 +191,39 @@ def average_phash(px: np.ndarray, w: int, h: int) -> int:
     return val - (1 << 64) if val >= (1 << 63) else val
 
 
-def average_phash_batch(gray: np.ndarray) -> np.ndarray:
-    """Vectorized :func:`average_phash` over a (T, h, w) GRAYSCALE stack —
-    bit-identical to ``average_phash(repeat(gray[t], 3), w, h)`` for every
-    t (the per-image path means the 3 identical channels, which is the
-    gray value). One cumsum over the stack instead of T integral images;
-    rasterize's render loop was spending ~0.1 ms/tile here."""
-    T, h, w = gray.shape
-    img = gray.astype(np.float64)
-    ys = (np.arange(9) * h) // 8
-    xs = (np.arange(9) * w) // 8
-    S = np.zeros((T, h + 1, w + 1), dtype=np.float64)
-    S[:, 1:, 1:] = img.cumsum(axis=1).cumsum(axis=2)
-    y0, y1 = ys[:-1], np.maximum(ys[:-1] + 1, ys[1:])
-    x0, x1 = xs[:-1], np.maximum(xs[:-1] + 1, xs[1:])
-    yi0, yi1 = y0[:, None], y1[:, None]
-    xi0, xi1 = x0[None, :], x1[None, :]
-    sums = (
-        S[:, yi1, xi1] - S[:, yi0, xi1] - S[:, yi1, xi0] + S[:, yi0, xi0]
-    )
-    counts = ((y1 - y0)[:, None] * (x1 - x0)[None, :])[None, :, :]
+def average_phash_batch(
+    gray: np.ndarray, h: np.ndarray | None = None, w: np.ndarray | None = None
+) -> np.ndarray:
+    """Vectorized :func:`average_phash` over a (T, H, W) GRAYSCALE stack —
+    bit-identical to ``average_phash(repeat(gray[t, :h[t], :w[t]], 3),
+    w[t], h[t])`` for every t (the per-image path means the 3 identical
+    channels, which is the gray value). ``h``/``w`` give each image's own
+    size when the stack mixes sizes (default: every image is H×W). Each
+    image sits top-left and is padded right and below, so every integral
+    image value inside it sums only its own pixels. One pass over the
+    stack instead of T integral images."""
+    T, H, W = gray.shape
+    h = np.full(T, H) if h is None else np.asarray(h, dtype=np.int64)
+    w = np.full(T, W) if w is None else np.asarray(w, dtype=np.int64)
+    # integral images in (H+1, W+1, T) layout, one image per lane: each
+    # step adds one row (then one column) of all T images, in the order of
+    # the scalar path's sequential cumsums — and far faster than cumsum
+    g = np.ascontiguousarray(np.moveaxis(gray, 0, -1), dtype=np.float64)
+    S = np.zeros((H + 1, W + 1, T), dtype=np.float64)
+    for y in range(H):
+        np.add(S[y, 1:], g[y], out=S[y + 1, 1:])
+    for x in range(1, W):
+        S[1:, x + 1] += S[1:, x]
+    k = np.arange(9)
+    ys = (k * h[:, None]) // 8
+    xs = (k * w[:, None]) // 8
+    y0, y1 = ys[:, :-1], np.maximum(ys[:, :-1] + 1, ys[:, 1:])
+    x0, x1 = xs[:, :-1], np.maximum(xs[:, :-1] + 1, xs[:, 1:])
+    t = np.arange(T)[:, None, None]
+    r0, r1 = y0[:, :, None], y1[:, :, None]
+    c0, c1 = x0[:, None, :], x1[:, None, :]
+    sums = S[r1, c1, t] - S[r0, c1, t] - S[r1, c0, t] + S[r0, c0, t]
+    counts = (y1 - y0)[:, :, None] * (x1 - x0)[:, None, :]
     # each image's 64 block means as one contiguous row: its mean is then
     # summed in the scalar path's order, so a block that ties the mean
     # (repeated blocks make ties common) compares the same way
@@ -225,34 +260,110 @@ def lonlat_for(hashes: np.ndarray, skew: bool):
     return lon, lat
 
 
+_MAX_IMAGE_BYTES = 32 * 32 * 3  # the largest generated image (``_dims``)
+_SUB_BATCH_BYTES = 1 << 20  # the batch kernel's memory bound (module docstring)
+_FLAGS = ("psnr_ok", "caption_ok", "phash_ok")
+
+
+def _dims(ids: np.ndarray):
+    """(hash, w, h) of uint64 image indices — the generator's size rule."""
+    hashes = _splitmix64(ids)
+    w = (hashes % np.uint64(25)).astype(np.int64) + 8
+    h = ((hashes >> np.uint64(8)) % np.uint64(25)).astype(np.int64) + 8
+    return hashes, w, h
+
+
+def _captions(ids: np.ndarray, hashes: np.ndarray) -> list[str]:
+    return [caption_for(i, x) for i, x in zip(ids.tolist(), hashes.tolist())]
+
+
+def _ranges(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Concatenated index ranges ``[starts[k], starts[k] + lens[k])``."""
+    ends = np.cumsum(lens)
+    total = int(ends[-1]) if lens.size else 0
+    return np.arange(total, dtype=np.int64) + np.repeat(starts - (ends - lens), lens)
+
+
+def _segment_sums(x: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Exact int64 sum of each consecutive run of ``lens[k]`` elements of
+    integer ``x`` (empty runs sum to 0)."""
+    out = np.zeros(lens.size, dtype=np.int64)
+    nz = lens > 0
+    if nz.any():  # reduceat would read an empty run as one element
+        out[nz] = np.add.reduceat(x, (np.cumsum(lens) - lens)[nz], dtype=np.int64)
+    return out
+
+
+def _regen_pixels(ids: np.ndarray, w: np.ndarray, h: np.ndarray) -> np.ndarray:
+    """``_pixels_for`` of every image, back to back: one ``_splitmix64``
+    over the concatenated counter ranges."""
+    n = w * h * 3
+    ctr = np.repeat((ids << np.uint64(24)) - (np.cumsum(n) - n).astype(np.uint64), n)
+    ctr += np.arange(ctr.size, dtype=np.uint64)
+    return _splitmix64(ctr).astype(np.uint8)  # the low byte, as in _pixels_for
+
+
+def _phash_concat(px: np.ndarray, w: np.ndarray, h: np.ndarray) -> np.ndarray:
+    """``average_phash`` of RGB images stored back to back in ``px``, in
+    one :func:`average_phash_batch` call over a zero-padded stack. Halves
+    the batch while the stack would exceed _SUB_BATCH_BYTES cells, so
+    images of very different shapes cannot blow it up."""
+    T = w.size
+    if T == 0:
+        return np.zeros(0, dtype=np.int64)
+    H, W = int(h.max()), int(w.max())
+    if T > 1 and T * H * W > _SUB_BATCH_BYTES:
+        m = T // 2
+        cut = 3 * int((w[:m] * h[:m]).sum())
+        return np.concatenate(
+            (_phash_concat(px[:cut], w[:m], h[:m]), _phash_concat(px[cut:], w[m:], h[m:]))
+        )
+    # the mean of 3 integer channels: the sum is exact in any order, so
+    # this equals average_phash's float64 channel mean bit for bit
+    rgb = px.reshape(-1, 3)
+    gray = (rgb[:, 0] + rgb[:, 1].astype(np.float64) + rgb[:, 2]) / 3.0
+    # row y of image t lands at stack[y, :w[t], t] of an (H, W, T) stack,
+    # the layout average_phash_batch computes in
+    img = np.repeat(np.arange(T), h)  # image of each pixel row
+    y = _ranges(np.zeros(T, dtype=np.int64), h)
+    wr = w[img]
+    x = _ranges(np.zeros(img.size, dtype=np.int64), wr)
+    stack = np.zeros(H * W * T, dtype=np.float64)
+    stack[np.repeat(y * (W * T) + img, wr) + x * T] = gray
+    return average_phash_batch(stack.reshape(H, W, T).transpose(2, 0, 1), h, w)
+
+
 def _gen_batch(ids: np.ndarray, skew: bool) -> pd.DataFrame:
-    hashes = _splitmix64(ids.astype(np.uint64))
-    ws = (8 + (hashes % np.uint64(25))).astype(np.int32)
-    hs = (8 + ((hashes >> np.uint64(8)) % np.uint64(25))).astype(np.int32)
+    uids = ids.astype(np.uint64)
+    hashes, w, h = _dims(uids)
     fmts = np.array(["raw", "rle", "q8"])[ids % 3]
     lon, lat = lonlat_for(hashes, skew)
-    rows = []
-    for k in range(ids.size):
-        i = int(ids[k])
-        w, h = int(ws[k]), int(hs[k])
-        px = _pixels_for(i, w, h)
-        fmt = str(fmts[k])
-        buf = encode_image(px, fmt)
-        decoded = decode_image(buf, fmt, w, h)
-        rows.append(
-            {
-                "image_id": f"img{i:012d}",
-                "bytes": buf,
-                "w": w,
-                "h": h,
-                "fmt": fmt,
-                "caption": caption_for(i, int(hashes[k])),
-                "phash": average_phash(decoded, w, h),
-                "lon": float(lon[k]),
-                "lat": float(lat[k]),
-            }
-        )
-    return pd.DataFrame(rows, columns=IMAGE_SCHEMA.names)
+    n = w * h * 3
+    px = _regen_pixels(uids, w, h)
+    # what the stored bytes decode to: q8 is lossy, and the phash must
+    # describe the decoded pixels (see encode_with_phash)
+    q8 = np.repeat(fmts == "q8", n)
+    px[q8] = q8_quantize(px[q8])
+    ends = np.cumsum(n).tolist()
+    blob = px.tobytes()
+    bufs = [
+        rle_encode(px[a - k : a]) if f == "rle" else blob[a - k : a]
+        for a, k, f in zip(ends, n.tolist(), fmts.tolist())
+    ]
+    return pd.DataFrame(
+        {
+            "image_id": [f"img{i:012d}" for i in ids.tolist()],
+            "bytes": bufs,
+            "w": w.astype(np.int32),
+            "h": h.astype(np.int32),
+            "fmt": fmts.astype(object),
+            "caption": _captions(uids, hashes),
+            "phash": _phash_concat(px, w, h),
+            "lon": lon,
+            "lat": lat,
+        },
+        columns=IMAGE_SCHEMA.names,
+    )
 
 
 def generate_images(
@@ -260,93 +371,191 @@ def generate_images(
 ) -> DataFrame:
     """Distributed deterministic image table: same rows at any parallelism."""
     rng_df = spark.range(0, n, numPartitions=partitions or spark.sparkContext.defaultParallelism)
+    step = _SUB_BATCH_BYTES // _MAX_IMAGE_BYTES
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             ids = pdf["id"].to_numpy(np.int64)
-            for lo in range(0, ids.size, 4096):
-                yield _gen_batch(ids[lo : lo + 4096], skew)
+            for lo in range(0, ids.size, step):
+                yield _gen_batch(ids[lo : lo + step], skew)
 
     return rng_df.mapInPandas(gen, schema=IMAGE_SCHEMA)
+
+
+def _id_index(image_id) -> int | None:
+    """The integer after an image_id's 3-character prefix, or None when
+    there is none in [0, 2**64) — the row cannot be regenerated."""
+    try:
+        i = int(image_id[3:])
+    except (TypeError, ValueError):
+        return None
+    return i if 0 <= i < 1 << 64 else None
+
+
+def _parse_ids(image_ids) -> tuple[np.ndarray, np.ndarray]:
+    parsed = [_id_index(s) for s in image_ids]
+    ok = np.array([i is not None for i in parsed], dtype=bool)
+    return np.array([i or 0 for i in parsed], dtype=np.uint64), ok
+
+
+def _true(mask: pa.Array) -> np.ndarray:
+    """A boolean Arrow array as NumPy, null as False."""
+    return mask.fill_null(False).to_numpy(zero_copy_only=False)
+
+
+def _ints(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """(int64 values, ok) of a numeric Arrow column. Null, non-integral
+    and out-of-int64 values are not ok; integers are never routed through
+    float, so every 64-bit value compares exactly."""
+    ok = _true(col.is_valid())
+    x = col.fill_null(0).to_numpy(zero_copy_only=False)
+    if x.dtype.kind == "f":
+        ok &= np.isfinite(x) & (x == np.trunc(x)) & (np.abs(x) < 2.0**63)
+        x = np.where(ok, x, 0.0)
+    return x.astype(np.int64), ok
+
+
+def _binary(col: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(joined bytes, offsets from 0, valid) of a binary Arrow column —
+    the column's own data buffer, not a copy."""
+    arr = col.cast(pa.large_binary())
+    _, offsets, data = arr.buffers()
+    off = np.frombuffer(offsets, dtype=np.int64, count=len(arr) + 1, offset=8 * arr.offset)
+    data = np.frombuffer(data, dtype=np.uint8) if data is not None else np.zeros(0, np.uint8)
+    return data[off[0] : off[-1]], off - off[0], _true(arr.is_valid())
+
+
+def _check_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
+    """(image_id, psnr_ok, caption_ok, phash_ok) of a batch of image rows,
+    each step once over the whole batch. Damage clears only the flags it
+    touches: an unparseable id fails psnr and caption; null, wrong-length
+    or unknown-format bytes and impossible w/h fail psnr and phash; a null
+    caption or phash fails only its own flag."""
+    col = batch.column
+    n = batch.num_rows
+    ids, id_ok = _parse_ids(col("image_id").to_pylist())
+    hashes, w0, h0 = _dims(ids)
+    caps = [c if ok else None for c, ok in zip(_captions(ids, hashes), id_ok)]
+    caption_ok = _true(pc.equal(col("caption"), pa.array(caps, pa.string())))
+
+    # decode: raw/q8 pixels are the stored bytes themselves; every rle
+    # buffer's (count, value) pairs expand in one np.repeat
+    data, off, b_ok = _binary(col("bytes"))
+    blen = np.diff(off)
+    is_q8 = _true(pc.equal(col("fmt"), "q8"))
+    plain = is_q8 | _true(pc.equal(col("fmt"), "raw"))
+    rle = b_ok & _true(pc.equal(col("fmt"), "rle")) & (blen % 2 == 0)
+    pairs = data[_ranges(off[:-1][rle], blen[rle])]
+    counts = pairs[0::2]
+    rle_px = np.repeat(pairs[1::2], counts)
+    dec_len = blen.copy()
+    dec_len[rle] = _segment_sums(counts, blen[rle] // 2)
+    src = np.concatenate((data, rle_px)) if rle.any() else data
+    src_at = off[:-1].copy()
+    src_at[rle] = data.size + np.cumsum(dec_len[rle]) - dec_len[rle]
+    w, w_ok = _ints(col("w"))
+    h, h_ok = _ints(col("h"))
+    # float product: exact at every length a buffer can have, no overflow
+    decoded = b_ok & (plain | rle) & w_ok & h_ok & (dec_len == w * h.astype(np.float64) * 3)
+
+    # every decodable row's pixels, back to back in row order
+    lens = dec_len[decoded]
+    dec = src[_ranges(src_at[decoded], lens)]
+
+    def pixels(rows: np.ndarray) -> np.ndarray:  # rows ⊆ decoded
+        keep = rows[decoded]
+        return dec if keep.all() else dec[_ranges((np.cumsum(lens) - lens)[keep], lens[keep])]
+
+    # PSNR against the pixels regenerated from image_id, from the exact
+    # integer squared error of each image
+    psnr_ok = np.zeros(n, dtype=bool)
+    rows = decoded & id_ok & (dec_len == w0 * h0 * 3)
+    d = _regen_pixels(ids[rows], w0[rows], h0[rows]).astype(np.int32) - pixels(rows)
+    sse = _segment_sums(d * d, dec_len[rows])
+    lossy = is_q8[rows]
+    with np.errstate(divide="ignore"):  # mse 0 → inf dB, as psnr_db
+        db = 20.0 * np.log10(255.0) - 10.0 * np.log10(sse[lossy] / dec_len[rows][lossy])
+    ok = sse == 0  # raw/rle must be exact
+    ok[lossy] = db >= 40.0
+    psnr_ok[rows] = ok
+
+    phash, ph_ok = _ints(col("phash"))
+    phash_ok = np.zeros(n, dtype=bool)
+    rows = decoded & ph_ok & (w >= 1) & (h >= 1)
+    phash_ok[rows] = _phash_concat(pixels(rows), w[rows], h[rows]) == phash[rows]
+    return pa.RecordBatch.from_arrays(
+        [col("image_id"), pa.array(psnr_ok), pa.array(caption_ok), pa.array(phash_ok)],
+        names=["image_id", *_FLAGS],
+    )
+
+
+def _sub_batches(cost: np.ndarray) -> list[tuple[int, int]]:
+    """[lo, hi) row ranges holding about _SUB_BATCH_BYTES of ``cost`` each
+    (a row is never split, so a range exceeds it by at most one row)."""
+    if cost.size == 0:
+        return []
+    window = (np.cumsum(cost) - cost) // _SUB_BATCH_BYTES
+    bounds = [0, *(np.flatnonzero(np.diff(window)) + 1).tolist(), cost.size]
+    return list(zip(bounds[:-1], bounds[1:]))
+
+
+def _check_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    for batch in batches:
+        # what a row costs the kernel: its stored bytes and, at most, one
+        # regenerated image
+        stored = pc.binary_length(batch.column("bytes")).fill_null(0).to_numpy()
+        for lo, hi in _sub_batches(stored.astype(np.int64) + _MAX_IMAGE_BYTES):
+            sub = batch.slice(lo, hi - lo)
+            try:
+                yield _check_batch(sub)
+            except Exception:
+                # damage the kernel does not mask must still be counted,
+                # not crash the task: rerun it one row at a time and fail
+                # only the row that still raises
+                for k in range(sub.num_rows):
+                    row = sub.slice(k, 1)
+                    try:
+                        yield _check_batch(row)
+                    except Exception:
+                        yield pa.RecordBatch.from_arrays(
+                            [row.column("image_id")] + [pa.array([False])] * 3,
+                            names=["image_id", *_FLAGS],
+                        )
 
 
 def verify_invariants(images_df):
     """Per-row invariant check (north rule): decode bytes → PSNR vs
     regenerated pixels (exact for raw/rle, ≥40 dB for q8), caption
     byte-equality, phash recompute. Returns DataFrame(image_id, psnr_ok,
-    caption_ok, phash_ok) via mapInPandas — run it after any shuffle and
-    assert zero failures. Size-corrupting damage (truncated bytes, wrong
-    w/h) is COUNTED as a failed row, not raised — an invariant checker
-    that crashes on the damage it exists to detect reports nothing."""
+    caption_ok, phash_ok) — run it after any shuffle and assert zero
+    failures. Damage (truncated bytes, wrong w/h, a mangled image_id,
+    nulls) is COUNTED as a failed flag, not raised — an invariant checker
+    that crashes on the damage it exists to detect reports nothing.
 
-    def check(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            # a corrupted image_id (the regen oracle's only input) must
-            # COUNT as a failed row like every other kind of damage — the
-            # bare batch call would crash the task on one mangled id and
-            # report nothing. Fast path: one batch regen; only a failing
-            # batch falls back to per-row isolation.
-            try:
-                caps, pixels = regen_caption_and_pixels(pdf["image_id"])
-            except Exception:
-                caps, pixels = [], []
-                for s in pdf["image_id"]:
-                    try:
-                        c, px = regen_caption_and_pixels(pd.Series([s]))
-                        caps.append(c[0])
-                        pixels.append(px[0])
-                    except Exception:
-                        caps.append(None)
-                        pixels.append(None)
-            out = {"image_id": [], "psnr_ok": [], "caption_ok": [], "phash_ok": []}
-            for k in range(len(pdf)):
-                row = pdf.iloc[k]
-                orig = pixels[k]
-                try:
-                    if orig is None:
-                        raise ValueError("unregenerable image_id")
-                    decoded = decode_image(row["bytes"], row["fmt"], row["w"], row["h"])
-                    p = psnr_db(orig, decoded)
-                    psnr_ok = (
-                        bool(p == float("inf"))
-                        if row["fmt"] in ("raw", "rle")
-                        else bool(p >= 40.0)
-                    )
-                    phash_ok = int(row["phash"]) == average_phash(
-                        decoded, row["w"], row["h"]
-                    )
-                except Exception:
-                    psnr_ok = False
-                    phash_ok = False
-                out["image_id"].append(row["image_id"])
-                out["psnr_ok"].append(psnr_ok)
-                out["caption_ok"].append(row["caption"] == caps[k])
-                out["phash_ok"].append(phash_ok)
-            yield pd.DataFrame(out)
-
-    # pandas-UDF stages run one task per input partition; a small parquet
-    # arrives as 1 partition and would serialize the (expensive) decode
-    # loop on one core (CLAUDE.md small-parquet rule). Plan-aware so an
+    Runs the batch kernel over Arrow batches (``mapInArrow``): a nullable
+    bigint reaches pandas as float64 when its batch holds a null, which
+    would round every other row's 64-bit phash in that batch."""
+    # Python stages run one task per input partition; a small parquet
+    # arrives as 1 partition and would serialize the (expensive) check on
+    # one core (CLAUDE.md small-parquet rule). Plan-aware so an
     # expensive upstream pipeline is never executed twice just to count
     # partitions under AQE.
     from geojson_spark.functions.spark_funcs import ensure_min_partitions
 
     images_df = ensure_min_partitions(images_df)
-    return images_df.mapInPandas(
-        check, schema="image_id string, psnr_ok boolean, caption_ok boolean, phash_ok boolean"
+    return images_df.mapInArrow(
+        _check_batches,
+        schema="image_id string, psnr_ok boolean, caption_ok boolean, phash_ok boolean",
     )
 
 
-def regen_caption_and_pixels(image_ids: pd.Series):
-    """Recompute (caption, pixels) from image_id — the invariant oracle
-    (caption byte-equality + PSNR after every shuffle, BASELINE.json)."""
-    out_cap = []
-    out_px = []
-    for s in image_ids:
-        i = int(s[3:])
-        h = int(_splitmix64(np.array([i], dtype=np.uint64))[0])
-        w = 8 + (h % 25)
-        hh = 8 + ((h >> 8) % 25)
-        out_cap.append(caption_for(i, h))
-        out_px.append(_pixels_for(i, w, hh))
-    return out_cap, out_px
+def regen_caption_and_pixels(image_ids):
+    """Recompute (captions, pixel arrays) from image ids — the invariant
+    oracle (caption byte-equality + PSNR after every shuffle,
+    BASELINE.json). Raises ValueError on an id it cannot regenerate."""
+    ids, ok = _parse_ids(image_ids)
+    if not ok.all():
+        raise ValueError(f"unregenerable image_id {list(image_ids)[int(np.argmin(ok))]!r}")
+    hashes, w, h = _dims(ids)
+    px = _regen_pixels(ids, w, h)
+    return _captions(ids, hashes), np.split(px, np.cumsum(w * h * 3)[:-1])

@@ -268,8 +268,10 @@ def test_streaming_scanner_equals_whole_doc_parse(feats, chunk):
 @settings(max_examples=60, deadline=None)
 def test_average_phash_batch_bit_identical_to_scalar(t, h, w, seed):
     """The (T,h,w) batched phash must reproduce the scalar per-image hash
-    bit-for-bit — rasterize's render path switched to the batch kernel and
-    hamming-dedup compatibility depends on exact equality."""
+    bit-for-bit — rasterize's render path and the image invariant kernel
+    use the batch kernel, and hamming-dedup compatibility depends on exact
+    equality. Also with per-image sizes: each image top-left in the stack,
+    padded right and below, including few-level (tie-prone) images."""
     import numpy as np
 
     from geojson_spark.sources.images import average_phash, average_phash_batch
@@ -280,3 +282,234 @@ def test_average_phash_batch_bit_identical_to_scalar(t, h, w, seed):
     for i in range(t):
         rgb = np.repeat(gray[i].reshape(-1), 3)
         assert int(got[i]) == average_phash(rgb, w, h)
+
+    hs = rng.integers(1, h + 1, size=t)
+    ws = rng.integers(1, w + 1, size=t)
+    gray //= np.uint8(rng.choice([1, 64, 128]))  # 256, 4 or 2 gray levels
+    got = average_phash_batch(gray, hs, ws)
+    for i in range(t):
+        img = gray[i, : hs[i], : ws[i]]
+        assert int(got[i]) == average_phash(np.repeat(img.reshape(-1), 3), ws[i], hs[i])
+
+
+def _image_arrow_schema():
+    import pyarrow as pa
+
+    return pa.schema([("image_id", pa.string()), ("bytes", pa.binary()),
+                      ("w", pa.int32()), ("h", pa.int32()), ("fmt", pa.string()),
+                      ("caption", pa.string()), ("phash", pa.int64())])
+
+
+def _damage(row: dict, kind: str, k: int) -> dict:
+    """One kind of damage to one image row; ``k`` picks where."""
+    row = dict(row)
+    b = row["bytes"]
+    if kind == "truncate":
+        row["bytes"] = b[: k % len(b)]
+    elif kind == "extend":
+        row["bytes"] = b + bytes([k % 256]) * (1 + k % 4)
+    elif kind == "flip":
+        j = k % len(b)
+        row["bytes"] = b[:j] + bytes([b[j] ^ (1 << k % 8)]) + b[j + 1 :]
+    elif kind == "swap_wh":
+        row["w"], row["h"] = row["h"], row["w"]
+    elif kind == "zero_w":
+        row["w"] = 0
+    elif kind == "neg_wh":
+        row["w"], row["h"] = -row["w"], -row["h"]
+    elif kind == "neg_w":
+        row["w"] = -row["w"]
+    elif kind == "fmt":
+        row["fmt"] = ["png", "raw", "rle", "q8", ""][k % 5]
+    elif kind == "caption":
+        row["caption"] = row["caption"] + "!"
+    elif kind == "phash":
+        row["phash"] ^= 1 << (k % 64) if k % 64 < 63 else -(1 << 63)
+    elif kind.startswith("null_"):
+        row[kind[5:]] = None
+    elif kind == "id_xyz":
+        row["image_id"] = "imgXYZ"
+    elif kind == "id_negative":
+        row["image_id"] = "img-" + row["image_id"][3:]
+    elif kind == "id_long":
+        row["image_id"] = row["image_id"] + "9" * 12
+    elif kind == "id_zeros":  # leading zeros: the same image, still valid
+        row["image_id"] = "img" + "0" * 12 + row["image_id"][3:]
+    return row
+
+
+_DAMAGE = ["none", "none", "none", "truncate", "extend", "flip", "swap_wh", "zero_w",
+           "neg_wh", "neg_w", "fmt", "caption", "phash", "null_bytes", "null_caption",
+           "null_phash", "null_w", "null_fmt", "null_image_id", "id_xyz", "id_negative",
+           "id_long", "id_zeros"]
+
+
+def _reference_flags(row: dict) -> tuple[bool, bool, bool]:
+    """Per-row reference for the batch checker's flags, from the scalar
+    building blocks: PSNR needs a regenerable id and bytes that decode to
+    w·h·3 pixels; phash needs decodable bytes and a stored phash."""
+    import math
+
+    from geojson_spark.sources.images import (
+        average_phash,
+        decode_image,
+        psnr_db,
+        regen_caption_and_pixels,
+    )
+
+    try:
+        caps, pixels = regen_caption_and_pixels([row["image_id"]])
+        cap, orig = caps[0], pixels[0]
+    except ValueError:
+        cap = orig = None
+    try:
+        dec = decode_image(row["bytes"], row["fmt"], row["w"], row["h"])
+    except (TypeError, ValueError):
+        dec = None
+    psnr_ok = False
+    if orig is not None and dec is not None:
+        try:
+            p = psnr_db(orig, dec)
+        except ValueError:  # lengths differ
+            p = None
+        if p is not None:
+            psnr_ok = math.isinf(p) if row["fmt"] in ("raw", "rle") else p >= 40.0
+    phash_ok = False
+    if dec is not None and row["phash"] is not None:
+        try:
+            phash_ok = row["phash"] == average_phash(dec, row["w"], row["h"])
+        except (IndexError, ValueError):  # w or h < 1
+            pass
+    caption_ok = cap is not None and row["caption"] == cap
+    return psnr_ok, caption_ok, phash_ok
+
+
+@given(
+    st.lists(
+        st.tuples(st.integers(min_value=0, max_value=10**9), st.sampled_from(_DAMAGE),
+                  st.integers(min_value=0, max_value=2**16)),
+        min_size=1, max_size=24,
+    ),
+    st.sampled_from([1, 4_000, 20_000, 1 << 20]),  # sub-batch budget in bytes
+)
+@example(rows=[(5, "null_phash", 0), (6, "none", 0), (7, "none", 0)], budget=1 << 20)
+@settings(max_examples=80, deadline=None)
+def test_batch_checker_flags_match_per_row_reference(rows, budget):
+    """The batch invariant kernel's (psnr_ok, caption_ok, phash_ok) equal
+    a per-row reference on intact and damaged rows, across sub-batch
+    boundaries (small budgets also split the padded phash stack)."""
+    from unittest import mock
+
+    import numpy as np
+    import pyarrow as pa
+
+    from geojson_spark.sources import images
+
+    ids = np.array([i for i, _, _ in rows], dtype=np.int64)
+    good = images._gen_batch(ids, skew=False).drop(columns=["lon", "lat"])
+    damaged = [_damage(r, kind, k) for r, (_, kind, k) in
+               zip(good.to_dict("records"), rows)]
+    batch = pa.RecordBatch.from_pylist(damaged, schema=_image_arrow_schema())
+    with mock.patch.object(images, "_SUB_BATCH_BYTES", budget):
+        out = pa.Table.from_batches(list(images._check_batches(iter([batch]))))
+    assert out.column("image_id").to_pylist() == [r["image_id"] for r in damaged]
+    got = list(zip(*(out.column(f).to_pylist() for f in ("psnr_ok", "caption_ok", "phash_ok"))))
+    want = [_reference_flags(r) for r in damaged]
+    assert got == want
+    for (_, kind, _), flags in zip(rows, got):
+        if kind in ("none", "id_zeros"):
+            assert flags == (True, True, True)
+
+
+def test_batch_checker_isolates_a_raising_row(monkeypatch):
+    """A sub-batch the kernel cannot finish is rerun one row at a time:
+    rows that pass alone keep their flags, a row that still raises fails
+    all three."""
+    import numpy as np
+    import pyarrow as pa
+
+    from geojson_spark.sources import images
+
+    rows = images._gen_batch(np.arange(6), skew=False).drop(columns=["lon", "lat"])
+    batch = pa.RecordBatch.from_pandas(rows, schema=_image_arrow_schema(), preserve_index=False)
+    kernel = images._check_batch
+
+    def fragile(b):
+        if b.num_rows > 1 or b.column("image_id")[0].as_py() == rows.image_id[2]:
+            raise RuntimeError("unmasked damage")
+        return kernel(b)
+
+    monkeypatch.setattr(images, "_check_batch", fragile)
+    out = pa.Table.from_batches(list(images._check_batches(iter([batch])))).to_pandas()
+    assert out.image_id.tolist() == rows.image_id.tolist()
+    flags = out[["psnr_ok", "caption_ok", "phash_ok"]].to_numpy()
+    assert flags[[0, 1, 3, 4, 5]].all() and not flags[2].any()
+
+
+def test_batch_checker_float_phash_column():
+    """A phash column that arrives as float64 (a pandas frame with NaN
+    becomes a double column) fails only the rows whose value is null or
+    not an integer; an integral value compares exactly, never rounded."""
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+
+    from geojson_spark.sources import images
+
+    rows = images._gen_batch(np.arange(3), skew=False).drop(columns=["lon", "lat"])
+    stored = rows.phash.tolist()
+    flat = {"image_id": "imgXYZ", "bytes": b"\x07" * 192, "w": 8, "h": 8, "fmt": "raw",
+            "caption": "", "phash": 0}  # a constant image hashes to 0
+    rows = pd.concat([rows, pd.DataFrame([flat])], ignore_index=True)
+    rows["phash"] = [np.nan, stored[1] + 0.5, float(stored[2]), 0.0]
+    (batch,) = pa.Table.from_pandas(rows, preserve_index=False).to_batches()
+    assert batch.schema.field("phash").type == pa.float64()
+    out = pa.Table.from_batches(list(images._check_batches(iter([batch]))))
+    assert out.column("psnr_ok").to_pylist() == [True, True, True, False]
+    assert out.column("caption_ok").to_pylist() == [True, True, True, False]
+    assert out.column("phash_ok").to_pylist() == [
+        False, False, float(stored[2]) == stored[2], True]
+
+
+def test_gen_batch_matches_per_row_reference():
+    """The batched generator equals the per-row definition byte for byte
+    in every column, over ids covering all 625 (w, h) shapes in each of
+    the 3 formats."""
+    import numpy as np
+    import pandas as pd
+
+    from geojson_spark.sources.images import (
+        _gen_batch,
+        _pixels_for,
+        _splitmix64,
+        average_phash,
+        caption_for,
+        decode_image,
+        encode_image,
+        lonlat_for,
+    )
+
+    cand = np.arange(60_000, dtype=np.int64)
+    hc = _splitmix64(cand.astype(np.uint64))
+    key = ((hc % np.uint64(25)) * np.uint64(25) + (hc >> np.uint64(8)) % np.uint64(25)) * np.uint64(3)
+    key = key.astype(np.int64) + cand % 3
+    _, first = np.unique(key, return_index=True)
+    assert first.size == 625 * 3
+    ids = cand[np.sort(first)]
+
+    got = _gen_batch(ids, skew=True)
+    hashes = _splitmix64(ids.astype(np.uint64))
+    lon, lat = lonlat_for(hashes, True)
+    rows = []
+    for k, i in enumerate(ids.tolist()):
+        x = int(hashes[k])
+        w, h = 8 + x % 25, 8 + (x >> 8) % 25
+        fmt = ["raw", "rle", "q8"][i % 3]
+        buf = encode_image(_pixels_for(i, w, h), fmt)
+        rows.append({"image_id": f"img{i:012d}", "bytes": buf, "w": w, "h": h, "fmt": fmt,
+                     "caption": caption_for(i, x),
+                     "phash": average_phash(decode_image(buf, fmt, w, h), w, h),
+                     "lon": lon[k], "lat": lat[k]})
+    want = pd.DataFrame(rows, columns=got.columns)
+    for c in got.columns:
+        assert got[c].tolist() == want[c].tolist(), c

@@ -222,6 +222,45 @@ def test_pip_broadcast_probe_empty_hash_sample(spark, monkeypatch):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
+def test_pip_broadcast_probe_plan_shape(spark, monkeypatch):
+    # The two-step probe's bare count must plan no Python UDF (Catalyst
+    # prunes the side to a scan), and the sampled stats step's hash
+    # modulus must leave at most 2048 expected rows: 3000 polygons need a
+    # modulus of 2, not 3000 // 2048 = 1 (a full-side "sample").
+    import re
+
+    n = 3000
+    polys = spark.createDataFrame(
+        pd.DataFrame([_square_poly(f"p{j}", (j % 60) * 2.0 - 60.0, (j // 60) * 2.0 - 60.0, 0.5)
+                      for j in range(n)])
+    )
+    pts = spark.createDataFrame(pd.DataFrame({"pt_id": [1], "lon": [-59.75], "lat": [-59.75]}))
+    plans = {"count": [], "first": []}
+    cls = type(polys)
+
+    def recording(name):
+        original = getattr(cls, name)
+
+        def call(self, *args, **kwargs):
+            qe = self._jdf.queryExecution()  # analyzed: before a local filter folds away
+            plans[name].append(qe.executedPlan().toString() + qe.analyzed().toString())
+            return original(self, *args, **kwargs)
+
+        return call
+
+    for name in plans:
+        monkeypatch.setattr(cls, name, recording(name))
+    joined = pip_join(pts, polys)
+    monkeypatch.undo()
+    assert [r.poly_id for r in joined.collect()] == ["p0"]
+    assert len(plans["count"]) == 1
+    assert not any(tok in plans["count"][0] for tok in ("ArrowEvalPython", "BatchEvalPython"))
+    (stats,) = plans["first"]  # the sample is big enough: no exact re-measure
+    assert "ArrowEvalPython" in stats or "BatchEvalPython" in stats
+    (mod,) = re.findall(r"pmod\(xxhash64\(poly_id#\d+, 42\), cast\((\d+) as bigint\)\)", stats)
+    assert n / int(mod) <= 2048
+
+
 @pytest.mark.parametrize("metric", ["haversine", "euclidean_deg2"])
 def test_knn_exact_vs_bruteforce(spark, images, metric):
     queries = spark.createDataFrame(
@@ -418,3 +457,21 @@ def test_verify_invariants_counts_corruption_instead_of_crashing(spark):
     assert len(bad_psnr) == 1
     assert (~out.caption_ok).sum() == 1
     assert out.psnr_ok.sum() == 29
+
+
+def test_verify_invariants_null_phash_fails_only_its_flag(spark):
+    """A null phash fails that row's phash_ok and nothing else. Through
+    pandas, a nullable bigint batch holding a null arrives as float64,
+    which rounded every other 64-bit phash in the batch."""
+    from geojson_spark.sources.images import generate_images, verify_invariants
+
+    imgs = generate_images(spark, 8, partitions=1)
+    first = imgs.select(F.min("image_id")).first()[0]
+    broken = imgs.withColumn(
+        "phash",
+        F.when(F.col("image_id") == first, F.lit(None).cast("long")).otherwise(F.col("phash")),
+    )
+    out = verify_invariants(broken).toPandas().set_index("image_id")
+    assert len(out) == 8
+    assert out.psnr_ok.all() and out.caption_ok.all()
+    assert out.index[~out.phash_ok].tolist() == [first]
