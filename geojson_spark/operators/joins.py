@@ -18,8 +18,11 @@ Scale notes (100 TB design point):
   whose cover fits ``max_cover_cells``, so a continent-sized polygon costs
   ~1k join keys instead of 10^8 level-13 cells; points join each level via
   pure-bit-arithmetic ancestor keys (no UDF, no extra shuffle).
-- kNN ring-expansion is Column-only (two sequence-explodes per query);
-  the guarantee check + brute-force fallback touches only unsatisfied
+- kNN ring-expansion is Column-only (two sequence-explodes per query).
+  The auto ring coarsens the cells instead of widening the ring, so an
+  auto-sized query explodes to at most 81 cells whatever the density; the
+  completeness check is a window over the re-rank's own partitioning (no
+  extra exchange), and the brute-force fallback touches only unsatisfied
   queries (usually none), so the crossJoin never sees the big table.
 """
 
@@ -57,6 +60,12 @@ PIP_BROADCAST_MAX_ROWS = 4_000_000
 # blow Spark's ~8 GB broadcast ceiling long before the row gate fires.
 # 1 GiB leaves headroom for the hash relation's ~2x build overhead.
 PIP_BROADCAST_MAX_BYTES = 1 << 30
+
+# knn_join's auto sizing: the largest ring it plans, and the coarsest cell
+# (64°) it halves down to. Halving keeps the cell arithmetic exact and the
+# ids inside the GRID_K packing.
+_AUTO_RING_MAX = 4
+_AUTO_CPD_MIN = 1.0 / 64
 
 
 # ---------------------------------------------------------------------------
@@ -354,7 +363,7 @@ def pip_join(
     return refined.drop(*drop)
 
 
-def _grid_ring(queries: DataFrame, cols, q_lon: str, q_lat: str, cpd: int,
+def _grid_ring(queries: DataFrame, cols, q_lon: str, q_lat: str, cpd: float,
                rx: int | Column, ry: int | Column) -> DataFrame:
     """``cols`` of each query, one row per grid cell within Chebyshev
     radius ``rx`` (lon) / ``ry`` (lat) of the query's cell, keyed
@@ -364,7 +373,7 @@ def _grid_ring(queries: DataFrame, cols, q_lon: str, q_lat: str, cpd: int,
     gx = F.floor((F.col(q_lon) + 180.0) * cpd).cast("bigint")
     gy = F.floor((F.col(q_lat) + 90.0) * cpd).cast("bigint")
     # two sequence-explodes instead of a (2r+1)^2 literal array: plan size
-    # stays O(1) in the ring radius (auto rings can reach r~20)
+    # stays O(1) in the ring radius (distance_join radii reach max_ring)
     return (
         queries.select(*cols, gx.alias("_gx"), gy.alias("_gy"),
                        F.explode(F.sequence(-rx, rx)).alias("_dx"))
@@ -382,9 +391,11 @@ def _topk(cand, queries, points, k, dist, bound, safe, out_cols, names) -> DataF
     ``bound=None`` returns the ring answer as is. Otherwise a query's
     answer is provably complete iff it has ≥ k candidates, its k-th
     distance ≤ ``bound`` (the minimum possible distance to any point
-    outside the ring) and ``safe`` holds; the rest are re-solved by brute
-    force — an anti-joined, usually-empty residual crossJoined with
-    ``points``. ``names`` = (q_id, p_id, q_lon, q_lat, p_lon, p_lat)."""
+    outside the ring) and ``safe`` holds. That test is a window over the
+    query's top-k rows, on the partitioning the re-rank already has; the
+    rest are re-solved by brute force — an anti-joined, usually-empty
+    residual crossJoined with ``points``.
+    ``names`` = (q_id, p_id, q_lon, q_lat, p_lon, p_lat)."""
     from pyspark.sql.window import Window
 
     dist_name, dist_col = dist
@@ -398,21 +409,36 @@ def _topk(cand, queries, points, k, dist, bound, safe, out_cols, names) -> DataF
     topk = rank(cand)
     if bound is None:
         return topk.select(*out_cols)
-    # topk feeds three consumers (bound stats, the complete join, the
-    # residual anti-join) — eager localCheckpoint materializes it once AND
-    # lets the ContextCleaner reclaim the blocks when the DataFrame is
-    # GC'd (a .cache() here would leak storage across repeated calls)
-    topk = topk.localCheckpoint(eager=True)
-    ok = (
-        topk.groupBy(q_id, q_lon, q_lat)
-        .agg(F.count("*").alias("n_cand"), F.max(dist_name).alias("kth"))
-        .where((F.col("n_cand") >= k) & (F.col("kth") <= bound) & safe)
-        .select(q_id)
-    )
-    complete = topk.join(F.broadcast(ok), q_id)
-    residual = queries.join(F.broadcast(ok), q_id, "left_anti").select(q_id, q_lon, q_lat)
+    # partitioned like w and already sorted by q_id: no exchange, no sort
+    per_q = Window.partitionBy(q_id)
+    ok = (F.count(F.lit(1)).over(per_q) >= k) & (F.max(dist_name).over(per_q) <= bound) & safe
+    # topk feeds two consumers (the complete rows, the residual anti-join)
+    # — eager localCheckpoint materializes it once AND lets the
+    # ContextCleaner reclaim the blocks when the DataFrame is GC'd (a
+    # .cache() here would leak storage across repeated calls)
+    topk = topk.withColumn("_ok", ok).localCheckpoint(eager=True)
+    complete = topk.where("_ok")
+    done = complete.where(F.col("rn") == 1).select(q_id)
+    residual = queries.join(F.broadcast(done), q_id, "left_anti").select(q_id, q_lon, q_lat)
     brute = rank(residual.crossJoin(points.select(p_id, p_lon, p_lat)))
     return complete.select(*out_cols).unionByName(brute.select(*out_cols))
+
+
+def _auto_ring(n_points: int, k: int, cpd: float) -> tuple[int, float]:
+    """``(ring, cpd)`` for ``knn_join(ring="auto")``: the smallest ring
+    whose (2r+1)² cells hold ≥ 4k points at the global density, at the
+    finest cell size — ``cpd`` halved as often as needed — where that ring
+    is ≤ ``_AUTO_RING_MAX``. At the ``_AUTO_CPD_MIN`` floor the ring is
+    clamped instead: ring 4 of 64° cells spans every latitude and ≥ 256°
+    of longitude each way, and the completeness bound re-solves any query
+    the ring still misses."""
+    while True:
+        density = max(n_points / ((360 * cpd) * (180 * cpd)), 1e-12)
+        # (2r+1)^2 * density >= 4k  =>  r >= (sqrt(4k/density) - 1) / 2
+        ring = max(1, int(np.ceil((np.sqrt(4.0 * k / density) - 1.0) / 2.0)))
+        if ring <= _AUTO_RING_MAX or cpd / 2 < _AUTO_CPD_MIN:
+            return min(ring, _AUTO_RING_MAX), cpd
+        cpd /= 2
 
 
 def knn_join(
@@ -443,20 +469,20 @@ def knn_join(
     Queries failing the bound (or with <k candidates) are re-solved by
     brute force — an anti-joined, usually-empty residual.
 
-    ``ring="auto"`` sizes the ring from the measured global point density
-    so the expected candidate count is ~4k per query: a too-small ring
-    sends every query down the brute-force fallback (the ring join finds
-    <k candidates), which at cluster scale is the difference between an
-    equi-join and a crossJoin over the whole point table. The density probe
-    is one cheap count() (parquet row-group metadata).
+    ``ring="auto"`` sizes the cells, not just the ring, from the measured
+    global point density so the expected candidate count is ~4k per query:
+    ``cpd`` is then the finest cell size, halved until a ring of ≤ 4 cells
+    reaches that count (``_auto_ring``). A too-small ring sends every query
+    down the brute-force fallback (the ring join finds <k candidates),
+    which at cluster scale is the difference between an equi-join and a
+    crossJoin over the whole point table; a wide ring of fine cells
+    broadcasts (2r+1)² rows per query. The density probe is one cheap
+    count() (parquet row-group metadata). Exact answers do not depend on
+    the sizing; ``exact=False`` ring answers do, and may differ between
+    sizings. An explicit int ``ring`` uses ``cpd`` as given.
     """
     if ring == "auto":
-        n_points = points.count()
-        total_cells = (360 * cpd) * (180 * cpd)
-        density = max(n_points / total_cells, 1e-12)
-        # (2r+1)^2 * density >= 4k  =>  r >= (sqrt(4k/density) - 1) / 2
-        ring = int(np.ceil((np.sqrt(4.0 * k / density) - 1.0) / 2.0))
-        ring = max(1, min(ring, 24))
+        ring, cpd = _auto_ring(points.count(), k, cpd)
 
     cell_deg = 1.0 / cpd
     if metric == "haversine":
