@@ -186,7 +186,9 @@ def tiling_job(spark, images_path: str, ckpt_dir: str | None = None) -> int:
         )
     polys_df = spark.createDataFrame(pd.DataFrame(polys))
 
-    # cache the assignment so the S2 UDF runs once for both consumers
+    # cache the assignment for the tile rollup and the lineage metrics;
+    # pip_join(index="s2") does not read cell13 — it recomputes the
+    # level-13 leaf from lon/lat, so the S2 UDF runs twice per image
     assigned = images.withColumn(
         "cell13", s2_cell_udf(13)(F.col("lon"), F.col("lat"))
     ).cache()

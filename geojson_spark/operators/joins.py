@@ -18,6 +18,17 @@ Scale notes (100 TB design point):
   whose cover fits ``max_cover_cells``, so a continent-sized polygon costs
   ~1k join keys instead of 10^8 level-13 cells; points join each level via
   pure-bit-arithmetic ancestor keys (no UDF, no extra shuffle).
+- PIP ships each polygon's geometry once. A polygon side of at most
+  ``_PIP_EXACT_ROWS`` rows and ``_PIP_EXACT_BYTES`` of coords is planned on
+  the driver: two bounded collects (sizes first, then the geometry; no
+  Spark job for a local relation), exact covers from the same NumPy
+  functions the cover UDFs run, and a broadcast decision from the exact
+  cover rows and bytes. Its cover rows carry only cell keys and ids; the
+  geometry rides in the refine UDF's closure as one flat edge table.
+  Larger sides keep a bounded sampled probe and carry their coords on
+  every cover row. Grid covers explode per cell column, not per cell, on
+  both paths. Both refine with one segmented NumPy ray cast, in bounded
+  point×edge chunks — no per-polygon loop.
 - kNN ring-expansion is Column-only (two sequence-explodes per query).
   The auto ring coarsens the cells instead of widening the ring, so an
   auto-sized query explodes to at most 81 cells whatever the density; the
@@ -34,10 +45,17 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, BooleanType, LongType
+from pyspark.sql.types import (
+    ArrayType,
+    BooleanType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from geojson_spark.functions import cells as _cells
-from geojson_spark.functions.geometry import EARTH_RADIUS_KM, points_in_polygon
+from geojson_spark.functions.geometry import EARTH_RADIUS_KM, polygon_cover_cells
 from geojson_spark.functions.spark_funcs import (
     GRID_K,
     grid_cell,
@@ -52,14 +70,34 @@ from geojson_spark.functions.spark_funcs import (
 # old radius in the ring-completeness bounds if the constant ever changed
 KM_PER_DEG_LAT = 2.0 * _math.pi * EARTH_RADIUS_KM / 360.0
 
-# adaptive-broadcast budget for pip_join, in *exploded* (poly, cell) rows —
-# the thing actually shipped to every executor
+# adaptive-broadcast budget for pip_join, in *exploded* cover rows — the
+# thing actually shipped to every executor
 PIP_BROADCAST_MAX_ROWS = 4_000_000
-# ... and in estimated exploded bytes: every exploded row ships the
-# polygon's full coords array, so 4M rows of multi-KB coastlines would
-# blow Spark's ~8 GB broadcast ceiling long before the row gate fires.
-# 1 GiB leaves headroom for the hash relation's ~2x build overhead.
+# ... and in estimated bytes shipped to every executor. On the large-side
+# path every exploded row carries the polygon's full coords array, so 4M
+# rows of multi-KB coastlines would blow Spark's ~8 GB broadcast ceiling
+# long before the row gate fires; on the small-side path it is the cover
+# rows plus the edge table. 1 GiB leaves headroom for the hash relation's
+# ~2x build overhead.
 PIP_BROADCAST_MAX_BYTES = 1 << 30
+
+# pip_join plans a polygon side of at most this many rows on the driver;
+# the probe of a larger side measures a hash sample of about this many rows
+_PIP_EXACT_ROWS = 2048
+# ... if its coords take at most this many bytes: the driver holds them as
+# Python lists (~4x) and every refine task unpickles their edge table
+# (~2x) from the UDF's closure
+_PIP_EXACT_BYTES = 1 << 24
+# hashed-relation bytes per broadcast cover row on the small-side path:
+# the row (≤ 5 fields), its next pointer and its index slot
+_PIP_COVER_ROW_BYTES = 64
+# point×edge pairs per ray-cast step, and coords per large-side edge table:
+# bounds the refine's temporaries whatever the batch and polygon sizes
+_PIP_PAIR_CHUNK = 1 << 20
+# columns pip_join adds next to the points' own (lower case: Spark
+# resolves names case-insensitively)
+_PIP_INTERNAL = ("cell_id", "_leaf", "_gy", "_gy0", "_gy1", "_pip_idx", "poly_id", "coords",
+                 "ring_offsets", "dim")
 
 # knn_join's auto sizing: the largest ring it plans, and the coarsest cell
 # (64°) it halves down to. Halving keeps the cell arithmetic exact and the
@@ -69,52 +107,67 @@ _AUTO_CPD_MIN = 1.0 / 64
 
 
 # ---------------------------------------------------------------------------
-# polygon covers
+# polygon covers — one NumPy function per index, run by the cover UDFs on
+# the large-side path and on the driver for small sides
 # ---------------------------------------------------------------------------
 
 
 GRID_FACTORS = (1, 8, 64, 512)  # coarsening factors for large polygons
 
 
-def _grid_cover(bbox: np.ndarray, cpd: int, factor: int) -> np.ndarray:
-    """Exact grid cover of a bbox at coarsening ``factor`` — integer ranges,
-    no sampling, no truncation."""
-    gx0 = int(np.floor((bbox[0] + 180.0) * cpd)) // factor
-    gx1 = int(np.floor((bbox[2] + 180.0) * cpd)) // factor
-    gy0 = int(np.floor((bbox[1] + 90.0) * cpd)) // factor
-    gy1 = int(np.floor((bbox[3] + 90.0) * cpd)) // factor
-    gx = np.arange(gx0, gx1 + 1, dtype=np.int64)
-    gy = np.arange(gy0, gy1 + 1, dtype=np.int64)
-    return (gx[:, None] * GRID_K + gy[None, :]).ravel()
+def _grid_cover(bbox, cpd: int, max_cover_cells: int):
+    """Exact grid cover of one bbox as integer ranges ``(fi, gx0, gx1, gy0,
+    gy1)`` at the smallest coarsening factor ``GRID_FACTORS[fi]`` whose
+    cover fits ``max_cover_cells`` — no sampling, no truncation, and a
+    hemisphere costs ~hundreds of keys, never a silent cap. None for a
+    missing bbox."""
+    if bbox is None or len(bbox) < 4:
+        return None
+    bb = np.asarray(bbox, dtype=np.float64)
+    fi = len(GRID_FACTORS) - 1
+    for i, f in enumerate(GRID_FACTORS):
+        nx = (bb[2] - bb[0]) * cpd / f + 2
+        ny = (bb[3] - bb[1]) * cpd / f + 2
+        if nx * ny <= max_cover_cells:
+            fi = i
+            break
+    f = GRID_FACTORS[fi]
+    gx0 = int(np.floor((bb[0] + 180.0) * cpd)) // f
+    gx1 = int(np.floor((bb[2] + 180.0) * cpd)) // f
+    gy0 = int(np.floor((bb[1] + 90.0) * cpd)) // f
+    gy1 = int(np.floor((bb[3] + 90.0) * cpd)) // f
+    return fi, gx0, gx1, gy0, gy1
+
+
+_GRID_RANGE = ("_fi", "gx0", "gx1", "gy0", "gy1")
 
 
 def grid_cover_udf(cpd: int = 8, max_cover_cells: int = 4096):
-    """bbox → array of factor-tagged grid cells (key = cell·8 + factor_idx;
-    grid ids at different factors collide numerically, so keys carry the
-    factor). Each polygon picks the smallest coarsening factor whose cover
-    fits the budget — a hemisphere costs ~hundreds of keys, never a silent
-    cap."""
+    """bbox → the polygon's ``_grid_cover`` as a struct of ``_GRID_RANGE``
+    (null fields for a missing bbox)."""
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def _cover(bbox: pd.Series) -> pd.Series:
-        covers = []
-        for b in bbox:
-            if b is None or len(b) < 4:
-                covers.append([])
-                continue
-            bb = np.asarray(b, dtype=np.float64)
-            fi = len(GRID_FACTORS) - 1
-            for i, f in enumerate(GRID_FACTORS):
-                nx = (bb[2] - bb[0]) * cpd / f + 2
-                ny = (bb[3] - bb[1]) * cpd / f + 2
-                if nx * ny <= max_cover_cells:
-                    fi = i
-                    break
-            cells = _grid_cover(bb, cpd, GRID_FACTORS[fi])
-            covers.append((cells * 8 + fi).tolist())
-        return pd.Series(covers)
+    @F.pandas_udf("_fi int, gx0 bigint, gx1 bigint, gy0 bigint, gy1 bigint")
+    def _cover(bbox: pd.Series) -> pd.DataFrame:
+        rows = [_grid_cover(b, cpd, max_cover_cells) or (None,) * 5 for b in bbox]
+        return pd.DataFrame(rows, columns=list(_GRID_RANGE), dtype="Int64")
 
     return _cover
+
+
+def _explode_grid_cover(ranges: DataFrame, cols) -> DataFrame:
+    """``cols`` of each ``_GRID_RANGE`` row, one row per grid column of the
+    range: ``cell_id = gx·8 + fi`` (grid ids at different factors collide
+    numerically, so keys carry the factor) and the column's row range
+    ``_gy0``..``_gy1``, which the join checks against the point's row. A
+    (cell, polygon) explode of 64.8k cells built a 4 MiB hashed relation
+    (64k distinct keys double both its index and its row page); their
+    3.2k columns build one 1 MiB page."""
+    # an inverted bbox covers nothing (its sequence would raise)
+    ok = (F.col("gx1") >= F.col("gx0")) & (F.col("gy1") >= F.col("gy0"))
+    fi = F.col("_fi").cast("bigint")
+    keys = F.sequence(F.col("gx0") * 8 + fi, F.col("gx1") * 8 + fi, F.lit(8).cast("bigint"))
+    return ranges.select(*cols, F.col("gy0").alias("_gy0"), F.col("gy1").alias("_gy1"),
+                         F.explode(F.when(ok, keys)).alias("cell_id"))
 
 
 def _s2_edge_deg(level: int) -> float:
@@ -128,44 +181,40 @@ def _s2_edge_deg(level: int) -> float:
 S2_COVER_LEVELS = (13, 10, 7, 4)
 
 
-def s2_cover_udf(levels=S2_COVER_LEVELS, max_cover_cells: int = 1024):
-    """bbox array → array<cell>: per-polygon cover at the finest ladder
-    level whose cover fits ``max_cover_cells``. Cell ids self-encode their
-    level (trailing bit), so one array carries the multi-level cover.
-    Samples the bbox at half-cell pitch; over-approximation is refined by
-    exact PIP after the join."""
+def _s2_cover(bbox, levels, max_cover_cells: int) -> np.ndarray:
+    """S2 cover of one bbox at the finest ladder level whose cover fits
+    ``max_cover_cells``; empty for a missing bbox. Cell ids self-encode
+    their level (trailing bit), so one array carries the multi-level
+    cover. Samples the bbox at quarter-cell pitch; over-approximation is
+    refined by exact PIP after the join."""
+    if bbox is None or len(bbox) < 4:
+        return np.empty(0, dtype=np.int64)
+    b = np.asarray(bbox, dtype=np.float64)
+    span = max(b[2] - b[0], b[3] - b[1], 1e-9)
+    level = levels[-1]
+    for lv in levels:  # finest → coarsest
+        if (span / _s2_edge_deg(lv)) ** 2 * 4 <= max_cover_cells:
+            level = lv
+            break
+    # quarter-edge pitch: worst-case sheared cells near face corners have
+    # an inscribed axis-aligned square of only ~0.42·edge, so a half-edge
+    # lattice could MISS a covering cell entirely — an under-approximation
+    # would silently drop points, not just widen candidates
+    return polygon_cover_cells(
+        b.tolist(),
+        lambda lo, la: _cells.s2_cell_id(
+            np.clip(lo, -180, 180), np.clip(la, -89.999, 89.999), level
+        ),
+        _s2_edge_deg(level) / 4.0,
+    )
 
-    from geojson_spark.functions.geometry import polygon_cover_cells
+
+def s2_cover_udf(levels=S2_COVER_LEVELS, max_cover_cells: int = 1024):
+    """bbox array → array<cell>: the polygon's ``_s2_cover``."""
 
     @F.pandas_udf(ArrayType(LongType()))
     def _cover(bbox: pd.Series) -> pd.Series:
-        covers = []
-        for b in bbox:
-            if b is None or len(b) < 4:
-                covers.append([])
-                continue
-            b = np.asarray(b, dtype=np.float64)
-            span = max(b[2] - b[0], b[3] - b[1], 1e-9)
-            level = levels[-1]
-            for lv in levels:  # finest → coarsest
-                if (span / _s2_edge_deg(lv)) ** 2 * 4 <= max_cover_cells:
-                    level = lv
-                    break
-            # quarter-edge pitch: worst-case sheared cells near face
-            # corners have an inscribed axis-aligned square of only
-            # ~0.42·edge, so a half-edge lattice could MISS a covering
-            # cell entirely — an under-approximation would silently drop
-            # points, not just widen candidates
-            step = _s2_edge_deg(level) / 4.0
-            cover = polygon_cover_cells(
-                b.tolist(),
-                lambda lo, la, lv=level: _cells.s2_cell_id(
-                    np.clip(lo, -180, 180), np.clip(la, -89.999, 89.999), lv
-                ),
-                step,
-            )
-            covers.append(cover.tolist())
-        return pd.Series(covers)
+        return pd.Series([_s2_cover(b, levels, max_cover_cells).tolist() for b in bbox])
 
     return _cover
 
@@ -175,50 +224,134 @@ def s2_cover_udf(levels=S2_COVER_LEVELS, max_cover_cells: int = 1024):
 # ---------------------------------------------------------------------------
 
 
-def pip_refine_udf():
-    """(px, py, poly_id, coords, ring_offsets, dim) → bool, vectorized per
-    polygon.
+def _edge_table(coords, ring_offsets, dims) -> tuple:
+    """Flat edge table of n polygons, each given as flat ``coords``,
+    ``ring_offsets`` (non-negative, in vertices) and ``dim``.
 
-    Rows inside an Arrow batch are grouped by ``poly_id`` — the join key,
-    unique per polygon — so each polygon's edge array is built once and all
-    its candidate points go through one NumPy ray-casting call (north rule:
-    'ray-casting over sorted edge lists per cell'). Grouping by id rather
-    than a coords signature avoids collisions between distinct polygons
-    that share vertex count + first vertex (common in tiled/gridded
-    data)."""
+    Returns ``(x1, y1, y2, slope, off)``: per edge the values
+    ``points_in_ring`` derives (every ring of the polygon, even-odd; a
+    ring's duplicated closing vertex dropped; rings spanning < 3 offsets
+    skipped), and polygon i owns edges ``off[i]:off[i + 1]``. A polygon
+    with null or empty coords, null ring offsets or dim < 2 has no edges,
+    so it contains nothing; a null dim reads 2. Vectorized over polygons:
+    the only per-polygon Python unpacks the arrays."""
+    n = len(coords)
+    dim = pd.Series(dims, dtype="float64").fillna(2).to_numpy().astype(np.int64)
+    cs = [None if c is None else np.asarray(c, dtype=np.float64) for c in coords]
+    rs = [None if r is None else np.asarray(r, dtype=np.int64) for r in ring_offsets]
+    keep = np.flatnonzero(
+        np.array([c is not None and c.size > 0 and r is not None for c, r in zip(cs, rs)], dtype=bool)
+        & (dim >= 2)
+    )
+    off = np.zeros(n + 1, dtype=np.int64)
+    if keep.size == 0:
+        none = np.empty(0, dtype=np.float64)
+        return none, none, none, none, off
+    flat = np.concatenate([cs[i] for i in keep])
+    lens = np.array([cs[i].size for i in keep], dtype=np.int64)
+    d = dim[keep]
+    base = np.cumsum(lens) - lens  # each polygon's first coord in flat
+    nv = (lens + d - 2) // d  # vertices that have both x and y
+    ro = [rs[i] for i in keep]
+    rl = np.array([r.size for r in ro], dtype=np.int64)
+    flat_ro = np.concatenate(ro)
+    # rings: polygon p's offsets pair up as (ro[j], ro[j + 1])
+    nr = np.maximum(rl - 1, 0)
+    rp = np.repeat(np.arange(keep.size), nr)
+    j = np.arange(nr.sum()) - np.repeat(np.cumsum(nr) - nr - (np.cumsum(rl) - rl), nr)
+    a, b = flat_ro[j], flat_ro[j + 1]
+    lo = np.clip(a, 0, nv[rp])  # xs[a:b] clips to the vertices present
+    m = np.where(b - a >= 3, np.maximum(np.clip(b, 0, nv[rp]) - lo, 0), 0)
+    rb, rd = base[rp], d[rp]
+    first, last = rb + lo * rd, rb + (lo + m - 1) * rd
+    closed = np.flatnonzero(m > 1)
+    m[closed] -= (flat[first[closed]] == flat[last[closed]]) & (
+        flat[first[closed] + 1] == flat[last[closed] + 1]
+    )
+    # a one-vertex ring's only edge has y1 == y2: it never crosses
+    m[m < 2] = 0
+    er = np.repeat(np.arange(m.size), m)
+    t = np.arange(m.sum()) - np.repeat(np.cumsum(m) - m, m)
+    i1 = rb[er] + (lo[er] + t) * rd[er]
+    i2 = rb[er] + (lo[er] + (t + 1) % m[er]) * rd[er]
+    x1, y1 = flat[i1], flat[i1 + 1]
+    x2, y2 = flat[i2], flat[i2 + 1]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        slope = (x2 - x1) / (y2 - y1)
+    off[1:] = np.cumsum(np.bincount(keep[rp[er]], minlength=n))
+    return x1, y1, y2, slope, off
+
+
+def _ray_cast(px, py, poly, table, chunk: int = _PIP_PAIR_CHUNK) -> np.ndarray:
+    """Segmented even-odd ray cast: ``inside[i]`` iff point ``(px[i],
+    py[i])`` lies in polygon ``poly[i]`` of ``table`` (``_edge_table``).
+    Every point×edge pair goes through one NumPy pass, ``chunk`` pairs at
+    a time (a chunk may split a point's edges), with the IEEE operations
+    of ``points_in_ring`` — bit-identical to ``points_in_polygon``."""
+    x1, y1, y2, slope, off = table
+    n = px.shape[0]
+    cnt = off[poly + 1] - off[poly]
+    end = np.cumsum(cnt)
+    shift = off[poly] + cnt - end  # pair k of point c is edge k + shift[c]
+    hits = np.zeros(n, dtype=np.int64)
+    for s in range(0, int(end[-1]) if n else 0, chunk):
+        k = np.arange(s, min(s + chunk, end[-1]))
+        c = np.searchsorted(end, k, side="right")
+        e = k + shift[c]
+        cy = py[c]
+        ey = y1[e]
+        with np.errstate(invalid="ignore"):
+            # horizontal edges give inf/nan slope; the crossing test is False there
+            hit = ((ey > cy) != (y2[e] > cy)) & (px[c] < x1[e] + (cy - ey) * slope[e])
+        hits[c[0] : c[-1] + 1] += np.bincount(c[hit] - c[0], minlength=c[-1] + 1 - c[0])
+    return hits % 2 == 1
+
+
+def _refine_udf(table):
+    """(lon, lat, poly index) → inside, against the small-side path's edge
+    table. The table rides in the UDF's closure, so each task receives the
+    geometry once (PySpark broadcasts a command over 1 MB itself)."""
+
+    @F.pandas_udf(BooleanType())
+    def _refine(px: pd.Series, py: pd.Series, poly: pd.Series) -> pd.Series:
+        return pd.Series(
+            _ray_cast(px.to_numpy(np.float64), py.to_numpy(np.float64), poly.to_numpy(np.int64), table)
+        )
+
+    return _refine
+
+
+def _refine_rows(px, py, coords, ring_offsets, dims, chunk: int = _PIP_PAIR_CHUNK) -> np.ndarray:
+    """``inside[i]`` iff point i lies in polygon row i (the large-side
+    path: every candidate row carries its polygon). Rows go through
+    ``_ray_cast`` in slices of at most ``chunk`` coords (a row larger than
+    that alone), so a batch of candidates of one large polygon holds one
+    slice's edge table, never one per row of the batch."""
+    n = len(px)
+    ends = np.cumsum([0 if c is None else len(c) for c in coords])
+    out = np.zeros(n, dtype=bool)
+    lo = 0
+    while lo < n:
+        base = ends[lo - 1] if lo else 0
+        hi = max(lo + 1, int(np.searchsorted(ends, base + chunk, side="right")))
+        table = _edge_table(coords[lo:hi], ring_offsets[lo:hi], dims[lo:hi])
+        out[lo:hi] = _ray_cast(px[lo:hi], py[lo:hi], np.arange(hi - lo), table, chunk)
+        lo = hi
+    return out
+
+
+def pip_refine_udf():
+    """(px, py, coords, ring_offsets, dim) → bool for candidate rows that
+    carry their polygon (the large-side path): row i is tested against its
+    own polygon only, so two polygons that share a ``poly_id`` or a vertex
+    signature never mix."""
 
     @F.pandas_udf(BooleanType())
     def _refine(
-        px: pd.Series,
-        py: pd.Series,
-        poly_id: pd.Series,
-        coords: pd.Series,
-        ring_offsets: pd.Series,
-        dim: pd.Series,
+        px: pd.Series, py: pd.Series, coords: pd.Series, ring_offsets: pd.Series, dim: pd.Series
     ) -> pd.Series:
-        n = len(px)
-        out = np.zeros(n, dtype=bool)
-        if n == 0:
-            return pd.Series(out)
-        pxv = px.to_numpy(np.float64)
-        pyv = py.to_numpy(np.float64)
-        frame = pd.DataFrame({"i": np.arange(n)})
-        frame["sig"] = pd.factorize(poly_id.values)[0]
-        for _, grp in frame.groupby("sig", sort=False):
-            idx = grp["i"].to_numpy()
-            first = idx[0]
-            c = coords.iloc[first]
-            ro = ring_offsets.iloc[first]
-            # pd.isna, not `is None`: a NULL in a nullable bigint column
-            # arrives as NaN, and int(NaN) would crash the task instead of
-            # taking the documented dim=2 fallback
-            d = 2 if pd.isna(dim.iloc[first]) else int(dim.iloc[first])
-            if c is None or len(c) == 0 or d < 2:
-                continue
-            cv = np.asarray(c, dtype=np.float64)
-            rov = np.asarray(ro, dtype=np.int64)
-            out[idx] = points_in_polygon(pxv[idx], pyv[idx], cv, rov, d)
-        return pd.Series(out)
+        return pd.Series(_refine_rows(px.to_numpy(np.float64), py.to_numpy(np.float64),
+                                      coords.to_numpy(), ring_offsets.to_numpy(), dim.to_numpy()))
 
     return _refine
 
@@ -226,6 +359,102 @@ def pip_refine_udf():
 # ---------------------------------------------------------------------------
 # joins
 # ---------------------------------------------------------------------------
+
+
+def _collect_small_side(polygons: DataFrame):
+    """The rows ``(poly_id, bbox, coords, ring_offsets, dim)`` of a polygon
+    side of at most ``_PIP_EXACT_ROWS`` rows and ``_PIP_EXACT_BYTES`` of
+    coords; None for any other side. Two bounded collects — a local
+    relation such as ``createDataFrame(pandas)`` collects with no Spark
+    job: the first fetches only the coords sizes, so the geometry crosses
+    to the driver only when both bounds hold."""
+    side = polygons.select("poly_id", "bbox", "coords", "ring_offsets", "dim").limit(
+        _PIP_EXACT_ROWS + 1)
+    sizes = side.selectExpr("size(coords)").collect()
+    # size(null) is null or -1, depending on the session
+    if len(sizes) > _PIP_EXACT_ROWS or 8 * sum(max(s or 0, 0) for (s,) in sizes) > _PIP_EXACT_BYTES:
+        return None
+    return side.collect()
+
+
+def _small_side_cover(polygons: DataFrame, rows, index: str, cpd: int, max_cover_cells: int):
+    """The cover of a collected small side, from the cover UDFs' own
+    functions, and its row count. The cover has ``cell_id``, ``_pip_idx``
+    (the polygon's position in ``rows``) and ``poly_id`` (grid: plus the
+    column's row range), and no geometry."""
+    spark = polygons.sparkSession
+    ids = pd.Series([r.poly_id for r in rows], dtype=object)
+    fields = [StructField("_pip_idx", IntegerType()),
+              StructField("poly_id", polygons.schema["poly_id"].dataType)]
+    if index == "grid":
+        ranges = [(i, *c) for i, r in enumerate(rows)
+                  if (c := _grid_cover(r.bbox, cpd, max_cover_cells)) is not None]
+        frame = pd.DataFrame(np.array(ranges, dtype=np.int64).reshape(-1, 6),
+                             columns=["_pip_idx", *_GRID_RANGE])
+        frame.insert(1, "poly_id", ids.to_numpy()[frame["_pip_idx"].to_numpy()])
+        fields += [StructField(c, IntegerType() if c == "_fi" else LongType()) for c in _GRID_RANGE]
+        cover = _explode_grid_cover(spark.createDataFrame(frame, StructType(fields)),
+                                    ["_pip_idx", "poly_id"])
+        ok = (frame.gx1 >= frame.gx0) & (frame.gy1 >= frame.gy0)
+        return cover, int((frame.gx1 - frame.gx0 + 1)[ok].sum())
+    cells = [_s2_cover(r.bbox, S2_COVER_LEVELS, max_cover_cells) for r in rows]
+    idx = np.repeat(np.arange(len(cells)), [c.size for c in cells])
+    frame = pd.DataFrame({
+        "_pip_idx": idx,
+        "poly_id": ids.to_numpy()[idx],
+        "cell_id": np.concatenate(cells) if cells else np.empty(0, dtype=np.int64),
+    })
+    cover = spark.createDataFrame(frame, StructType([*fields, StructField("cell_id", LongType())]))
+    return cover, len(frame)
+
+
+def _broadcast_probe(polygons: DataFrame, cover_rows: Column) -> bool:
+    """Broadcast decision for a side of more than ``_PIP_EXACT_ROWS`` rows,
+    ``cover_rows`` being a polygon's exploded cover rows.
+
+    Two steps, each bounded. Step 1: a bare count — no cover UDF in the
+    plan, so Catalyst prunes every column and a side too big to broadcast
+    costs one cheap scan and nothing else (a fused count+sample
+    aggregation ran the cover UDF on ~1/16 of ALL rows even when the count
+    alone decided the answer). Step 2 (small enough sides only): cover and
+    bytes stats over a deterministic hash sample of at most
+    ``_PIP_EXACT_ROWS`` EXPECTED rows — an absolute bound on cover-UDF
+    evaluations, not a fraction that grows with the table."""
+    n_polys = polygons.count()
+    if n_polys > PIP_BROADCAST_MAX_ROWS:
+        return False
+    if n_polys == 0:
+        return True
+    bytes_expr = cover_rows * (F.size(F.col("coords")) * F.lit(8.0) + F.lit(64.0))
+    mod = -(-n_polys // _PIP_EXACT_ROWS)  # ceil: n / mod ≤ _PIP_EXACT_ROWS
+    sampled = F.pmod(F.xxhash64(F.col("poly_id")), F.lit(mod)) == 0
+
+    # E[cover·bytes], NOT E[cover]·E[bytes]: cover size and coords
+    # length are positively correlated (big polygons have both), so the
+    # product of means can undershoot by an order of magnitude on a
+    # mostly-tiny + few-coastlines mix
+    def stats(df: DataFrame):
+        return df.select(
+            F.count(F.lit(1)).alias("n"),
+            F.avg(cover_rows).alias("m"),
+            F.avg(bytes_expr).alias("pb"),
+        ).first()
+
+    probe = stats(polygons.where(sampled))
+    if probe["n"] < min(n_polys, 32):
+        # a hash sample can come up (nearly) empty — ids that all hash off
+        # residue 0 — and an empty sample's null means would read as 0
+        # bytes and approve the broadcast. Too few sampled rows → measure
+        # the whole side exactly (never reached when mod == 1: the sample
+        # IS the whole side)
+        probe = stats(polygons)
+    # per exploded row: coords doubles (8 B each) + offsets/key/id overhead
+    # (~64 B) — bounds estimated broadcast BYTES, not just rows, so a
+    # fat-coords side at modest row count still shuffles
+    return (
+        n_polys * (probe["m"] or 1.0) <= PIP_BROADCAST_MAX_ROWS
+        and n_polys * (probe["pb"] or 0.0) <= PIP_BROADCAST_MAX_BYTES
+    )
 
 
 def pip_join(
@@ -244,19 +473,44 @@ def pip_join(
 
     ``polygons`` must carry ``poly_id``, ``coords``, ``ring_offsets``,
     ``dim``, ``bbox`` (array<double> [minx,miny,maxx,maxy]). Returns points'
-    columns + ``poly_id``, one row per (point, containing polygon).
+    columns + ``poly_id``, one row per (point, containing polygon row).
+    ``points`` must not carry a column the join uses internally
+    (``_PIP_INTERNAL``: ``poly_id``, ``coords``, ``ring_offsets``, ``dim``,
+    ``cell_id`` and the ``_``-prefixed helpers); a ValueError names it.
 
-    ``broadcast_polygons=None`` (default) decides adaptively (north rule
-    'adaptive broadcast of small polygon sides'): what is broadcast is the
-    *exploded* cover, so the gate bounds estimated post-explode rows —
-    polygon count × mean cover size sampled from ≤2048 polygons — not raw
-    polygon count (a 100k-polygon side with ~1k-cell covers would be 10⁸
-    broadcast rows and OOM the driver). Small sides broadcast (points
-    never shuffle); larger sides fall back to a shuffled equi-join where
-    AQE's skew-join splitting applies.
+    Points explode to one key per cover level (S2: the leaf's ancestors;
+    grid: the cell's column at each coarsening factor, plus its row, which
+    the join checks against the cover column's row range — no id packing,
+    so any ``cpd`` works) and equi-join the polygons' cover rows.
+
+    A polygon side of at most 2048 rows and 16 MiB of coords is planned on
+    the driver (``_collect_small_side``): exact covers and no probe job.
+    Its cover rows carry cell keys, ``poly_id`` and the poly index; the
+    geometry reaches the refine once, as a flat edge table in its closure.
+    ``broadcast_polygons=None`` (default) broadcasts the cover iff its
+    exact rows and bytes (cover rows + edge table) fit the budgets.
+
+    A larger side carries its coords on every cover row, and
+    ``broadcast_polygons=None`` decides with ``_broadcast_probe`` (north
+    rule 'adaptive broadcast of small polygon sides'): what is broadcast
+    is the *exploded* cover, so the gate bounds estimated post-explode
+    rows and bytes — polygon count × mean cover size sampled from ≤2048
+    polygons — not raw polygon count (a 100k-polygon side with ~1k-cell
+    covers would be 10⁸ broadcast rows and OOM the driver). Small sides
+    broadcast (points never shuffle); a refused side is hinted to a
+    shuffled equi-join, where AQE's skew-join splitting applies.
+
+    Both paths refine with ``_ray_cast``: one segmented ray cast per Arrow
+    batch over the candidates' point×edge pairs, in fixed-size chunks.
     """
-    poly_cols = ["poly_id", "coords", "ring_offsets", "dim"]
-
+    if index not in ("grid", "s2"):
+        raise ValueError(f"unknown index {index!r}")
+    clash = [c for c in points.columns if c.lower() in _PIP_INTERNAL]
+    if clash:
+        raise ValueError(
+            f"pip_join: points column {clash[0]!r} clashes with a column the join "
+            "uses internally; rename or drop it first"
+        )
     # broadcast path = points never shuffle — which also means the
     # explode+join+refine pandas-UDF stage inherits the raw points
     # partitioning; a 1-partition small-parquet scan would run it all on
@@ -267,100 +521,58 @@ def pip_join(
 
     # One equi-join, no data-dependent driver round-trips: polygons carry a
     # cover at one level of a fixed ladder; points explode to their ancestor
-    # key at every ladder level (pure Column bit arithmetic). A polygon
-    # covers each point position at exactly one ladder level, so no
-    # duplicate pairs arise. Point-side fan-out is ladder-width (4), which
-    # a broadcast join absorbs without any shuffle.
-    if index == "grid":
-        cover_expr = grid_cover_udf(cpd, max_cover_cells)(F.col("bbox"))
-        exploded = polygons.select(*poly_cols, F.explode(cover_expr).alias("cell_id"))
-        pcell = grid_cell(F.col(lon), F.col(lat), cpd)
-        keys = []
-        for fi, f in enumerate(GRID_FACTORS):
-            c = pcell if f == 1 else grid_parent(pcell, f)
-            keys.append(c * 8 + fi)
-        pts = points.withColumn("cell_id", F.explode(F.array(*keys)))
-    elif index == "s2":
-        cover_expr = s2_cover_udf(max_cover_cells=max_cover_cells)(F.col("bbox"))
-        exploded = polygons.select(*poly_cols, F.explode(cover_expr).alias("cell_id"))
+    # key at every ladder level (pure Column arithmetic). A polygon covers
+    # each point position at exactly one ladder level, so no duplicate
+    # pairs arise. Point-side fan-out is ladder-width (4), which a
+    # broadcast join absorbs without any shuffle.
+    if index == "s2":
         pcell = s2_cell_udf(S2_COVER_LEVELS[0])(F.col(lon), F.col(lat))
+        leaf = F.col("_leaf")
         pts = points.withColumn("_leaf", pcell).withColumn(
-            "cell_id",
-            F.explode(F.array(*[s2_parent_col(F.col("_leaf"), lv) for lv in S2_COVER_LEVELS])),
+            "cell_id", F.explode(F.array(*[s2_parent_col(leaf, lv) for lv in S2_COVER_LEVELS]))
         ).drop("_leaf")
     else:
-        raise ValueError(f"unknown index {index!r}")
+        gx = F.floor((F.col(lon) + 180.0) * cpd)
+        gy = F.floor((F.col(lat) + 90.0) * cpd)
+        levels = [F.struct((F.floor(gx / f) * 8 + fi).alias("cell_id"), F.floor(gy / f).alias("_gy"))
+                  for fi, f in enumerate(GRID_FACTORS)]
+        pts = points.select("*", F.inline(F.array(*levels)))
 
-    broadcast_max_rows = PIP_BROADCAST_MAX_ROWS
-    if broadcast_polygons is None:
-        # Two-step probe, each step bounded. Step 1: a bare count — no
-        # cover UDF in the plan, so Catalyst prunes every column and a
-        # side too big to broadcast costs one cheap scan and nothing else
-        # (a fused count+sample aggregation ran the cover UDF on ~1/16 of
-        # ALL rows even when the count alone decided the answer — probe
-        # cost scaled linearly with polygon count on exactly the sides
-        # where the answer was already 'shuffle').
-        n_polys = polygons.count()
-        if n_polys > broadcast_max_rows:
-            broadcast_polygons = False
-        elif n_polys == 0:
-            broadcast_polygons = True
-        else:
-            # Step 2 (small sides only): cover/bytes stats over a
-            # deterministic hash sample of at most 2048 EXPECTED rows —
-            # an absolute bound on cover-UDF evaluations, not a fraction
-            # that grows with the table. n is known here, so the modulus
-            # adapts; sides of at most 2048 rows are measured exactly.
-            bytes_expr = F.size(cover_expr) * (
-                F.size(F.col("coords")) * F.lit(8.0) + F.lit(64.0)
-            )
-            mod = -(-n_polys // 2048)  # ceil: n / mod ≤ 2048
-            sampled = F.pmod(F.xxhash64(F.col("poly_id")), F.lit(mod)) == 0
-            # E[cover·bytes], NOT E[cover]·E[bytes]: cover size and coords
-            # length are positively correlated (big polygons have both),
-            # so the product of means can undershoot by an order of
-            # magnitude on a mostly-tiny + few-coastlines mix
-            def stats(df: DataFrame):
-                return df.select(
-                    F.count(F.lit(1)).alias("n"),
-                    F.avg(F.size(cover_expr)).alias("m"),
-                    F.avg(bytes_expr).alias("pb"),
-                ).first()
-
-            probe = stats(polygons.where(sampled))
-            if probe["n"] < min(n_polys, 32):
-                # a hash sample can come up (nearly) empty — ids that all
-                # hash off residue 0 — and an empty sample's null means
-                # would read as 0 bytes and approve the broadcast. Too few
-                # sampled rows → measure the whole side exactly (never
-                # reached when mod == 1: the sample IS the whole side)
-                probe = stats(polygons)
-            mean_cover, mean_bytes = probe["m"], probe["pb"]
-            est_rows = n_polys * (mean_cover or 1.0)
-            # per exploded row: coords doubles (8 B each) + offsets/key/id
-            # overhead (~64 B) — bounds estimated broadcast BYTES, not just
-            # rows, so a fat-coords side at modest row count still shuffles
-            est_bytes = n_polys * (mean_bytes or 0.0)
+    rows = _collect_small_side(polygons)
+    if rows is not None:
+        table = _edge_table([r.coords for r in rows], [r.ring_offsets for r in rows],
+                            [r.dim for r in rows])
+        cover, n_cover = _small_side_cover(polygons, rows, index, cpd, max_cover_cells)
+        if broadcast_polygons is None:
             broadcast_polygons = (
-                est_rows <= broadcast_max_rows
-                and est_bytes <= PIP_BROADCAST_MAX_BYTES
+                n_cover <= PIP_BROADCAST_MAX_ROWS
+                and n_cover * _PIP_COVER_ROW_BYTES + sum(a.nbytes for a in table)
+                <= PIP_BROADCAST_MAX_BYTES
             )
+        inside = _refine_udf(table)(F.col(lon), F.col(lat), F.col("_pip_idx"))
+    else:
+        poly_cols = ["poly_id", "coords", "ring_offsets", "dim"]
+        if index == "grid":
+            r = grid_cover_udf(cpd, max_cover_cells)(F.col("bbox"))
+            cover = _explode_grid_cover(polygons.select(*poly_cols, r.alias("_r")).select(
+                *poly_cols, "_r.*"), poly_cols)
+            cover_rows = F.when((r.gx1 >= r.gx0) & (r.gy1 >= r.gy0), r.gx1 - r.gx0 + 1).otherwise(0)
+        else:
+            r = s2_cover_udf(max_cover_cells=max_cover_cells)(F.col("bbox"))
+            cover = polygons.select(*poly_cols, F.explode(r).alias("cell_id"))
+            cover_rows = F.size(r)
+        if broadcast_polygons is None:
+            broadcast_polygons = _broadcast_probe(polygons, cover_rows)
+        inside = pip_refine_udf()(F.col(lon), F.col(lat), F.col("coords"), F.col("ring_offsets"),
+                                  F.col("dim"))
 
-    right = F.broadcast(exploded) if broadcast_polygons else exploded
-    joined = pts.join(right, "cell_id")
-
-    refined = joined.where(
-        pip_refine_udf()(
-            F.col(lon),
-            F.col(lat),
-            F.col("poly_id"),
-            F.col("coords"),
-            F.col("ring_offsets"),
-            F.col("dim"),
-        )
-    )
-    drop = [c for c in ("cell_id", "coords", "ring_offsets", "dim") if c in refined.columns]
-    return refined.drop(*drop)
+    # the exploded cover's size estimate is the pre-explode frame's: hint
+    # the shuffle so Catalyst cannot broadcast what the gate refused
+    joined = pts.join(F.broadcast(cover) if broadcast_polygons else cover.hint("merge"), "cell_id")
+    if index == "grid":
+        joined = joined.where(F.col("_gy").between(F.col("_gy0"), F.col("_gy1")))
+    return joined.where(inside).drop("cell_id", "_gy", "_gy0", "_gy1", "_pip_idx", "coords",
+                                     "ring_offsets", "dim")
 
 
 def _grid_ring(queries: DataFrame, cols, q_lon: str, q_lat: str, cpd: float,
