@@ -1938,15 +1938,14 @@ def q_distance_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_image_luma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image-payload query with a FULL DuckDB oracle: generate the
     deterministic image corpus (raw/rle/q8 codecs), DECODE THE ENCODED
-    BYTES in a mapInPandas stage, and emit integer BT.601 luma histograms
+    BYTES in a mapInArrow stage, and emit integer BT.601 luma histograms
     + brightness_milli per image. The oracle (_image_luma_oracle_sql)
     regenerates every pixel arithmetically — splitmix64 replayed in staged
     mod-2^64 HUGEINT SQL, q8's mid-bin quantization applied in SQL — so a
     hash match proves the codec encode→decode round-trip pixel-exact, not
     just the histogram math. sf_dir is unused: the corpus is fixed-size
     (192 images) because the oracle string cannot depend on it."""
-    from geojson_spark.operators.multimodal import luma_histogram
-    from geojson_spark.sources.images import generate_images
+    from geojson_spark.sources.images import generate_images, luma_histogram
 
     imgs = generate_images(spark, 192, skew=True)
     h = luma_histogram(imgs, bins=16)

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, BooleanType, DoubleType, LongType
 
 from geojson_spark.functions import text as T
+from geojson_spark.functions.spark_funcs import ensure_min_partitions
 
 
 def assign_keepers(pairs: DataFrame, *, max_iters: int = 20) -> DataFrame:
@@ -120,18 +121,6 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Repartition up to default parallelism when the input arrives in
-    fewer partitions (small files): the Python-UDF stages downstream run
-    one task per partition, so a 1-partition scan would serialize the whole
-    signature computation on one core. On a real cluster inputs already
-    arrive well-partitioned and this is a no-op. Plan-aware (no AQE
-    stage-materialization hazard): see ``ensure_min_partitions``."""
-    from geojson_spark.functions.spark_funcs import ensure_min_partitions
-
-    return ensure_min_partitions(df)
-
-
 def _minhash_udf(n_hashes: int, k: int):
     @F.pandas_udf(ArrayType(LongType()))
     def _mh(texts: pd.Series) -> pd.Series:
@@ -164,7 +153,7 @@ def minhash_lsh_candidates(
     Only (id, band_key) rows enter the self-join — document text never
     crosses a shuffle (at web scale the band join moves ids, not payloads).
     """
-    sigs = _spread(docs).select(
+    sigs = ensure_min_partitions(docs).select(
         F.col(id_col).alias("id"),
         _bands_udf(n_bands)(_minhash_udf(n_hashes, k_shingle)(F.col(text_col))).alias("bands"),
     )
@@ -495,7 +484,9 @@ def simhash_dedup(
     def _sh(texts: pd.Series) -> pd.Series:
         return pd.Series([T.simhash64(t or "") for t in texts])
 
-    hashed = _spread(docs).select(F.col(id_col).alias("id"), _sh(F.col(text_col)).alias("simhash"))
+    hashed = ensure_min_partitions(docs).select(
+        F.col(id_col).alias("id"), _sh(F.col(text_col)).alias("simhash")
+    )
     return hamming_pairs(hashed, id_col="id", hash_col="simhash", max_hamming=max_hamming)
 
 
@@ -563,10 +554,10 @@ def embedding_dedup(
     # payload through it would multiply shuffle volume by the full probe
     # fan-out (the minhash band join avoids the same hazard — ids, not
     # payloads, cross the shuffle). Vectors re-attach to the deduplicated
-    # candidate pairs afterwards via two id equi-joins. _spread first, like
+    # candidate pairs afterwards via two id equi-joins. Spread first, like
     # the minhash/simhash siblings: a small-parquet table is one input
     # partition, which would run every hyperplane projection on one core.
-    keyed = _spread(embeddings).select(
+    keyed = ensure_min_partitions(embeddings).select(
         F.col(id_col).alias("id"),
         F.explode(_buckets(F.col(vec_col))).alias("bucket"),
     )

@@ -15,7 +15,7 @@ index only the ring and the completeness bound differ.
 
 Scale notes (100 TB design point):
 - polygon covers are multi-level: each polygon picks the coarsest cell level
-  whose cover fits ``max_cover_cells``, so a continent-sized polygon costs
+  whose cover fits ``PIP_MAX_COVER_CELLS``, so a continent-sized polygon costs
   ~1k join keys instead of 10^8 level-13 cells; points join each level via
   pure-bit-arithmetic ancestor keys (no UDF, no extra shuffle).
 - PIP ships each polygon's geometry once. A polygon side of at most
@@ -80,6 +80,9 @@ PIP_BROADCAST_MAX_ROWS = 4_000_000
 # rows plus the edge table. 1 GiB leaves headroom for the hash relation's
 # ~2x build overhead.
 PIP_BROADCAST_MAX_BYTES = 1 << 30
+# cover-key budget per polygon: its cover uses the finest ladder level
+# that fits
+PIP_MAX_COVER_CELLS = 1024
 
 # pip_join plans a polygon side of at most this many rows on the driver;
 # the probe of a larger side measures a hash sample of about this many rows
@@ -115,10 +118,10 @@ _AUTO_CPD_MIN = 1.0 / 64
 GRID_FACTORS = (1, 8, 64, 512)  # coarsening factors for large polygons
 
 
-def _grid_cover(bbox, cpd: int, max_cover_cells: int):
+def _grid_cover(bbox, cpd: int):
     """Exact grid cover of one bbox as integer ranges ``(fi, gx0, gx1, gy0,
     gy1)`` at the smallest coarsening factor ``GRID_FACTORS[fi]`` whose
-    cover fits ``max_cover_cells`` — no sampling, no truncation, and a
+    cover fits ``PIP_MAX_COVER_CELLS`` — no sampling, no truncation, and a
     hemisphere costs ~hundreds of keys, never a silent cap. None for a
     missing bbox."""
     if bbox is None or len(bbox) < 4:
@@ -128,7 +131,7 @@ def _grid_cover(bbox, cpd: int, max_cover_cells: int):
     for i, f in enumerate(GRID_FACTORS):
         nx = (bb[2] - bb[0]) * cpd / f + 2
         ny = (bb[3] - bb[1]) * cpd / f + 2
-        if nx * ny <= max_cover_cells:
+        if nx * ny <= PIP_MAX_COVER_CELLS:
             fi = i
             break
     f = GRID_FACTORS[fi]
@@ -142,13 +145,13 @@ def _grid_cover(bbox, cpd: int, max_cover_cells: int):
 _GRID_RANGE = ("_fi", "gx0", "gx1", "gy0", "gy1")
 
 
-def grid_cover_udf(cpd: int = 8, max_cover_cells: int = 4096):
+def grid_cover_udf(cpd: int):
     """bbox → the polygon's ``_grid_cover`` as a struct of ``_GRID_RANGE``
     (null fields for a missing bbox)."""
 
     @F.pandas_udf("_fi int, gx0 bigint, gx1 bigint, gy0 bigint, gy1 bigint")
     def _cover(bbox: pd.Series) -> pd.DataFrame:
-        rows = [_grid_cover(b, cpd, max_cover_cells) or (None,) * 5 for b in bbox]
+        rows = [_grid_cover(b, cpd) or (None,) * 5 for b in bbox]
         return pd.DataFrame(rows, columns=list(_GRID_RANGE), dtype="Int64")
 
     return _cover
@@ -181,19 +184,19 @@ def _s2_edge_deg(level: int) -> float:
 S2_COVER_LEVELS = (13, 10, 7, 4)
 
 
-def _s2_cover(bbox, levels, max_cover_cells: int) -> np.ndarray:
-    """S2 cover of one bbox at the finest ladder level whose cover fits
-    ``max_cover_cells``; empty for a missing bbox. Cell ids self-encode
-    their level (trailing bit), so one array carries the multi-level
-    cover. Samples the bbox at quarter-cell pitch; over-approximation is
-    refined by exact PIP after the join."""
+def _s2_cover(bbox) -> np.ndarray:
+    """S2 cover of one bbox at the finest ``S2_COVER_LEVELS`` level whose
+    cover fits ``PIP_MAX_COVER_CELLS``; empty for a missing bbox. Cell ids
+    self-encode their level (trailing bit), so one array carries the
+    multi-level cover. Samples the bbox at quarter-cell pitch;
+    over-approximation is refined by exact PIP after the join."""
     if bbox is None or len(bbox) < 4:
         return np.empty(0, dtype=np.int64)
     b = np.asarray(bbox, dtype=np.float64)
     span = max(b[2] - b[0], b[3] - b[1], 1e-9)
-    level = levels[-1]
-    for lv in levels:  # finest → coarsest
-        if (span / _s2_edge_deg(lv)) ** 2 * 4 <= max_cover_cells:
+    level = S2_COVER_LEVELS[-1]
+    for lv in S2_COVER_LEVELS:  # finest → coarsest
+        if (span / _s2_edge_deg(lv)) ** 2 * 4 <= PIP_MAX_COVER_CELLS:
             level = lv
             break
     # quarter-edge pitch: worst-case sheared cells near face corners have
@@ -209,12 +212,12 @@ def _s2_cover(bbox, levels, max_cover_cells: int) -> np.ndarray:
     )
 
 
-def s2_cover_udf(levels=S2_COVER_LEVELS, max_cover_cells: int = 1024):
+def s2_cover_udf():
     """bbox array → array<cell>: the polygon's ``_s2_cover``."""
 
     @F.pandas_udf(ArrayType(LongType()))
     def _cover(bbox: pd.Series) -> pd.Series:
-        return pd.Series([_s2_cover(b, levels, max_cover_cells).tolist() for b in bbox])
+        return pd.Series([_s2_cover(b).tolist() for b in bbox])
 
     return _cover
 
@@ -377,7 +380,7 @@ def _collect_small_side(polygons: DataFrame):
     return side.collect()
 
 
-def _small_side_cover(polygons: DataFrame, rows, index: str, cpd: int, max_cover_cells: int):
+def _small_side_cover(polygons: DataFrame, rows, index: str, cpd: int):
     """The cover of a collected small side, from the cover UDFs' own
     functions, and its row count. The cover has ``cell_id``, ``_pip_idx``
     (the polygon's position in ``rows``) and ``poly_id`` (grid: plus the
@@ -388,7 +391,7 @@ def _small_side_cover(polygons: DataFrame, rows, index: str, cpd: int, max_cover
               StructField("poly_id", polygons.schema["poly_id"].dataType)]
     if index == "grid":
         ranges = [(i, *c) for i, r in enumerate(rows)
-                  if (c := _grid_cover(r.bbox, cpd, max_cover_cells)) is not None]
+                  if (c := _grid_cover(r.bbox, cpd)) is not None]
         frame = pd.DataFrame(np.array(ranges, dtype=np.int64).reshape(-1, 6),
                              columns=["_pip_idx", *_GRID_RANGE])
         frame.insert(1, "poly_id", ids.to_numpy()[frame["_pip_idx"].to_numpy()])
@@ -397,7 +400,7 @@ def _small_side_cover(polygons: DataFrame, rows, index: str, cpd: int, max_cover
                                     ["_pip_idx", "poly_id"])
         ok = (frame.gx1 >= frame.gx0) & (frame.gy1 >= frame.gy0)
         return cover, int((frame.gx1 - frame.gx0 + 1)[ok].sum())
-    cells = [_s2_cover(r.bbox, S2_COVER_LEVELS, max_cover_cells) for r in rows]
+    cells = [_s2_cover(r.bbox) for r in rows]
     idx = np.repeat(np.arange(len(cells)), [c.size for c in cells])
     frame = pd.DataFrame({
         "_pip_idx": idx,
@@ -462,12 +465,10 @@ def pip_join(
     polygons: DataFrame,
     *,
     index: str = "grid",
-    level: int = 13,
     cpd: int = 8,
     lon: str = "lon",
     lat: str = "lat",
     broadcast_polygons: bool | None = None,
-    max_cover_cells: int = 1024,
 ) -> DataFrame:
     """Point-in-polygon join.
 
@@ -542,7 +543,7 @@ def pip_join(
     if rows is not None:
         table = _edge_table([r.coords for r in rows], [r.ring_offsets for r in rows],
                             [r.dim for r in rows])
-        cover, n_cover = _small_side_cover(polygons, rows, index, cpd, max_cover_cells)
+        cover, n_cover = _small_side_cover(polygons, rows, index, cpd)
         if broadcast_polygons is None:
             broadcast_polygons = (
                 n_cover <= PIP_BROADCAST_MAX_ROWS
@@ -553,12 +554,12 @@ def pip_join(
     else:
         poly_cols = ["poly_id", "coords", "ring_offsets", "dim"]
         if index == "grid":
-            r = grid_cover_udf(cpd, max_cover_cells)(F.col("bbox"))
+            r = grid_cover_udf(cpd)(F.col("bbox"))
             cover = _explode_grid_cover(polygons.select(*poly_cols, r.alias("_r")).select(
                 *poly_cols, "_r.*"), poly_cols)
             cover_rows = F.when((r.gx1 >= r.gx0) & (r.gy1 >= r.gy0), r.gx1 - r.gx0 + 1).otherwise(0)
         else:
-            r = s2_cover_udf(max_cover_cells=max_cover_cells)(F.col("bbox"))
+            r = s2_cover_udf()(F.col("bbox"))
             cover = polygons.select(*poly_cols, F.explode(r).alias("cell_id"))
             cover_rows = F.size(r)
         if broadcast_polygons is None:

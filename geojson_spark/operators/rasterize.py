@@ -1,7 +1,8 @@
 """Vector → raster: render point tables into real image tiles.
 
-The mirror of the raster→vector direction (``sources/images`` +
-``operators/multimodal`` decode images into cells/features): this module
+The mirror of the raster→vector direction (``sources/images`` decodes
+image bytes into pixels, :func:`tile_pixels` and :func:`zonal_stats` carry
+them into cells/features): this module
 rasterizes a point table into per-tile density images — the standard
 heatmap/coverage-preview step of a geospatial pipeline, producing rows in
 the engine's image-table shape so every downstream image operator (pHash
@@ -31,6 +32,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -60,7 +62,7 @@ def rasterize_density(
     max_count, checksum) where checksum = Σ (py·res+px+1)·pixel over the
     DECODED bytes — integer-exact and SQL-replayable from the raw points.
     """
-    from geojson_spark.sources.images import decode_image, encode_image
+    from geojson_spark.sources.images import encode_image
 
     if 180 * cpd >= GRID_K:
         raise ValueError(
@@ -109,13 +111,14 @@ def rasterize_density(
     # table). The scatter into the (T, res, res) stack is one vectorized
     # fancy-index; encode/decode/phash/stats are all batched along T too
     # (round-5 — the former per-tile loop cost ~0.1 ms/tile, ~1.5 s for a
-    # world render at cpd=4). Only rle, inherently per-stream, stays a
-    # per-tile call.
+    # world render at cpd=4). Only rle encoding, inherently per-stream,
+    # stays a per-tile call.
     idx1 = np.arange(res * res, dtype=np.int64).reshape(res, res) + 1
 
     def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from geojson_spark.sources.images import (
             average_phash_batch,
+            decode_all,
             q8_quantize,
             rle_encode,
         )
@@ -149,25 +152,21 @@ def rasterize_density(
             bufs = [encode_image(row, out_fmt) for row in rgb]
         # stats/phash come from what the STORED bytes decode to — the
         # decode really reads the encoded buffers, so a codec bug breaks
-        # the checksum. raw/q8 decode is a reinterpretation of the bytes
-        # (one batched frombuffer over the concatenation); rle decodes
-        # per tile.
-        if out_fmt == "rle":
-            dec = np.stack(
-                [decode_image(b, out_fmt, res, res) for b in bufs]
-            ).reshape(T, res, res, 3)[:, :, :, 0]
-        else:
-            dec = np.frombuffer(b"".join(bufs), dtype=np.uint8).reshape(
-                T, res, res, 3
-            )[:, :, :, 0]
+        # the checksum — through the engine's one batch decoder
+        size = pa.array(np.full(T, res, dtype=np.int32))
+        stored = pa.RecordBatch.from_arrays(
+            [pa.array(tids), pa.array(bufs, pa.binary()), size, size, pa.array([out_fmt] * T)],
+            names=["tile_id", "bytes", "w", "h", "fmt"],
+        )
+        dec = decode_all(stored, "tile_id", "tile")[0].reshape(T, res, res, 3)[:, :, :, 0]
         # q8 is lossy (0 quantizes to 2): decoded-byte stats would read
         # nonzero_px = res² everywhere, so for lossy fmts the stats come
         # from the pre-encode pixels; the lossless fmts keep the stronger
         # decoded-byte contract
         stat = dec if out_fmt in ("raw", "rle") else gray
         # phash describes the STORED bytes (decoded), matching
-        # resize_images / verify_invariants — for q8 hashing the
-        # pre-quantization pixels would fail phash_ok
+        # verify_invariants — for q8 hashing the pre-quantization pixels
+        # would fail phash_ok
         phash = average_phash_batch(dec)
         checksum = (idx1[None, :, :] * stat.astype(np.int64)).sum(axis=(1, 2))
         yield pd.DataFrame(
@@ -203,52 +202,34 @@ def tile_pixels(tiles: DataFrame) -> DataFrame:
     (tile_id, px, py, val): only nonzero pixels are emitted, so a mostly
     empty world raster decodes to ~|points| rows, not |tiles|·res².
 
-    One ``mapInPandas`` pass; within each arrow batch, all tiles sharing
-    one (w, h, fmt) shape decode as a single (N, h, w) stack with ONE
-    3-D ``np.nonzero`` (an engine's tile table is homogeneous, so the
-    common case is one stack per batch — the former per-tile loop built
-    ~15k tiny DataFrames for a world raster). No shuffle — the explode
-    happens in place on the scan partitions.
+    One ``mapInArrow`` pass: each sub-batch decodes in one
+    :func:`~geojson_spark.sources.images.decode_batch` call, one
+    ``np.nonzero`` finds the nonzero channel-0 pixels of all its tiles,
+    and each pixel's (px, py) comes from its offset within its tile. A
+    tile that does not decode to w·h·3 bytes raises a ValueError naming
+    it. No shuffle — the explode happens in place on the scan partitions.
     """
-    from geojson_spark.sources.images import rle_decode
+    from geojson_spark.sources.images import decode_all, pixel_sub_batches
 
-    def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for (w, h, fmt), grp in pdf.groupby(["w", "h", "fmt"], sort=False):
-                w, h = int(w), int(h)
-                if fmt in ("raw", "q8"):
-                    pix = [np.frombuffer(bytes(b), dtype=np.uint8) for b in grp["bytes"]]
-                elif fmt == "rle":
-                    pix = [rle_decode(bytes(b)) for b in grp["bytes"]]
-                else:
-                    raise ValueError(f"unknown fmt {fmt!r}")
-                # per tile, not per stack: a long and a short buffer in one
-                # group would otherwise sum to the right total and decode
-                # into shifted pixels
-                for tid, p in zip(grp["tile_id"], pix):
-                    if p.size != w * h * 3:
-                        raise ValueError(
-                            f"tile {tid}: decoded {p.size} bytes, expected {w * h * 3}"
-                        )
-                imgs = np.concatenate(pix).reshape(len(pix), h, w, 3)[:, :, :, 0]
-                ti, py, px = np.nonzero(imgs)
-                if len(px):
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "tile_id": grp["tile_id"].to_numpy()[ti],
-                                "px": px.astype(np.int32),
-                                "py": py.astype(np.int32),
-                                "val": imgs[ti, py, px].astype(np.int64),
-                                "w": np.full(len(px), w, dtype=np.int32),
-                            }
-                        )
-                    )
-            if out:
-                yield pd.concat(out, ignore_index=True)
+    def explode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in pixel_sub_batches(batches):
+            pixels, lens, w = decode_all(batch, "tile_id", "tile")
+            ch0 = pixels[0::3]  # every tile is whole RGB triples
+            (nz,) = np.nonzero(ch0)
+            if not nz.size:
+                continue
+            ends = np.cumsum(lens // 3)
+            tile = np.searchsorted(ends, nz, side="right")
+            at = nz - (ends - lens // 3)[tile]  # the pixel's offset in its tile
+            wt = w[tile]
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("tile_id").take(pa.array(tile)).cast(pa.int64()),
+                 pa.array((at % wt).astype(np.int32)), pa.array((at // wt).astype(np.int32)),
+                 pa.array(ch0[nz].astype(np.int64)), pa.array(wt.astype(np.int32))],
+                names=["tile_id", "px", "py", "val", "w"],
+            )
 
-    return tiles.select("tile_id", "bytes", "w", "h", "fmt").mapInPandas(
+    return tiles.select("tile_id", "bytes", "w", "h", "fmt").mapInArrow(
         explode, schema="tile_id bigint, px int, py int, val bigint, w int"
     )
 

@@ -21,6 +21,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 from pyspark.sql.window import Window
 
+from geojson_spark.functions.spark_funcs import ensure_min_partitions
+
 
 def _dot_col(a, b):
     """Exact JVM-side dot product over two array<double> Columns: one
@@ -74,11 +76,9 @@ def cosine_topk_bruteforce(
     full quantized vectors through Arrow for every pair row — 8× the table
     bytes for 8 queries — and benched 6× slower; same derivation
     (dot/sqrt(na·nb)), bit-identical on quantized inputs."""
-    from geojson_spark.operators.dedup import _spread
-
     vd = F.col(v_vec).cast("array<double>")
     qd = F.col(q_vec).cast("array<double>")
-    vecs = _spread(
+    vecs = ensure_min_partitions(
         vectors.select(v_id, v_vec).where(F.col(v_vec).isNotNull())
     ).withColumn("_vn2", _norm2_col(vd))
     qs = (
@@ -174,11 +174,9 @@ def ivf_topk(
     per side, one zip_with dot per candidate pair); only the centroid
     assignment — a dense argmax over the broadcast codebook — runs as an
     Arrow-batched pandas kernel."""
-    from geojson_spark.operators.dedup import _spread
-
     vd = F.col(v_vec).cast("array<double>")
     qd = F.col(q_vec).cast("array<double>")
-    vectors = _spread(vectors.where(F.col(v_vec).isNotNull()))
+    vectors = ensure_min_partitions(vectors.where(F.col(v_vec).isNotNull()))
     v_assigned = vectors.withColumn(
         "_cl", F.element_at(_assign_udf(centroids, 1)(F.col(v_vec)), 1)
     ).withColumn("_vn2", _norm2_col(vd))

@@ -20,16 +20,19 @@ Batch kernel — generation (``_gen_batch``) and the invariant checker
 work:
   pixels — ``_regen_pixels``: one ``_splitmix64`` over the concatenated
            counter ranges of every image in the batch;
-  decode — raw/q8 pixels are the joined stored bytes (the Arrow data
-           buffer); every rle buffer's (count, value) pairs expand in one
-           ``np.repeat``;
+  decode — :func:`decode_batch`: raw/q8 pixels are the joined stored
+           bytes (the Arrow data buffer); every rle buffer's (count,
+           value) pairs expand in one ``np.repeat``. It is the engine's
+           only image decoder: :func:`luma_histogram`, the rasterizer's
+           ``tile_pixels`` and its render's stored-bytes check use it too;
   PSNR   — each image's squared error is an exact integer segment sum
            (``np.add.reduceat``), so the flags equal ``psnr_db``'s;
   phash  — ``_phash_concat``: images of mixed sizes zero-padded into one
            stack, one :func:`average_phash_batch` call with each image's
            own block bounds, bit-identical to :func:`average_phash`.
 Memory: the checker walks each Arrow batch in sub-batches of about
-``_SUB_BATCH_BYTES`` (1 MiB) of stored bytes plus regenerated pixels, and
+``_SUB_BATCH_BYTES`` (1 MiB) of stored bytes plus regenerated pixels, the
+other decoders in sub-batches of about that many decoded pixel bytes, and
 the generator in sub-batches of at most that many regenerated pixel
 bytes, so a Python worker's scratch memory (a few uint64/float64 copies of
 a sub-batch) does not grow with the Arrow batch size.
@@ -131,17 +134,6 @@ def encode_image(px: np.ndarray, fmt: str) -> bytes:
     if fmt == "q8":
         return q8_quantize(px).tobytes()
     raise ValueError(f"unknown fmt {fmt!r}")
-
-
-def encode_with_phash(px: np.ndarray, fmt: str, w: int, h: int) -> tuple[bytes, int]:
-    """Encode pixels AND hash what the stored bytes will decode to — for
-    lossy codecs (q8) the phash must describe the post-quantization
-    pixels a decoder sees, or recompute-from-bytes checks and hamming
-    dedup silently disagree. One definition so every image producer
-    (resize, tiling, rasterize) keeps the invariant in lockstep; a new
-    lossy codec added to ``encode_image`` must be mirrored HERE only."""
-    hp = q8_quantize(px) if fmt == "q8" else px
-    return encode_image(px, fmt), average_phash(hp, w, h)
 
 
 def decode_image(buf: bytes, fmt: str, w: int, h: int) -> np.ndarray:
@@ -341,7 +333,8 @@ def _gen_batch(ids: np.ndarray, skew: bool) -> pd.DataFrame:
     n = w * h * 3
     px = _regen_pixels(uids, w, h)
     # what the stored bytes decode to: q8 is lossy, and the phash must
-    # describe the decoded pixels (see encode_with_phash)
+    # describe the pixels a decoder sees, or recompute-from-bytes checks
+    # and hamming dedup disagree
     q8 = np.repeat(fmts == "q8", n)
     px[q8] = q8_quantize(px[q8])
     ends = np.cumsum(n).tolist()
@@ -425,6 +418,69 @@ def _binary(col: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return data[off[0] : off[-1]], off - off[0], _true(arr.is_valid())
 
 
+def decode_batch(batch: pa.RecordBatch) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(pixels, lens, decoded) of the ``bytes, w, h, fmt`` columns of a
+    batch — :func:`decode_image` of every row at once. ``lens`` is each
+    row's decoded length (-1 when its bytes are null, its fmt is unknown or
+    its rle buffer is not whole pairs), ``decoded`` marks the rows that
+    decode to w·h·3 pixels, and ``pixels`` holds those rows' pixels back to
+    back in row order. raw/q8 pixels are the stored bytes themselves (the
+    Arrow data buffer); every rle buffer's (count, value) pairs expand in
+    one ``np.repeat``."""
+    col = batch.column
+    data, off, b_ok = _binary(col("bytes"))
+    blen = np.diff(off)
+    plain = b_ok & (_true(pc.equal(col("fmt"), "raw")) | _true(pc.equal(col("fmt"), "q8")))
+    rle = b_ok & _true(pc.equal(col("fmt"), "rle")) & (blen % 2 == 0)
+    pairs = data[_ranges(off[:-1][rle], blen[rle])]
+    counts = pairs[0::2]
+    rle_px = np.repeat(pairs[1::2], counts)
+    lens = np.where(plain, blen, -1)
+    lens[rle] = _segment_sums(counts, blen[rle] // 2)
+    src = np.concatenate((data, rle_px)) if rle.any() else data
+    src_at = off[:-1].copy()
+    src_at[rle] = data.size + np.cumsum(lens[rle]) - lens[rle]
+    w, w_ok = _ints(col("w"))
+    h, h_ok = _ints(col("h"))
+    # float product: exact at every length a buffer can have, no overflow
+    decoded = w_ok & h_ok & (lens == w * h.astype(np.float64) * 3)
+    if decoded.all() and not rle.any():  # the stored bytes are the pixels
+        return data, lens, decoded
+    return src[_ranges(src_at[decoded], lens[decoded])], lens, decoded
+
+
+def decode_all(batch: pa.RecordBatch, key: str, label: str):
+    """(pixels, lens, w) of :func:`decode_batch` for a batch whose rows
+    must all be images of w, h ≥ 1; otherwise a ValueError names the first
+    row that is not, as ``label`` and its ``key`` column value."""
+    col = batch.column
+    pixels, lens, decoded = decode_batch(batch)
+    w, w_ok = _ints(col("w"))
+    h, h_ok = _ints(col("h"))
+    sized = w_ok & h_ok & (w >= 1) & (h >= 1)
+    bad = ~(decoded & sized)
+    if bad.any():
+        k = int(np.argmax(bad))
+        fmt = col("fmt")[k].as_py()
+        why = (f"unknown fmt {fmt!r}" if fmt not in ("raw", "rle", "q8")
+               else f"w={col('w')[k].as_py()}, h={col('h')[k].as_py()} is not an image size"
+               if not sized[k]
+               else f"null or truncated {fmt} bytes" if lens[k] < 0
+               else f"decoded {lens[k]} bytes, expected {w[k] * h[k] * 3}")
+        raise ValueError(f"{label} {col(key)[k].as_py()}: {why}")
+    return pixels, lens, w
+
+
+def pixel_sub_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """Each image batch in slices of about _SUB_BATCH_BYTES decoded pixel
+    bytes (w·h·3), the memory bound of a decoding kernel."""
+    for batch in batches:
+        w, _ = _ints(batch.column("w"))
+        h, _ = _ints(batch.column("h"))
+        for lo, hi in _sub_batches(w * h * 3):
+            yield batch.slice(lo, hi - lo)
+
+
 def _check_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
     """(image_id, psnr_ok, caption_ok, phash_ok) of a batch of image rows,
     each step once over the whole batch. Damage clears only the flags it
@@ -438,47 +494,28 @@ def _check_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
     caps = [c if ok else None for c, ok in zip(_captions(ids, hashes), id_ok)]
     caption_ok = _true(pc.equal(col("caption"), pa.array(caps, pa.string())))
 
-    # decode: raw/q8 pixels are the stored bytes themselves; every rle
-    # buffer's (count, value) pairs expand in one np.repeat
-    data, off, b_ok = _binary(col("bytes"))
-    blen = np.diff(off)
-    is_q8 = _true(pc.equal(col("fmt"), "q8"))
-    plain = is_q8 | _true(pc.equal(col("fmt"), "raw"))
-    rle = b_ok & _true(pc.equal(col("fmt"), "rle")) & (blen % 2 == 0)
-    pairs = data[_ranges(off[:-1][rle], blen[rle])]
-    counts = pairs[0::2]
-    rle_px = np.repeat(pairs[1::2], counts)
-    dec_len = blen.copy()
-    dec_len[rle] = _segment_sums(counts, blen[rle] // 2)
-    src = np.concatenate((data, rle_px)) if rle.any() else data
-    src_at = off[:-1].copy()
-    src_at[rle] = data.size + np.cumsum(dec_len[rle]) - dec_len[rle]
-    w, w_ok = _ints(col("w"))
-    h, h_ok = _ints(col("h"))
-    # float product: exact at every length a buffer can have, no overflow
-    decoded = b_ok & (plain | rle) & w_ok & h_ok & (dec_len == w * h.astype(np.float64) * 3)
-
-    # every decodable row's pixels, back to back in row order
-    lens = dec_len[decoded]
-    dec = src[_ranges(src_at[decoded], lens)]
+    dec, lens, decoded = decode_batch(batch)
+    starts = np.cumsum(lens[decoded]) - lens[decoded]
 
     def pixels(rows: np.ndarray) -> np.ndarray:  # rows ⊆ decoded
         keep = rows[decoded]
-        return dec if keep.all() else dec[_ranges((np.cumsum(lens) - lens)[keep], lens[keep])]
+        return dec if keep.all() else dec[_ranges(starts[keep], lens[rows])]
 
     # PSNR against the pixels regenerated from image_id, from the exact
     # integer squared error of each image
     psnr_ok = np.zeros(n, dtype=bool)
-    rows = decoded & id_ok & (dec_len == w0 * h0 * 3)
+    rows = decoded & id_ok & (lens == w0 * h0 * 3)
     d = _regen_pixels(ids[rows], w0[rows], h0[rows]).astype(np.int32) - pixels(rows)
-    sse = _segment_sums(d * d, dec_len[rows])
-    lossy = is_q8[rows]
+    sse = _segment_sums(d * d, lens[rows])
+    lossy = _true(pc.equal(col("fmt"), "q8"))[rows]
     with np.errstate(divide="ignore"):  # mse 0 → inf dB, as psnr_db
-        db = 20.0 * np.log10(255.0) - 10.0 * np.log10(sse[lossy] / dec_len[rows][lossy])
+        db = 20.0 * np.log10(255.0) - 10.0 * np.log10(sse[lossy] / lens[rows][lossy])
     ok = sse == 0  # raw/rle must be exact
     ok[lossy] = db >= 40.0
     psnr_ok[rows] = ok
 
+    w, _ = _ints(col("w"))
+    h, _ = _ints(col("h"))
     phash, ph_ok = _ints(col("phash"))
     phash_ok = np.zeros(n, dtype=bool)
     rows = decoded & ph_ok & (w >= 1) & (h >= 1)
@@ -546,6 +583,49 @@ def verify_invariants(images_df):
     return images_df.mapInArrow(
         _check_batches,
         schema="image_id string, psnr_ok boolean, caption_ok boolean, phash_ok boolean",
+    )
+
+
+def _luma_batch(batch: pa.RecordBatch, bins: int) -> pa.RecordBatch:
+    """(image_id, hist, brightness_milli) of a batch of images: luma over
+    the concatenated pixels, every histogram in one ``bincount``."""
+    pixels, lens, _ = decode_all(batch, "image_id", "image")
+    n = batch.num_rows
+    rgb = pixels.reshape(-1, 3).astype(np.int64)
+    luma = (299 * rgb[:, 0] + 587 * rgb[:, 1] + 114 * rgb[:, 2]) // 1000
+    npx = lens // 3
+    image = np.repeat(np.arange(n), npx)
+    hist = np.bincount(image * bins + luma * bins // 256, minlength=n * bins)
+    offsets = pa.array(np.arange(n + 1, dtype=np.int32) * bins)
+    return pa.RecordBatch.from_arrays(
+        [batch.column("image_id"), pa.ListArray.from_arrays(offsets, hist),
+         pa.array(1000 * _segment_sums(luma, npx) // (npx * 255))],
+        names=["image_id", "hist", "brightness_milli"],
+    )
+
+
+def luma_histogram(images: DataFrame, bins: int = 16) -> DataFrame:
+    """Integer-exact luma histogram + brightness per image (the cheap
+    exposure/quality filters an image-curation pipeline gates on).
+
+    Luma uses the BT.601 weights as EXACT integer millis —
+    ``(299·R + 587·G + 114·B) div 1000`` — and ``bin = luma·bins div 256``,
+    so every output is a deterministic integer (reproducible anywhere,
+    no float luck). brightness_milli = 1000·Σluma div (n_px·255).
+
+    Runs :func:`decode_batch` over Arrow batches (``mapInArrow``); a row
+    that does not decode to a w·h·3 image raises a ValueError naming its
+    image_id."""
+    from geojson_spark.functions.spark_funcs import ensure_min_partitions
+
+    def work(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in pixel_sub_batches(batches):
+            yield _luma_batch(batch, bins)
+
+    # one Python task per partition: spread a small scan, as verify_invariants
+    images = ensure_min_partitions(images.select("image_id", "bytes", "fmt", "w", "h"))
+    return images.mapInArrow(
+        work, schema="image_id string, hist array<long>, brightness_milli long"
     )
 
 

@@ -267,8 +267,8 @@ class TestRasterize:
     def test_composes_with_image_operators(self, spark):
         """Rendered tiles are real image rows: luma_histogram and pHash
         dedup run on them unchanged."""
-        from geojson_spark.operators.multimodal import luma_histogram
         from geojson_spark.operators.rasterize import rasterize_density
+        from geojson_spark.sources.images import luma_histogram
 
         rng = np.random.default_rng(9)
         coords = [(float(x), float(y)) for x, y in rng.uniform(0, 10, (500, 2))]

@@ -1,4 +1,4 @@
-"""Tests: dedup family, similarity search, multimodal, checkpoint/resume,
+"""Tests: dedup family, similarity search, image luma, checkpoint/resume,
 streaming windows, text kernels."""
 
 from __future__ import annotations
@@ -167,64 +167,6 @@ def test_streaming_windowed_counts(spark, tmp_path):
     assert len(g) > 10
 
 
-def test_multimodal_features_and_stub(spark):
-    from geojson_spark.operators.multimodal import frame_sample, image_features
-    from geojson_spark.sources.images import generate_images
-
-    imgs = generate_images(spark, 50)
-    feats = image_features(imgs).collect()
-    assert len(feats) == 50
-    assert all(0 <= r.mean_r <= 255 for r in feats)
-    assert all(len(r.thumb) == 8 * 8 * 3 for r in feats)
-    # phash recompute matches stored phash for lossless fmts
-    joined = image_features(imgs).join(imgs.select("image_id", "phash", "fmt"), "image_id")
-    same = joined.where((F.col("fmt") != "q8") & (F.col("phash") == F.col("phash2"))).count()
-    lossless = joined.where(F.col("fmt") != "q8").count()
-    assert same == lossless
-
-    # video plumbing with deterministic raw frames; stub raises on real fmts
-    vids = spark.createDataFrame(
-        [("v1", bytes(range(48)) * 10, 4, 4, "rawvideo"), ],
-        "video_id string, bytes binary, w int, h int, fmt string",
-    )
-    out = frame_sample(vids, every_n=2).collect()
-    assert len(out) == 5
-    bad = spark.createDataFrame(
-        [("v2", b"\x00", 4, 4, "h264")], "video_id string, bytes binary, w int, h int, fmt string"
-    )
-    with pytest.raises(Exception, match="NotImplementedError|no video codec"):
-        frame_sample(bad).collect()
-
-def test_audio_features_plumbing(spark):
-    import numpy as np
-
-    from geojson_spark.operators.multimodal import audio_features
-
-    rng = np.random.default_rng(11)
-    # 3 frames of 1024 samples: silence, full-scale square wave, noise
-    silence = np.zeros(1024, dtype=np.int16)
-    square = np.tile(np.array([30000, -30000], dtype=np.int16), 512)
-    noise = (rng.standard_normal(1024) * 8000).astype(np.int16)
-    pcm = np.concatenate([silence, square, noise]).astype("<i2").tobytes()
-    df = spark.createDataFrame(
-        [("a1", pcm, "rawpcm16")], "audio_id string, bytes binary, fmt string"
-    )
-    rows = {r.frame_no: r for r in audio_features(df).collect()}
-    assert len(rows) == 3
-    assert rows[0].rms == 0.0 and rows[0].zero_crossings == 0
-    assert abs(rows[1].rms - 30000 / 32768.0) < 1e-9
-    assert rows[1].zero_crossings == 1023  # alternating signs
-    assert 0.0 < rows[2].rms < 1.0 and rows[2].zero_crossings > 100
-    # numpy oracle for the noise frame
-    f = noise.astype(np.float64) / 32768.0
-    assert abs(rows[2].rms - float(np.sqrt((f * f).mean()))) < 1e-12
-
-    bad = spark.createDataFrame(
-        [("a2", b"\x00\x00", "mp3")], "audio_id string, bytes binary, fmt string"
-    )
-    with pytest.raises(Exception, match="NotImplementedError|no audio codec"):
-        audio_features(bad).collect()
-
 def test_hash_split_deterministic_and_proportional(spark):
     from geojson_spark.operators.splits import hash_split
 
@@ -368,42 +310,10 @@ def test_checkpoint_lock_survives_killed_owner(tmp_path):
 def test_image_resize_tile_histogram(spark):
     import numpy as np
 
-    from geojson_spark.operators.multimodal import (
-        luma_histogram,
-        resize_images,
-        tile_images,
-    )
-    from geojson_spark.sources.images import decode_image, generate_images
+    from geojson_spark.sources.images import decode_image, generate_images, luma_histogram
 
     imgs = generate_images(spark, 30)
     meta = {r.image_id: r for r in imgs.select("image_id", "bytes", "fmt", "w", "h").collect()}
-
-    # resize: output decodes to exactly the NumPy nearest-neighbor answer
-    small = resize_images(imgs, 16, 12).collect()
-    assert len(small) == 30
-    for r in small[:5]:
-        src = meta[r.image_id]
-        px = decode_image(bytes(src.bytes), src.fmt, src.w, src.h).reshape(src.h, src.w, 3)
-        yi = (np.arange(12) * src.h) // 12
-        xi = (np.arange(16) * src.w) // 16
-        want = px[yi][:, xi].reshape(-1)
-        got = decode_image(bytes(r.bytes), r.fmt, r.w, r.h)
-        assert (r.w, r.h) == (16, 12) and np.array_equal(got, want)
-
-    # tiles: clipped edges, every pixel in exactly one tile
-    tiles = tile_images(imgs, tile_w=20, tile_h=20).collect()
-    area = {}
-    for t in tiles:
-        area[t.image_id] = area.get(t.image_id, 0) + t.w * t.h
-        assert 1 <= t.w <= 20 and 1 <= t.h <= 20
-    for iid, r in meta.items():
-        assert area[iid] == r.w * r.h
-    # a corner tile's pixels equal the source crop
-    t0 = next(t for t in tiles if t.tile_x == 0 and t.tile_y == 0)
-    src = meta[t0.image_id]
-    px = decode_image(bytes(src.bytes), src.fmt, src.w, src.h).reshape(src.h, src.w, 3)
-    got = decode_image(bytes(t0.bytes), t0.fmt, t0.w, t0.h).reshape(t0.h, t0.w, 3)
-    assert np.array_equal(got, px[: t0.h, : t0.w])
 
     # histogram: integer-exact vs direct NumPy, bins sum to n_pixels
     hists = {r.image_id: r for r in luma_histogram(imgs, bins=16).collect()}

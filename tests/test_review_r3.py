@@ -9,32 +9,6 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 
-def test_resize_q8_phash_matches_stored_bytes(spark):
-    """With the lossy q8 codec the stored phash must describe the DECODED
-    bytes, so recompute-from-bytes checks and hamming dedup agree."""
-    from geojson_spark.operators.multimodal import resize_images
-    from geojson_spark.sources.images import average_phash, decode_image, generate_images
-
-    imgs = generate_images(spark, 24)
-    out = resize_images(imgs, 16, 16, out_fmt="q8").collect()
-    assert len(out) == 24
-    for r in out:
-        px = decode_image(r.bytes, "q8", r.w, r.h)
-        assert average_phash(px, r.w, r.h) == r.phash
-
-
-def test_tile_q8_phash_matches_stored_bytes(spark):
-    from geojson_spark.operators.multimodal import tile_images
-    from geojson_spark.sources.images import average_phash, decode_image, generate_images
-
-    imgs = generate_images(spark, 6)
-    out = tile_images(imgs, 16, 16, out_fmt="q8").collect()
-    assert out
-    for r in out:
-        px = decode_image(r.bytes, "q8", r.w, r.h)
-        assert average_phash(px, r.w, r.h) == r.phash
-
-
 def test_sniff_cap_single_geometry_type_after_coords(spark, tmp_path):
     """A valid single geometry larger than the sniff cap whose top-level
     "type" follows the coordinate array must still parse (falls back to

@@ -339,40 +339,6 @@ def test_verify_invariants_counts_corrupt_image_id(spark):
     assert len(bad) == 1 and bad[0].image_id == "imgXYZ"
 
 
-def test_audio_features_partial_tail_is_measured(spark):
-    """A loud sub-frame clip must report its real RMS, never a fabricated
-    silent frame; an empty clip emits no rows."""
-    import numpy as np
-
-    from geojson_spark.operators.multimodal import audio_features
-
-    loud = (np.ones(500, dtype=np.int16) * 20000).astype("<i2").tobytes()
-    df = spark.createDataFrame(
-        [("short", loud, "rawpcm16"), ("empty", b"", "rawpcm16")],
-        "audio_id string, bytes binary, fmt string",
-    )
-    rows = {r.audio_id: r for r in audio_features(df).collect()}
-    assert "empty" not in rows
-    assert rows["short"].frame_no == 0
-    assert abs(rows["short"].rms - 20000 / 32768.0) < 1e-9
-    assert rows["short"].peak > 0.5
-
-
-def test_write_bucketed_rejects_invalid_table_name(spark, tmp_path):
-    """A name the catalog can't hold ('tiles-v2', injection attempts)
-    must fail LOUDLY at the API boundary, not deep inside saveAsTable —
-    and never reach string-interpolated SQL."""
-    import pytest
-
-    from geojson_spark.plans.bucketing import write_bucketed
-
-    df = spark.range(10).withColumn("k", F.col("id") % 3)
-    for bad in ("tiles-v2", "t; DROP TABLE x", "", "a.`b`"):
-        with pytest.raises(ValueError, match="invalid table name"):
-            write_bucketed(df, bad, bucket_col="k", n_buckets=2,
-                           path=str(tmp_path / "t"))
-
-
 def test_contains_prop_key_presence_and_dotted_keys(spark):
     """contains_property is KEY presence (a JSON-null value still counts,
     like the reference's contains_key); dotted keys must not be read as

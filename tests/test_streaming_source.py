@@ -104,36 +104,6 @@ def test_stream_composes_with_cell_agg(spark, tmp_path):
     assert got == want
 
 
-def test_stream_stream_join_matches_batch(spark, tmp_path):
-    """Stream-stream error→click attribution == the batch join over the
-    same events (watermark is generous, availableNow drains everything)."""
-    import shutil
-
-    from geojson_spark.streaming.joins import (
-        error_click_attribution,
-        run_error_click_stream,
-    )
-
-    src = "/root/testdata/sf0.001/events.parquet"
-    d = tmp_path / "events"
-    d.mkdir()
-    shutil.copy(src, d / "events.parquet")
-
-    q = run_error_click_stream(spark, str(d), query_name="err_click_t")
-    q.awaitTermination(180)
-    got = spark.table("err_click_t")
-
-    ev = spark.read.parquet(str(d)).withColumn("ts", F.col("ts").cast("timestamp"))
-    batch = error_click_attribution(
-        ev.where(F.col("event_type") == "error"),
-        ev.where(F.col("event_type") == "click"),
-    )
-    g = {tuple(map(str, r)) for r in got.collect()}
-    b = {tuple(map(str, r)) for r in batch.collect()}
-    assert g == b
-    assert len(g) > 0
-
-
 def test_stream_dedup_bounded_state(spark, tmp_path):
     import shutil
 

@@ -624,50 +624,6 @@ def test_stream_restart_resumes_from_checkpoint(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# bucketed co-located join: zero Exchange in the plan
-# ---------------------------------------------------------------------------
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    from geojson_spark.plans.bucketing import bucketed_join, write_bucketed
-
-    li = spark.read.parquet(f"{SF}/lineitem.parquet").select(
-        "l_orderkey", "l_quantity", "l_linenumber"
-    )
-    orders = spark.read.parquet(f"{SF}/orders.parquet").select(
-        F.col("o_orderkey").alias("l_orderkey"), "o_totalprice"
-    )
-    write_bucketed(
-        li, "t_li_b", bucket_col="l_orderkey", n_buckets=8,
-        path=str(tmp_path / "li"), sort_col="l_orderkey",
-    )
-    write_bucketed(
-        orders, "t_ord_b", bucket_col="l_orderkey", n_buckets=8,
-        path=str(tmp_path / "ord"), sort_col="l_orderkey",
-    )
-    old_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = bucketed_join(spark, "t_li_b", "t_ord_b", "l_orderkey")
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan  # co-located: no shuffle at all
-        got = j.count()
-        ref = (
-            spark.read.parquet(f"{SF}/lineitem.parquet")
-            .join(
-                spark.read.parquet(f"{SF}/orders.parquet"),
-                F.col("l_orderkey") == F.col("o_orderkey"),
-            )
-            .count()
-        )
-        assert got == ref
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thr)
-        spark.sql("DROP TABLE IF EXISTS t_li_b")
-        spark.sql("DROP TABLE IF EXISTS t_ord_b")
-
-
-# ---------------------------------------------------------------------------
 # GeometryCollection flattening (reference C7 semantics)
 # ---------------------------------------------------------------------------
 
