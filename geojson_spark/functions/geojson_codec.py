@@ -418,6 +418,11 @@ def _reject_constant(name: str):
     raise MalformedGeoJson(f"invalid number literal `{name}`")
 
 
+# the stdlib C scanner with loads_json's strictness; its raw_decode parses
+# one value at an offset, which is how a stream is split into values
+STRICT_DECODER = json.JSONDecoder(parse_constant=_reject_constant)
+
+
 def loads_json(s: str) -> Any:
     """json.loads with the reference's strictness: NaN/Infinity literals
     raise MalformedGeoJson instead of parsing to floats."""

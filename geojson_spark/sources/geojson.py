@@ -3,14 +3,19 @@
 Spark mappings for the reference's IO surface (SURVEY.md §2.1–§2.3):
 
 - ``read_geojson``    — P1/P2/P5 + R1/R2: file(s) → one row per Feature.
-  A FeatureCollection document is *streamed* feature-by-feature with an
-  O(1-feature) byte scanner (parity: FeatureIterator,
+  A FeatureCollection document is *streamed* feature-by-feature in
+  O(1-feature) memory by ``iter_features`` (parity: FeatureIterator,
   src/feature_iterator.rs:36-128, which scans to `[` then alternates
-  `,`/`]`; ours tracks brace depth + string escapes, so it also tolerates
-  any key order — cf. its key-permutation tests, src/feature_iterator.rs:
-  232-299). Each file is one input split; feature batches explode into
-  DataFrame rows via mapInPandas, so a directory of files parallelizes
-  across executors and a single huge file still streams bounded-memory.
+  `,`/`]`). It walks the members of the top-level object in any key order
+  (cf. the key-permutation tests, src/feature_iterator.rs:232-299) and
+  checks every separator. Each ``features`` element goes to the stdlib C
+  JSON scanner (``raw_decode``), which finds the feature's end and parses
+  it, with ``loads_json``'s strictness, in one pass; other members are
+  skipped by a regex over strings and brackets. No Python code runs per
+  character, and no feature is parsed twice. Each file is one input
+  split; feature batches explode into DataFrame rows via mapInPandas, so
+  a directory of files parallelizes across executors and a single huge
+  file still streams bounded-memory.
 - ``parse_features_udf`` — P1-P9 for a string column of GeoJSON docs.
 - ``to_feature_json``  — S1/S3: feature struct column → compact JSON string.
 - ``write_geojson``    — S4/S6: DataFrame → FeatureCollection document(s);
@@ -23,7 +28,9 @@ from __future__ import annotations
 
 import json
 import os
+import re
 from collections.abc import Iterator
+from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -32,6 +39,7 @@ from pyspark.sql.types import StringType
 
 from geojson_spark.errors import InvalidWriterState, MalformedGeoJson
 from geojson_spark.functions.geojson_codec import (
+    STRICT_DECODER,
     dumps_json,
     loads_json,
     parse_feature_obj,
@@ -47,123 +55,214 @@ from geojson_spark.schema import FEATURE_SCHEMA
 # ---------------------------------------------------------------------------
 
 
-def iter_feature_strings(stream, chunk_size: int = 1 << 20) -> Iterator[str]:
-    """Yield each feature's JSON text from a FeatureCollection byte/str stream.
+# one step of skipping a value: a run of text without quotes or brackets,
+# then a whole string or one bracket
+_SKIP = re.compile(r'[^"\[\]{}]*(?:"[^"\\]*(?:\\.[^"\\]*)*"|[\[\]{}])', re.S)
+_WS = re.compile(r"[ \t\n\r]*")
+# a decode error this close to the end of the buffer may only mean that
+# the value goes on in the next chunk
+_TAIL = 16
+_EOF = "unexpected end of input inside FeatureCollection"
 
-    Single pass, memory bounded by one feature + one chunk. Finds the
-    ``"features"`` key at depth 1, then yields depth-balanced ``{...}``
-    slices of its array, respecting strings/escapes.
-    """
-    import codecs
 
-    buf = ""
-    depth = 0
-    in_str = False
-    esc = False
-    in_features = False  # inside the features array
-    feat_start = -1
-    last_str = ""  # most recent complete string seen at depth 1
-    collecting = False
-    pending = []
-    pos = 0
-    entered_features = False
-    # incremental decode for byte streams: a multibyte UTF-8 character
-    # straddling a chunk boundary must not raise on the partial sequence
-    decoder = codecs.getincrementaldecoder("utf-8")()
-    while True:
-        chunk = stream.read(chunk_size)
-        if not chunk:
-            # flush: a dangling partial sequence at EOF is a real error
-            decoder.decode(b"", final=True)
-            break
-        if isinstance(chunk, bytes):
-            chunk = decoder.decode(chunk, final=False)
-            if not chunk:
-                continue
-        buf += chunk
-        n = len(buf)
-        while pos < n:
-            ch = buf[pos]
-            if in_str:
-                if esc:
-                    esc = False
-                elif ch == "\\":
-                    esc = True
-                elif ch == '"':
-                    in_str = False
-                    if collecting:
-                        last_str = "".join(pending)
-                        collecting = False
-                        pending = []
-                elif collecting:
-                    pending.append(ch)
-                pos += 1
-                continue
-            if ch == '"':
-                in_str = True
-                if depth == 1 and not in_features:
-                    collecting = True
-                    pending = []
-                elif in_features and depth == 2 and feat_start < 0:
-                    # a string ELEMENT of the features array — the other
-                    # parse paths raise on non-object features; silently
-                    # yielding 0 rows would accept malformed input on
-                    # exactly one routing (strict-parity rule)
-                    raise MalformedGeoJson("expected Feature object, got string")
-            elif ch == "{":
-                depth += 1
-                if in_features and depth == 3 and feat_start < 0:
-                    feat_start = pos
-            elif ch == "[":
-                depth += 1
-                if depth == 2 and not in_features and last_str == "features":
-                    in_features = True
-                    entered_features = True
-                elif in_features and depth == 3 and feat_start < 0:
-                    raise MalformedGeoJson("expected Feature object, got array")
-            elif ch in "}]":
-                depth -= 1
-                if in_features and depth == 2 and feat_start >= 0:
-                    yield buf[feat_start : pos + 1]
-                    feat_start = -1
-                    buf = buf[pos + 1 :]
-                    n = len(buf)
-                    pos = 0
+def _unexpected(ch: str, expected: str) -> MalformedGeoJson:
+    """The error for reading ``ch`` ("" = end of input) where ``expected``
+    belongs."""
+    if not ch:
+        return MalformedGeoJson(_EOF)
+    got = {'"': "string", "[": "array"}.get(ch, repr(ch))
+    return MalformedGeoJson(f"expected {expected}, got {got}")
+
+
+class _FeatureScanner:
+    """The state of one pass over a FeatureCollection stream: the buffer
+    (the unconsumed text starts at ``pos``), the stream and its decoder."""
+
+    def __init__(self, stream, chunk_size: int):
+        import codecs
+
+        self.stream = stream
+        self.chunk = chunk_size
+        self.buf = ""
+        self.pos = 0
+        self.eof = False
+        # incremental decode for byte streams: a multibyte UTF-8 character
+        # straddling a chunk boundary must not raise on the partial sequence
+        self.decoder = codecs.getincrementaldecoder("utf-8")()
+
+    def _more(self) -> bool:
+        """Append input to the buffer; False (buffer untouched) at end of
+        input. Reads at least as much as is pending, so the retries of one
+        long value add up to O(its length)."""
+        if self.eof:
+            return False
+        want = max(self.chunk, len(self.buf) - self.pos)
+        data = ""
+        while not data:
+            data = self.stream.read(want)
+            if not data:
+                # a dangling partial sequence at EOF is a real error
+                self.decoder.decode(b"", final=True)
+                self.eof = True
+                return False
+            if isinstance(data, bytes):
+                data = self.decoder.decode(data)
+        if self.pos > self.chunk:
+            # drop the consumed prefix only once it outgrows a chunk: doing
+            # it per value would copy the buffer per feature (quadratic)
+            self.buf = self.buf[self.pos :] + data
+            self.pos = 0
+        else:
+            self.buf += data
+        return True
+
+    def _peek(self) -> str:
+        """Skip whitespace; the next character, or "" at end of input."""
+        while True:
+            self.pos = _WS.match(self.buf, self.pos).end()
+            if self.pos < len(self.buf):
+                return self.buf[self.pos]
+            if not self._more():
+                return ""
+
+    def _decode(self):
+        """(value, end) of the JSON value at ``pos``, parsed by the C
+        scanner. Reads more only while the error can be the buffer's end;
+        any other error raises at once, positioned from the value's start
+        (for a feature: the same line/column as parsing its text alone)."""
+        while True:
+            buf = self.buf
+            try:
+                obj, end = STRICT_DECODER.raw_decode(buf, self.pos)
+            except json.JSONDecodeError as e:
+                unterminated = e.msg.startswith("Unterminated string")
+                if (unterminated or len(buf) - e.pos <= _TAIL) and self._more():
                     continue
-                if in_features and depth == 1:
-                    in_features = False
-            elif (
-                in_features
-                and depth == 2
-                and feat_start < 0
-                and ch not in ", \t\r\n"
-            ):
-                # scalar element (number / true / false / null)
-                raise MalformedGeoJson(
-                    f"expected Feature object, got {ch!r}-initial scalar"
-                )
-            pos += 1
-        # trim consumed prefix: keep at most one partial feature
-        keep_from = feat_start if feat_start >= 0 else pos
-        if keep_from > 0:
-            buf = buf[keep_from:]
-            pos -= keep_from
-            if feat_start >= 0:
-                feat_start = 0
-    # end of stream: a half-read feature or a never-closed features array
-    # means truncated input — raising beats silently returning partial
-    # data (the reference's FeatureIterator errors on EOF mid-feature too)
-    if feat_start >= 0 or in_str or in_features:
-        raise MalformedGeoJson("unexpected end of input inside FeatureCollection")
-    if not entered_features:
-        raise MalformedGeoJson("FeatureCollection has no `features` array")
+                rel = json.JSONDecodeError(e.msg, buf[self.pos :], e.pos - self.pos)
+                detail = str(rel)
+                if unterminated or e.pos >= len(buf):
+                    detail = f"{_EOF}: {detail}"
+                raise MalformedGeoJson(detail, lineno=rel.lineno, colno=rel.colno) from None
+            # a number may go on in the next chunk ("1.5" of "1.5e3")
+            if not isinstance(obj, (int, float)) or len(buf) - end > _TAIL or not self._more():
+                return obj, end
+
+    def _skip(self) -> None:
+        """Move ``pos`` past the array or object at ``pos`` without parsing
+        it, so a large foreign member costs one chunk of memory."""
+        depth = 0
+        while True:
+            m = _SKIP.match(self.buf, self.pos)
+            if m is None:
+                if not self._more():
+                    raise MalformedGeoJson(_EOF)
+                continue
+            self.pos = m.end()
+            ch = self.buf[self.pos - 1]
+            if ch in "[{":
+                depth += 1
+            elif ch in "]}":
+                depth -= 1
+                if depth == 0:
+                    return
+
+    def _features(self) -> Iterator[tuple[str, Any]]:
+        self.pos += 1  # '['
+        ch = self._peek()
+        if ch == "]":
+            self.pos += 1
+            return
+        while True:
+            if ch != "{":
+                # the other parse paths reject non-object features; yielding
+                # 0 rows would accept malformed input on exactly one routing
+                raise _unexpected(ch, "Feature object")
+            obj, end = self._decode()
+            yield self.buf[self.pos : end], obj
+            self.pos = end
+            ch = self._peek()
+            if ch == "]":
+                self.pos += 1
+                return
+            if ch != ",":
+                raise _unexpected(ch, "',' or ']' after a feature")
+            self.pos += 1
+            ch = self._peek()
+
+    def _collection(self) -> Iterator[tuple[str, Any]]:
+        """The features of the object at ``pos``; its other members are
+        skipped (scalars are still parsed, so they are validated)."""
+        self.pos += 1  # '{'
+        found = False
+        ch = self._peek()
+        while ch != "}":
+            if ch != '"':
+                raise _unexpected(ch, "a member name")
+            key, self.pos = self._decode()
+            ch = self._peek()
+            if ch != ":":
+                raise _unexpected(ch, f"':' after member {key!r}")
+            self.pos += 1
+            ch = self._peek()
+            if key == "features":
+                if ch != "[":
+                    raise MalformedGeoJson("FeatureCollection has no `features` array")
+                found = True
+                yield from self._features()
+            elif ch in ("[", "{"):
+                self._skip()
+            else:
+                _, self.pos = self._decode()
+            ch = self._peek()
+            if ch == ",":
+                self.pos += 1
+                ch = self._peek()
+                if ch == "}":
+                    raise MalformedGeoJson("trailing ',' in FeatureCollection")
+            elif ch != "}":
+                raise _unexpected(ch, f"',' or '}}' after member {key!r}")
+        self.pos += 1
+        if not found:
+            raise MalformedGeoJson("FeatureCollection has no `features` array")
+
+    def __iter__(self) -> Iterator[tuple[str, Any]]:
+        # whitespace-separated objects (one FeatureCollection per line)
+        # stream one after another
+        ch = self._peek()
+        if ch != "{":
+            raise MalformedGeoJson("FeatureCollection has no `features` array")
+        while ch:
+            if ch != "{":
+                raise MalformedGeoJson(f"unexpected {ch!r} after the FeatureCollection")
+            yield from self._collection()
+            ch = self._peek()
+
+
+def iter_features(stream, chunk_size: int = 1 << 20) -> Iterator[tuple[str, Any]]:
+    """Yield ``(text, value)`` per feature of a FeatureCollection byte/str
+    stream: the exact source slice and its parse (``loads_json`` strictness).
+
+    Single pass, memory bounded by one feature + one chunk: a structural
+    walk of the top-level object hands each ``features`` element to the
+    stdlib C scanner and skips every other member. Malformed structure
+    (separators, non-object features, truncation) raises MalformedGeoJson
+    as soon as it is read.
+    """
+    return iter(_FeatureScanner(stream, chunk_size))
+
+
+def iter_feature_strings(stream, chunk_size: int = 1 << 20) -> Iterator[str]:
+    """Yield each feature's JSON text from a FeatureCollection byte/str stream
+    (the text half of :func:`iter_features`)."""
+    for text, _ in iter_features(stream, chunk_size):
+        yield text
 
 
 def _has_toplevel_features(head: str) -> bool:
     """True if a top-level (depth-1) ``"features": [`` KEY is visible in
     ``head`` — the sniff-cap disambiguator between a huge FC with a
     trailing ``type`` key (streamable) and a huge single document (not).
-    Same string/escape/depth rules as :func:`iter_feature_strings`.
+    Tracks strings, escapes and nesting depth.
 
     Two guards keep non-FC documents out: the root must be an object (a
     top-level ARRAY like ``["features", [1]]`` is never an FC), and a
@@ -297,8 +396,8 @@ def read_geojson(
                     if kind == "FeatureCollection":
                         batch: list[dict] = []
                         idx = 0
-                        for feat_str in iter_feature_strings(fh):
-                            batch.append(parse_feature_obj(loads_json(feat_str)))
+                        for _, obj in iter_features(fh):
+                            batch.append(parse_feature_obj(obj))
                             if len(batch) >= batch_size:
                                 out = _feature_rows(batch, idx)
                                 out["source_file"] = fpath

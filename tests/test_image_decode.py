@@ -115,3 +115,30 @@ def test_undecodable_row_is_named(spark, op, damage, why):
                  else (lambda: tile_pixels(df).collect(), "tile 2"))
     with pytest.raises(Exception, match=f"ValueError: {name}: {why}"):
         run()
+
+
+def test_ranges_equal_concatenated_aranges():
+    from geojson_spark.sources.images import _ranges
+
+    rng = np.random.default_rng(3)
+    cases = [(np.zeros(0, np.int64), np.zeros(0, np.int64)),  # no segments
+             (np.array([7, 2]), np.array([0, 0])),  # only empty ones
+             (np.array([5, 0, 9, 3]), np.array([0, 4, 0, 2]))]  # empty first/inside
+    for _ in range(20):
+        n = int(rng.integers(1, 60))
+        cases.append((rng.integers(0, 10**6, n), rng.integers(0, 5, n) * rng.integers(0, 50, n)))
+    for starts, lens in cases:
+        want = np.concatenate([np.arange(s, s + k) for s, k in zip(starts, lens)] + [[]])
+        got = _ranges(starts, lens)
+        assert got.dtype == np.int64 and np.array_equal(got, want.astype(np.int64))
+
+
+def test_decode_batch_equals_per_image_decode():
+    from geojson_spark.sources.images import decode_batch
+
+    rows = _image_rows()
+    pixels, lens, decoded = decode_batch(pa.RecordBatch.from_pandas(rows, preserve_index=False))
+    assert decoded.all()
+    want = [img.reshape(-1) for _, img in _decoded(rows)]
+    assert lens.tolist() == [p.size for p in want]
+    assert pixels.tobytes() == np.concatenate(want).tobytes()
