@@ -25,6 +25,7 @@ Column expressions over the geometry struct:
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, StringType
@@ -184,19 +185,16 @@ def st_geometry_collection(geoms: Column) -> Column:
     codec's canonical ``geoms_json`` through one Arrow-batched UDF (the
     only non-Column step in the constructor family)."""
 
-    @F.pandas_udf(StringType())
-    def _children_json(arr: pd.Series) -> pd.Series:
-        from geojson_spark.functions.geojson_codec import serialize_geometry
-        from geojson_spark.sources.geojson import _norm_geom
+    @F.arrow_udf(StringType())
+    def _children_json(arr: pa.Array) -> pa.Array:
+        from geojson_spark.functions.geojson_codec import serialize_geometries_batch
 
-        out = []
-        for children in arr:
-            if children is None:
-                out.append("[]")
-                continue
-            parts = [serialize_geometry(_norm_geom(c)) for c in children]
-            out.append("[" + ",".join(parts) + "]")
-        return pd.Series(out)
+        offs = arr.offsets.to_numpy()
+        texts = serialize_geometries_batch(arr.values.slice(offs[0], offs[-1] - offs[0]))
+        offs = (offs - offs[0]).tolist()
+        valid = arr.is_valid().to_numpy(zero_copy_only=False).tolist()
+        return pa.array(["[" + ",".join(texts[a:b]) + "]" if v else "[]"
+                         for a, b, v in zip(offs[:-1], offs[1:], valid)], pa.string())
 
     return _geom_struct_cols(
         "GeometryCollection",

@@ -45,7 +45,10 @@ from __future__ import annotations
 
 import json
 import math
+import re
 from typing import Any
+
+import numpy as np
 
 from geojson_spark.errors import (
     ExpectedType,
@@ -591,6 +594,278 @@ def serialize_geojson(kind: str, obj: dict) -> str:
     if kind == "FeatureCollection":
         return serialize_feature_collection(obj)
     raise ExpectedType("Geometry|Feature|FeatureCollection", kind)
+
+
+# ---------------------------------------------------------------------------
+# batch serialize: Arrow struct arrays → the same text, a sub-batch at a time
+# ---------------------------------------------------------------------------
+
+# Python's repr prints `1e+16` / `1e-05` where ryu prints `1e16` / `1e-5`
+_EXPONENT = re.compile(r"e\+?(-?)0*(?=\d)")
+
+# geometry kinds of the batch kernel; a type outside the table serializes
+# its coordinates as a MultiPolygon, like ``serialize_coordinates``
+_POINT, _LINE, _POLYGON, _MULTILINE, _MULTIPOLYGON, _COLLECTION, _RAGGED = range(7)
+_KINDS = {"Point": _POINT, "MultiPoint": _LINE, "LineString": _LINE, "Polygon": _POLYGON,
+          "MultiLineString": _MULTILINE, "GeometryCollection": _COLLECTION}
+# The kernel walks every geometry as root → parts → rings → positions →
+# floats. Per kind, which of those four container levels print brackets:
+# a Polygon's one part, a LineString's one ring and a Point's root are
+# implied and print nothing.
+_PRINTED = np.array([[0, 0, 0, 1], [1, 0, 0, 1], [1, 0, 1, 1], [1, 0, 1, 1], [1, 1, 1, 1]])
+# bracket depth of a leaf whose innermost container sits at level X
+_DEPTH = np.cumsum(_PRINTED, axis=1)
+# the text before a leaf: `c` closes, a separator and `o` opens; code
+# 5c + o within a row, 25 + 5c + o where a new row starts
+_GAPS = np.array([("]" * c) + sep + ("[" * o)
+                  for sep in (",", "\n") for c in range(5) for o in range(5)], dtype=object)
+# floats per sub-batch: bounds the kernel's index and text arrays
+_BATCH_FLOATS = 1 << 18
+
+
+def _fmt_floats(v: np.ndarray) -> list[str]:
+    """``_fmt_f`` of every value of a float64 array in one C-speed pass: the repr of a list
+    prints each float's shortest round-trip text, one regex then writes the
+    exponents as ryu does."""
+    if not np.isfinite(v).all():
+        raise MalformedGeoJson("non-finite coordinate")
+    if not v.size:
+        return []
+    return _EXPONENT.sub(r"e\1", repr(v.tolist())[1:-1]).split(", ")
+
+
+def _expand(counts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Parent and rank within the parent of each child, for ``counts[k]``
+    children of parent ``k``."""
+    parent = np.repeat(np.arange(counts.size), counts)
+    first = np.cumsum(counts) - counts
+    return parent, np.arange(parent.size) - first[parent]
+
+
+def _fields(arr) -> dict:
+    """The children of a struct array, with its slice and nulls applied."""
+    return {f.name: col for f, col in zip(arr.type, arr.flatten())}
+
+
+def _strings(col, n: int) -> list:
+    # via NumPy: ``to_pylist`` builds an Arrow scalar per row, ~7x slower
+    return [None] * n if col is None else col.to_numpy(zero_copy_only=False).tolist()
+
+
+def _lists(col, n: int, null_len: int = 0, dtype=np.float64):
+    """A list column as ``(values, starts, lens, valid)``: row k holds
+    ``values[starts[k]:starts[k] + lens[k]]``. A null or absent list counts
+    ``null_len`` elements (the row serializer's `[0]` default of an offsets
+    array), which the kernel never reads. ``values`` ends in one padding
+    element, which index -1 reads."""
+    if col is None:
+        return (np.zeros(1, dtype), np.zeros(n, np.int64), np.full(n, null_len, np.int64),
+                np.zeros(n, bool))
+    valid = col.is_valid().to_numpy(zero_copy_only=False)
+    offs = col.offsets.to_numpy().astype(np.int64)
+    # ``values`` is the whole child of a sliced array: keep this slice's part
+    child = col.values.slice(offs[0], offs[-1] - offs[0])
+    offs -= offs[0]
+    if np.issubdtype(dtype, np.integer):
+        child = child.fill_null(-1)  # a null offset reads as out of range
+    values = np.append(child.to_numpy(zero_copy_only=False).astype(dtype), dtype(0))
+    return values, offs[:-1], np.where(valid, np.diff(offs), null_len), valid
+
+
+def _take(lists, rows: np.ndarray, j: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Element ``j`` of each row's list (0 where out of range) and whether
+    it was in range."""
+    values, starts, lens, _ = lists
+    ok = (j >= 0) & (j < lens[rows])
+    return values[np.where(ok, starts[rows] + j, -1)], ok
+
+
+def _children(counts: np.ndarray, empty: np.ndarray, level: int):
+    """Expand containers into their children: ``(parent, rank, empty)``.
+    A container with no children, or a placeholder, gets one placeholder
+    child, whose ``empty`` is the level of the empty container it stands
+    for (-1 for a real child)."""
+    counts = np.where(empty < 0, np.maximum(counts, 0), 0)
+    parent, rank = _expand(np.maximum(counts, 1))
+    own = np.where(counts[parent] == 0, level, -1)
+    return parent, rank, np.where(empty[parent] >= 0, empty[parent], own)
+
+
+def _coordinates_texts(kind, dim, coords, ring_offsets, part_offsets) -> list[str]:
+    """``serialize_coordinates`` of each row (kinds _POINT.._MULTIPOLYGON).
+
+    Every container gets at least one leaf: a float, or for an empty
+    container one placeholder that prints nothing, so the container prints
+    `[]`. The text before a leaf then follows from the bracket depths of
+    the leaf and its predecessor and the printed containers they share:
+    that many closes, a comma, that many opens."""
+    po_len = part_offsets[2]
+    # parts: a MultiPolygon has len(part_offsets) - 1, other kinds one
+    nparts = np.where(kind == _MULTIPOLYGON, po_len - 1, 1)
+    p_row, p_rank, p_empty = _children(nparts, np.full(kind.size, -1), 0)
+    # rings of each part, as indexes into ring_offsets
+    pk = kind[p_row]
+    lo, _ = _take(part_offsets, p_row, p_rank)
+    hi, _ = _take(part_offsets, p_row, p_rank + 1)
+    po1, _ = _take(part_offsets, p_row, np.ones_like(p_row))
+    nrings = np.select([pk == _MULTIPOLYGON, pk == _POLYGON, pk == _MULTILINE],
+                       [hi - lo, po1, po_len[p_row] - 1], 1)
+    r_part, r_rank, r_empty = _children(nrings, p_empty, 1)
+    r_row = p_row[r_part]
+    rk = kind[r_row]
+    line_of, _ = _take(part_offsets, r_row, r_rank)
+    ring = np.where(rk == _MULTILINE, line_of, np.where(rk == _MULTIPOLYGON, lo[r_part], 0) + r_rank)
+    # positions of each ring; a LineString/MultiPoint's one ring runs
+    # 0 .. ring_offsets[1], a Point's holds one position
+    listed = (r_empty < 0) & (rk >= _POLYGON)
+    start, ok_lo = _take(ring_offsets, r_row, ring)
+    stop, ok_hi = _take(ring_offsets, r_row, ring + 1)
+    if (listed & ~(ok_lo & ok_hi)).any():
+        raise MalformedGeoJson("geometry ring index outside its ring_offsets")
+    line_stop, _ = _take(ring_offsets, r_row, np.ones_like(r_row))
+    start = np.where(listed, start, 0)
+    npos = np.select([listed, rk == _LINE, rk == _POINT], [stop - start, line_stop, 1], 0)
+    q_ring, q_rank, q_empty = _children(npos, r_empty, 2)
+    q_row = r_row[q_ring]
+    # floats of each position
+    f_pos, f_rank, f_empty = _children(dim[q_row], q_empty, 3)
+    f_row = q_row[f_pos]
+    leaf = f_empty < 0
+    values, cstart, clen, _ = coords
+    at = (start[q_ring] + q_rank)[f_pos] * dim[f_row] + f_rank
+    if (leaf & ((at < 0) | (at >= clen[f_row]))).any():
+        raise MalformedGeoJson("geometry offsets point past its coordinates")
+    texts = np.full(f_row.size, "", dtype=object)
+    texts[leaf] = _fmt_floats(values[cstart[f_row[leaf]] + at[leaf]])
+    if not f_row.size:
+        return []
+    # the text before each leaf
+    fk = kind[f_row]
+    depth = _DEPTH[fk, np.where(leaf, 3, f_empty)]
+    prev_depth = np.r_[0, depth[:-1]]
+    same = np.stack([f_row, r_part[q_ring][f_pos], q_ring[f_pos], f_pos], axis=1)
+    shared = np.r_[0, ((same[1:] == same[:-1]) * _PRINTED[fk[1:]]).sum(axis=1)]
+    new_row = np.r_[True, f_row[1:] != f_row[:-1]]
+    code = np.where(new_row, 25 + 5 * prev_depth + depth, 5 * (prev_depth - shared) + depth - shared)
+    tokens = np.empty(2 * f_row.size, dtype=object)
+    tokens[0::2] = _GAPS[code]
+    tokens[1::2] = texts
+    return ("".join(tokens.tolist()) + "]" * int(depth[-1])).split("\n")[1:]
+
+
+def _subset(lists, sel: np.ndarray):
+    values, starts, lens, valid = lists
+    return values, starts[sel], lens[sel], valid[sel]
+
+
+def _bbox_texts(col, n: int) -> list:
+    """``_bbox_text`` of each row, None where the bbox is null."""
+    out = [None] * n
+    if col is None:
+        return out
+    values, starts, lens, valid = _lists(col, n)
+    rows = np.flatnonzero(valid)
+    if not rows.size:
+        return out
+    parent, rank = _expand(lens[rows])
+    texts = _fmt_floats(values[starts[rows][parent] + rank])
+    ends = np.cumsum(lens[rows]).tolist()
+    for i, a, b in zip(rows.tolist(), [0] + ends[:-1], ends):
+        out[i] = "[" + ",".join(texts[a:b]) + "]"
+    return out
+
+
+def _geometry_texts(geom) -> list:
+    """``serialize_geometry`` of each row of a geometry struct array, None
+    where the geometry or its ``geom_type`` is null."""
+    n = len(geom)
+    f = _fields(geom)
+    types = _strings(f.get("geom_type"), n)
+    raw = _strings(f.get("geoms_json"), n)
+    fms = _strings(f.get("foreign_members"), n)
+    bboxes = _bbox_texts(f.get("bbox"), n)
+    dim = (np.full(n, 2, np.int64) if f.get("dim") is None
+           else f["dim"].fill_null(2).to_numpy().astype(np.int64))
+    kind = np.array([-1 if t is None else _KINDS.get(t, _MULTIPOLYGON) for t in types], np.int64)
+    kind[(dim == -1) & (kind >= 0) & (kind != _COLLECTION)] = _RAGGED
+    sel = np.flatnonzero((kind >= 0) & (kind <= _MULTIPOLYGON))
+    coords = [None] * n
+    texts = _coordinates_texts(
+        kind[sel], dim[sel],
+        _subset(_lists(f.get("coords"), n), sel),
+        _subset(_lists(f.get("ring_offsets"), n, 1, np.int64), sel),
+        _subset(_lists(f.get("part_offsets"), n, 1, np.int64), sel))
+    for i, t in zip(sel.tolist(), texts):
+        coords[i] = t
+    type_json = {t: dumps_json(t) for t in set(types) if t is not None}
+    out = [None] * n
+    for i, (k, t, c, r, bb, fm) in enumerate(zip(kind.tolist(), types, coords, raw, bboxes, fms)):
+        if k < 0:
+            continue
+        if k == _COLLECTION:
+            body = '"geometries":' + (r or "[]")
+        elif k == _RAGGED:
+            if r is None:
+                raise MalformedGeoJson("ragged geometry without its coordinates text")
+            body = '"coordinates":' + r
+        else:
+            body = '"coordinates":' + c
+        out[i] = ("{" + ("" if bb is None else '"bbox":' + bb + ",") + '"type":' + type_json[t] + ","
+                  + body + _fm_tail(fm) + "}")
+    return out
+
+
+def _feature_texts(features) -> list[str]:
+    n = len(features)
+    f = _fields(features)
+    geoms = [None] * n if f.get("geometry") is None else _geometry_texts(f["geometry"])
+    return [
+        '{"type":"Feature"' + ("" if b is None else ',"bbox":' + b)
+        + ',"geometry":' + ("null" if g is None else g)
+        + ("" if i is None else ',"id":' + i)
+        + ',"properties":' + ("null" if p is None else p) + _fm_tail(fm) + "}"
+        for b, g, i, p, fm in zip(_bbox_texts(f.get("bbox"), n), geoms,
+                                  _strings(f.get("id_json"), n), _strings(f.get("properties"), n),
+                                  _strings(f.get("foreign_members"), n))
+    ]
+
+
+def _sub_batches(arr, coords):
+    """Consecutive slices of ``arr`` holding at most ``_BATCH_FLOATS`` of
+    the ``coords`` list column's floats; a longer row is a slice of its own."""
+    n = len(arr)
+    if coords is None:
+        yield arr
+        return
+    offs = coords.offsets.to_numpy()
+    a = 0
+    while a < n:
+        b = int(np.searchsorted(offs, offs[a] + _BATCH_FLOATS, side="right")) - 1
+        b = min(max(b, a + 1), n)
+        yield arr.slice(a, b - a)
+        a = b
+
+
+def serialize_geometries_batch(geometries) -> list:
+    """``serialize_geometry`` of every row of a ``GEOMETRY_STRUCT`` Arrow
+    struct array, byte for byte, with the row path's defaults for null
+    sub-fields (coords `[]`, offsets `[0]`, dim 2); None where the
+    geometry or its ``geom_type`` is null."""
+    coords = _fields(geometries).get("coords")
+    return [t for sub in _sub_batches(geometries, coords) for t in _geometry_texts(sub)]
+
+
+def serialize_features_batch(features) -> list[str]:
+    """``serialize_feature`` of every row of a ``FEATURE_SCHEMA`` Arrow
+    struct array, byte for byte (an absent field reads as null).
+
+    One pass per sub-batch of ~``_BATCH_FLOATS`` coordinates: every float
+    is checked with ``np.isfinite`` and formatted by one list repr, the
+    brackets and separators come from the offsets with NumPy, and the
+    coordinates of the whole sub-batch are one join."""
+    geom = _fields(features).get("geometry")
+    coords = None if geom is None else _fields(geom).get("coords")
+    return [t for sub in _sub_batches(features, coords) for t in _feature_texts(sub)]
 
 
 def serialize_geojson_pretty(kind: str, obj: dict, indent: int = 2) -> str:

@@ -17,11 +17,14 @@ Spark mappings for the reference's IO surface (SURVEY.md §2.1–§2.3):
   a directory of files parallelizes across executors and a single huge
   file still streams bounded-memory.
 - ``parse_features_udf`` — P1-P9 for a string column of GeoJSON docs.
-- ``to_feature_json``  — S1/S3: feature struct column → compact JSON string.
-- ``write_geojson``    — S4/S6: DataFrame → FeatureCollection document(s);
-  per-partition shards stream through ``GeoJsonFeatureWriter`` (the same
-  4-state machine as FeatureWriter, src/feature_writer.rs:7-268) and the
-  driver stitches the envelope.
+- ``to_feature_json``  — S1/S3: feature struct column → compact JSON string,
+  an Arrow UDF over the batch serializer ``serialize_features_batch``.
+- ``write_geojson``    — S4/S6: DataFrame → a directory of FeatureCollection
+  shards, in one Arrow pass: each partition's ``mapInArrow`` task
+  serializes its batches and streams them through ``GeoJsonFeatureWriter``
+  (the same 4-state machine as FeatureWriter, src/feature_writer.rs:7-268),
+  so every shard is one complete FeatureCollection document written by
+  the task that holds its rows.
 """
 
 from __future__ import annotations
@@ -33,6 +36,7 @@ from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
@@ -45,7 +49,8 @@ from geojson_spark.functions.geojson_codec import (
     parse_feature_obj,
     parse_geojson,
     serialize_feature,
-    serialize_geometry,
+    serialize_features_batch,
+    serialize_geometries_batch,
 )
 from geojson_spark.schema import FEATURE_SCHEMA
 
@@ -715,48 +720,26 @@ def parse_feature_udf(doc_col, strict: bool = True):
     return _parse(doc_col)
 
 
-def _norm_geom(g) -> dict | None:
-    """Arrow row dict → codec geometry dict (None-safe, ndarray → list)."""
-    if g is None or g.get("geom_type") is None:
-        return None
-    g = dict(g)
-    g["coords"] = [float(v) for v in (g.get("coords") if g.get("coords") is not None else [])]
-    g["ring_offsets"] = [int(v) for v in (g.get("ring_offsets") if g.get("ring_offsets") is not None else [0])]
-    g["part_offsets"] = [int(v) for v in (g.get("part_offsets") if g.get("part_offsets") is not None else [0])]
-    g["dim"] = int(g.get("dim") if g.get("dim") is not None else 2)
-    g["bbox"] = [float(v) for v in g["bbox"]] if g.get("bbox") is not None else None
-    return g
-
-
 def to_feature_json(feature_struct_col):
     """Feature struct column → compact GeoJSON Feature string (S1/S3).
 
-    Struct columns arrive in pandas UDFs as a pd.DataFrame of fields.
-    """
+    An Arrow UDF: each batch arrives as one ``pa.StructArray`` and goes
+    through ``serialize_features_batch`` whole."""
 
-    @F.pandas_udf(StringType())
-    def _ser(s: pd.DataFrame) -> pd.Series:
-        out = []
-        for row in s.to_dict("records"):
-            f = dict(row)
-            f["geometry"] = _norm_geom(f.get("geometry"))
-            f["bbox"] = [float(v) for v in f["bbox"]] if f.get("bbox") is not None else None
-            out.append(serialize_feature(f))
-        return pd.Series(out)
+    @F.arrow_udf(StringType())
+    def _ser(s: pa.Array) -> pa.Array:
+        return pa.array(serialize_features_batch(s), pa.string())
 
     return _ser(feature_struct_col)
 
 
 def to_geometry_json(geometry_struct_col):
-    """Geometry struct column → compact GeoJSON geometry string."""
+    """Geometry struct column → compact GeoJSON geometry string (null for
+    a null geometry), through ``serialize_geometries_batch``."""
 
-    @F.pandas_udf(StringType())
-    def _ser(s: pd.DataFrame) -> pd.Series:
-        out = []
-        for row in s.to_dict("records"):
-            g = _norm_geom(row)
-            out.append(serialize_geometry(g) if g is not None else None)
-        return pd.Series(out)
+    @F.arrow_udf(StringType())
+    def _ser(s: pa.Array) -> pa.Array:
+        return pa.array(serialize_geometries_batch(s), pa.string())
 
     return _ser(geometry_struct_col)
 
@@ -888,12 +871,16 @@ class GeoJsonFeatureWriter:
 
 
 def write_geojson(df: DataFrame, path: str, feature_col: str = "feature_json") -> None:
-    """DataFrame → a directory of FeatureCollection shard documents.
+    """DataFrame → a directory of FeatureCollection shard documents, in one
+    Arrow pass.
 
-    Executors stream their partitions through GeoJsonFeatureWriter (no
-    buffering of the whole collection — FeatureWriter semantics at cluster
-    scale); each partition is a complete, spec-valid FeatureCollection
-    file. Pre-existing shards are removed first so a rerun with fewer
+    Each partition is one ``mapInArrow`` task: it serializes its Arrow
+    batches with ``serialize_features_batch`` (or takes ``feature_col``'s
+    strings when the frame has that column) and streams them through
+    GeoJsonFeatureWriter into its own complete, spec-valid
+    ``part-NNNNN.geojson`` (FeatureWriter semantics at cluster scale: no
+    buffering of the whole collection). An empty partition writes no
+    shard. Pre-existing shards are removed first so a rerun with fewer
     partitions cannot leave stale data behind.
     """
     os.makedirs(path, exist_ok=True)
@@ -901,31 +888,35 @@ def write_geojson(df: DataFrame, path: str, feature_col: str = "feature_json") -
         if old.startswith("part-") and old.endswith(".geojson"):
             os.remove(os.path.join(path, old))
 
-    if feature_col not in df.columns:
-        df = df.withColumn("feature_json", to_feature_json(F.struct(*FEATURE_SCHEMA.names)))
-        feature_col = "feature_json"
+    given = feature_col in df.columns
+    cols = [feature_col] if given else [n for n in FEATURE_SCHEMA.names if n != "feature_idx"]
 
-    out = df.select(F.col(feature_col))
-
-    def write_partition(rows):
+    def write_shard(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
         tmp = os.path.join(path, f".part-{pid:05d}.geojson.tmp")
         final = os.path.join(path, f"part-{pid:05d}.geojson")
         n = 0
-        with open(tmp, "w", encoding="utf-8") as fh:
-            with GeoJsonFeatureWriter(fh) as w:
-                for row in rows:
-                    if row[0] is not None:
-                        w.write_feature_json(row[0])
-                        n += 1
+        try:
+            with open(tmp, "w", encoding="utf-8") as fh, GeoJsonFeatureWriter(fh) as w:
+                for batch in batches:
+                    texts = (batch.column(0).to_numpy(zero_copy_only=False).tolist() if given
+                             else serialize_features_batch(batch.to_struct_array()))
+                    for text in texts:
+                        if text is not None:
+                            w.write_feature_json(text)
+                            n += 1
+        except BaseException:
+            os.remove(tmp)  # a failed task leaves no partial shard behind
+            raise
         if n:
             os.replace(tmp, final)
         else:
             os.remove(tmp)
+        yield pa.record_batch({"features": pa.array([n], pa.int64())})
 
-    out.foreachPartition(write_partition)
+    df.select(*cols).mapInArrow(write_shard, "features long").collect()
 
 
 def explode_geometry_collections(df, geometry_col: str = "geometry", *, recursive: bool = True):
