@@ -4,14 +4,24 @@ All of them are *compositions of built-in DataFrame ops* around one vectorized
 refine kernel (SURVEY.md §2.8): cover/explode → equi-join on cell keys
 (Catalyst picks broadcast-hash vs sort-merge; we force broadcast for small
 polygon sides per the north rule's 'adaptive broadcast') → exact NumPy
-refinement in an Arrow-batched UDF. No driver-side loops over rows; the only
-driver logic is plan construction.
+refinement in an Arrow-batched UDF. The driver never reads the large side:
+its logic is plan construction and, for a side of at most
+``_SMALL_SIDE_ROWS`` rows, NumPy planning over that side and a merge of
+bounded per-task results.
 
-Grid kNN, hex kNN and the distance join share one ring-candidate core:
-``_grid_ring`` explodes each query to the grid cells of its Chebyshev ring
-(hex kNN explodes its k-ring in a UDF instead), and ``_topk`` re-ranks the
-candidates, checks completeness and re-solves the rest by brute force. Per
-index only the ring and the completeness bound differ.
+Grid kNN, hex kNN and the distance join share one ring-candidate core.
+A query side of at most ``_SMALL_SIDE_ROWS`` rows (squared-degree metric)
+is planned on the driver: one bounded collect, a cell-sorted ring table
+shipped in the closure, and one ``mapInArrow`` pass over the points that
+finds each point's candidates with ``searchsorted`` and keeps a running
+per-query top-k (kNN) or emits the pairs within the radius (distance) — no
+exchange, no UDF, no checkpoint. kNN merges the tasks' top-k on the driver
+and re-solves the queries that fail the completeness bound in a second,
+brute-force pass. Larger sides go through Spark: ``_grid_ring`` explodes
+each query to the grid cells of its Chebyshev ring (hex kNN explodes its
+k-ring in a UDF instead), and ``_topk`` re-ranks the candidates, checks
+completeness and re-solves the rest by brute force. Per index only the
+ring and the completeness bound differ.
 
 Scale notes (100 TB design point):
 - polygon covers are multi-level: each polygon picks the coarsest cell level
@@ -19,7 +29,7 @@ Scale notes (100 TB design point):
   ~1k join keys instead of 10^8 level-13 cells; points join each level via
   pure-bit-arithmetic ancestor keys (no UDF, no extra shuffle).
 - PIP ships each polygon's geometry once. A polygon side of at most
-  ``_PIP_EXACT_ROWS`` rows and ``_PIP_EXACT_BYTES`` of coords is planned on
+  ``_SMALL_SIDE_ROWS`` rows and ``_PIP_EXACT_BYTES`` of coords is planned on
   the driver: two bounded collects (sizes first, then the geometry; no
   Spark job for a local relation), exact covers from the same NumPy
   functions the cover UDFs run, and a broadcast decision from the exact
@@ -29,25 +39,32 @@ Scale notes (100 TB design point):
   every cover row. Grid covers explode per cell column, not per cell, on
   both paths. Both refine with one segmented NumPy ray cast, in bounded
   point×edge chunks — no per-polygon loop.
-- kNN ring-expansion is Column-only (two sequence-explodes per query).
-  The auto ring coarsens the cells instead of widening the ring, so an
-  auto-sized query explodes to at most 81 cells whatever the density; the
-  completeness check is a window over the re-rank's own partitioning (no
-  extra exchange), and the brute-force fallback touches only unsatisfied
-  queries (usually none), so the crossJoin never sees the big table.
+- kNN ring-expansion of a large query side is Column-only (two
+  sequence-explodes per query). The auto ring coarsens the cells instead
+  of widening the ring, so an auto-sized query explodes to at most 81
+  cells whatever the density; the completeness check is a window over the
+  re-rank's own partitioning (no extra exchange), and the brute-force
+  fallback touches only unsatisfied queries (usually none), so the
+  crossJoin never sees the big table.
+- A small side's kNN pass yields at most ``rows·k ≤ _PAIR_CHUNK`` rows per
+  task; the driver merges tasks × that many rows at most.
 """
 
 from __future__ import annotations
 
 import math as _math
+from functools import partial
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
+    DoubleType,
     IntegerType,
     LongType,
     StructField,
@@ -84,9 +101,10 @@ PIP_BROADCAST_MAX_BYTES = 1 << 30
 # that fits
 PIP_MAX_COVER_CELLS = 1024
 
-# pip_join plans a polygon side of at most this many rows on the driver;
-# the probe of a larger side measures a hash sample of about this many rows
-_PIP_EXACT_ROWS = 2048
+# pip_join plans a polygon side, and the ring joins a query side, of at
+# most this many rows on the driver; the probe of a larger polygon side
+# measures a hash sample of about this many rows
+_SMALL_SIDE_ROWS = 2048
 # ... if its coords take at most this many bytes: the driver holds them as
 # Python lists (~4x) and every refine task unpickles their edge table
 # (~2x) from the UDF's closure
@@ -94,9 +112,10 @@ _PIP_EXACT_BYTES = 1 << 24
 # hashed-relation bytes per broadcast cover row on the small-side path:
 # the row (≤ 5 fields), its next pointer and its index slot
 _PIP_COVER_ROW_BYTES = 64
-# point×edge pairs per ray-cast step, and coords per large-side edge table:
-# bounds the refine's temporaries whatever the batch and polygon sizes
-_PIP_PAIR_CHUNK = 1 << 20
+# point×edge pairs per ray-cast step, coords per large-side edge table,
+# point×query pairs per ring-join step and a small kNN side's k·rows:
+# bounds the temporaries whatever the batch, polygon and query sizes
+_PAIR_CHUNK = 1 << 20
 # columns pip_join adds next to the points' own (lower case: Spark
 # resolves names case-insensitively)
 _PIP_INTERNAL = ("cell_id", "_leaf", "_gy", "_gy0", "_gy1", "_pip_idx", "poly_id", "coords",
@@ -285,22 +304,27 @@ def _edge_table(coords, ring_offsets, dims) -> tuple:
     return x1, y1, y2, slope, off
 
 
-def _ray_cast(px, py, poly, table, chunk: int = _PIP_PAIR_CHUNK) -> np.ndarray:
+def _pairs(lo, cnt, chunk: int):
+    """Every pair ``(i, j)`` with ``lo[i] <= j < lo[i] + cnt[i]``, as index
+    arrays of at most ``chunk`` pairs each, in order of ``i`` (a slice may
+    split one ``i``'s run)."""
+    end = np.cumsum(cnt)
+    total = int(end[-1]) if end.size else 0
+    for s in range(0, total, chunk):
+        k = np.arange(s, min(s + chunk, total))
+        i = np.searchsorted(end, k, side="right")
+        yield i, k - end[i] + cnt[i] + lo[i]
+
+
+def _ray_cast(px, py, poly, table, chunk: int = _PAIR_CHUNK) -> np.ndarray:
     """Segmented even-odd ray cast: ``inside[i]`` iff point ``(px[i],
     py[i])`` lies in polygon ``poly[i]`` of ``table`` (``_edge_table``).
     Every point×edge pair goes through one NumPy pass, ``chunk`` pairs at
     a time (a chunk may split a point's edges), with the IEEE operations
     of ``points_in_ring`` — bit-identical to ``points_in_polygon``."""
     x1, y1, y2, slope, off = table
-    n = px.shape[0]
-    cnt = off[poly + 1] - off[poly]
-    end = np.cumsum(cnt)
-    shift = off[poly] + cnt - end  # pair k of point c is edge k + shift[c]
-    hits = np.zeros(n, dtype=np.int64)
-    for s in range(0, int(end[-1]) if n else 0, chunk):
-        k = np.arange(s, min(s + chunk, end[-1]))
-        c = np.searchsorted(end, k, side="right")
-        e = k + shift[c]
+    hits = np.zeros(px.shape[0], dtype=np.int64)
+    for c, e in _pairs(off[poly], off[poly + 1] - off[poly], chunk):
         cy = py[c]
         ey = y1[e]
         with np.errstate(invalid="ignore"):
@@ -324,7 +348,7 @@ def _refine_udf(table):
     return _refine
 
 
-def _refine_rows(px, py, coords, ring_offsets, dims, chunk: int = _PIP_PAIR_CHUNK) -> np.ndarray:
+def _refine_rows(px, py, coords, ring_offsets, dims, chunk: int = _PAIR_CHUNK) -> np.ndarray:
     """``inside[i]`` iff point i lies in polygon row i (the large-side
     path: every candidate row carries its polygon). Rows go through
     ``_ray_cast`` in slices of at most ``chunk`` coords (a row larger than
@@ -366,16 +390,16 @@ def pip_refine_udf():
 
 def _collect_small_side(polygons: DataFrame):
     """The rows ``(poly_id, bbox, coords, ring_offsets, dim)`` of a polygon
-    side of at most ``_PIP_EXACT_ROWS`` rows and ``_PIP_EXACT_BYTES`` of
+    side of at most ``_SMALL_SIDE_ROWS`` rows and ``_PIP_EXACT_BYTES`` of
     coords; None for any other side. Two bounded collects — a local
     relation such as ``createDataFrame(pandas)`` collects with no Spark
     job: the first fetches only the coords sizes, so the geometry crosses
     to the driver only when both bounds hold."""
     side = polygons.select("poly_id", "bbox", "coords", "ring_offsets", "dim").limit(
-        _PIP_EXACT_ROWS + 1)
+        _SMALL_SIDE_ROWS + 1)
     sizes = side.selectExpr("size(coords)").collect()
     # size(null) is null or -1, depending on the session
-    if len(sizes) > _PIP_EXACT_ROWS or 8 * sum(max(s or 0, 0) for (s,) in sizes) > _PIP_EXACT_BYTES:
+    if len(sizes) > _SMALL_SIDE_ROWS or 8 * sum(max(s or 0, 0) for (s,) in sizes) > _PIP_EXACT_BYTES:
         return None
     return side.collect()
 
@@ -412,7 +436,7 @@ def _small_side_cover(polygons: DataFrame, rows, index: str, cpd: int):
 
 
 def _broadcast_probe(polygons: DataFrame, cover_rows: Column) -> bool:
-    """Broadcast decision for a side of more than ``_PIP_EXACT_ROWS`` rows,
+    """Broadcast decision for a side of more than ``_SMALL_SIDE_ROWS`` rows,
     ``cover_rows`` being a polygon's exploded cover rows.
 
     Two steps, each bounded. Step 1: a bare count — no cover UDF in the
@@ -421,7 +445,7 @@ def _broadcast_probe(polygons: DataFrame, cover_rows: Column) -> bool:
     aggregation ran the cover UDF on ~1/16 of ALL rows even when the count
     alone decided the answer). Step 2 (small enough sides only): cover and
     bytes stats over a deterministic hash sample of at most
-    ``_PIP_EXACT_ROWS`` EXPECTED rows — an absolute bound on cover-UDF
+    ``_SMALL_SIDE_ROWS`` EXPECTED rows — an absolute bound on cover-UDF
     evaluations, not a fraction that grows with the table."""
     n_polys = polygons.count()
     if n_polys > PIP_BROADCAST_MAX_ROWS:
@@ -429,7 +453,7 @@ def _broadcast_probe(polygons: DataFrame, cover_rows: Column) -> bool:
     if n_polys == 0:
         return True
     bytes_expr = cover_rows * (F.size(F.col("coords")) * F.lit(8.0) + F.lit(64.0))
-    mod = -(-n_polys // _PIP_EXACT_ROWS)  # ceil: n / mod ≤ _PIP_EXACT_ROWS
+    mod = -(-n_polys // _SMALL_SIDE_ROWS)  # ceil: n / mod ≤ _SMALL_SIDE_ROWS
     sampled = F.pmod(F.xxhash64(F.col("poly_id")), F.lit(mod)) == 0
 
     # E[cover·bytes], NOT E[cover]·E[bytes]: cover size and coords
@@ -616,8 +640,11 @@ def _topk(cand, queries, points, k, dist, bound, safe, out_cols, names) -> DataF
     w = Window.partitionBy(q_id).orderBy(F.col(dist_name).asc(), F.col(p_id).asc())
 
     def rank(df: DataFrame) -> DataFrame:
-        df = df.withColumn(dist_name, dist_col).withColumn("rn", F.row_number().over(w))
-        return df.where(F.col("rn") <= k)
+        # a null or NaN distance (null or NaN coordinates) is never a
+        # neighbour: asc() sorts nulls first and would rank it 1
+        df = df.withColumn(dist_name, dist_col)
+        df = df.where(F.col(dist_name).isNotNull() & ~F.isnan(dist_name))
+        return df.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k)
 
     topk = rank(cand)
     if bound is None:
@@ -652,6 +679,205 @@ def _auto_ring(n_points: int, k: int, cpd: float) -> tuple[int, float]:
         if ring <= _AUTO_RING_MAX or cpd / 2 < _AUTO_CPD_MIN:
             return min(ring, _AUTO_RING_MAX), cpd
         cpd /= 2
+
+
+# ---------------------------------------------------------------------------
+# ring joins of a small query side: planned on the driver, one Arrow pass
+# over the points (no exchange, no UDF, no checkpoint)
+# ---------------------------------------------------------------------------
+
+# the kNN pass's columns: query index, point id, point lon/lat, distance
+_KNN_PASS = ("_q", "_p", "_x", "_y", "_d")
+_KNN_ORDER = [("_q", "ascending"), ("_d", "ascending"), ("_p", "ascending")]
+
+
+def _small_queries(queries: DataFrame, points: DataFrame, names, k: int = 1):
+    """``(ids, qx, qy)`` of a query side of at most ``_SMALL_SIDE_ROWS``
+    rows with ``rows·k ≤ _PAIR_CHUNK`` (the kNN pass yields at most that
+    many rows per task), double coordinates on both sides and ``k ≥ 1``;
+    None for any other side. ``ids`` is an Arrow array of the ``q_id``
+    values, ``qx``/``qy`` float64 (a null reads NaN). One bounded collect,
+    which starts no Spark job for a local relation."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    q_id, _, q_lon, q_lat, p_lon, p_lat = names
+    if k < 1 or any(side.schema[c].dataType != DoubleType()
+                    for side, c in ((queries, q_lon), (queries, q_lat), (points, p_lon), (points, p_lat))):
+        return None
+    rows = queries.select(q_id, q_lon, q_lat).limit(_SMALL_SIDE_ROWS + 1).collect()
+    if len(rows) > _SMALL_SIDE_ROWS or len(rows) * k > _PAIR_CHUNK:
+        return None
+    ids = pa.array([r[0] for r in rows], type=to_arrow_type(queries.schema[q_id].dataType))
+    qx, qy = (np.array([r[i] for r in rows], dtype=np.float64) for i in (1, 2))
+    return ids, qx, qy
+
+
+def _grid_key(x, y, cpd: float):
+    """``grid_cell``'s id ``gx·GRID_K + gy`` of each position with finite
+    coordinates, and that mask (the other ids are meaningless)."""
+    ok = np.isfinite(x) & np.isfinite(y)
+    gx = np.floor((np.where(ok, x, 0.0) + 180.0) * cpd).astype(np.int64)
+    gy = np.floor((np.where(ok, y, 0.0) + 90.0) * cpd).astype(np.int64)
+    return gx * GRID_K + gy, ok
+
+
+def _hex_key(x, y, res: int):
+    """``hex_cell_id`` of each position, and the mask of the finite ones."""
+    cell = _cells.hex_cell_id(x, y, res)
+    return cell, cell != -1
+
+
+def _ring_table(cells, valid):
+    """``(cell, query)`` of every ring cell (``cells``: queries × cells) of
+    the ``valid`` queries, sorted by cell."""
+    q = np.repeat(np.flatnonzero(valid).astype(np.int32), cells.shape[1])
+    cells = cells[valid].ravel()
+    order = np.argsort(cells, kind="stable")
+    return cells[order], q[order]
+
+
+def _grid_ring_table(qx, qy, cpd: float, ring: int):
+    """``_ring_table`` of the cells ``_grid_ring`` joins on:
+    ``(gx+dx)·GRID_K + (gy+dy)`` for |dx|, |dy| ≤ ``ring``."""
+    cell, ok = _grid_key(qx, qy, cpd)
+    d = np.arange(-abs(ring), abs(ring) + 1, dtype=np.int64)  # sequence(r, -r) for r < 0
+    offsets = (d[:, None] * GRID_K + d[None, :]).ravel()
+    return _ring_table(cell[:, None] + offsets, ok)
+
+
+def _hex_ring_table(qx, qy, res: int, ring: int):
+    """``_ring_table`` of each query's ``hex_k_ring``."""
+    cell, ok = _hex_key(qx, qy, res)
+    return _ring_table(_cells.hex_k_ring(cell, ring), ok)
+
+
+def _ring_pairs(batch, qx, qy, t_q, t_cell, key, chunk: int):
+    """``(i, q, d)`` of every candidate pair of an Arrow batch of points
+    ``(p_id, lon, lat)``: point row i, query q and the squared-degree
+    distance d (the Column metric's IEEE operations; NaN for a null
+    coordinate), ``chunk`` pairs at a time. Candidates are the ring table's
+    entries (``t_cell`` sorted, ``t_q``) on the point's ``key`` cell, or
+    with ``t_cell=None`` every query of ``t_q`` (brute force)."""
+    x = batch.column(1).to_numpy(zero_copy_only=False)  # nulls read NaN
+    y = batch.column(2).to_numpy(zero_copy_only=False)
+    if t_cell is None:
+        lo, cnt = np.zeros(x.size, np.int64), np.full(x.size, t_q.size, np.int64)
+    else:
+        cell, ok = key(x, y)
+        lo = np.searchsorted(t_cell, cell, "left")
+        cnt = np.where(ok, np.searchsorted(t_cell, cell, "right") - lo, 0)
+    for i, j in _pairs(lo, cnt, chunk):
+        q = t_q[j]
+        dx = x[i] - qx[q]
+        dy = y[i] - qy[q]
+        yield i, q, dx * dx + dy * dy
+
+
+def _best(t, k: int):
+    """The rows of a ``_KNN_PASS`` table that are among their query's
+    ``k`` best by (distance, point id) — nulls first, as Spark orders
+    ``p_id asc`` — sorted by query and rank, and their 1-based ranks."""
+    q, d = t.column("_q").to_numpy(), t.column("_d").to_numpy()
+    o = np.lexsort((d, q))
+    qs, ds = q[o], d[o]
+    lo = np.searchsorted(qs, qs, "left")
+    # a row past its query's k-th distance is out whatever its id
+    t = t.take(o[ds <= ds[np.minimum(lo + k, np.searchsorted(qs, qs, "right")) - 1]])
+    t = t.take(pc.sort_indices(t, sort_keys=_KNN_ORDER, null_placement="at_start"))
+    q = t.column("_q").to_numpy()
+    rn = np.arange(q.size) - np.searchsorted(q, q, "left") + 1
+    return t.filter(rn <= k), rn[rn <= k]
+
+
+def _knn_pass(points: DataFrame, names, k: int, qx, qy, t_q, t_cell=None, key=None) -> DataFrame:
+    """Each task's ``k`` best points per query as ``_KNN_PASS`` rows (at
+    most ``len(qx)·k`` per task), from one ``mapInArrow`` over the points:
+    candidates from ``_ring_pairs``, a running top-k by ``_best``. A point
+    whose distance is NaN (null or NaN coordinates) is never a
+    neighbour."""
+    _, p_id, _, _, p_lon, p_lat = names
+    chunk = _PAIR_CHUNK
+
+    def run(batches):
+        best = None
+        for b in batches:
+            for i, q, d in _ring_pairs(b, qx, qy, t_q, t_cell, key, chunk):
+                keep = ~np.isnan(d)
+                i, q = i[keep], q[keep]
+                t = pa.table([q, b.column(0).take(i), b.column(1).take(i), b.column(2).take(i),
+                              d[keep]], names=_KNN_PASS)
+                best = _best(t if best is None else pa.concat_tables([best, t]), k)[0]
+        if best is not None:
+            yield from best.to_batches()
+
+    schema = StructType([StructField("_q", IntegerType(), False),
+                         StructField("_p", points.schema[p_id].dataType),
+                         StructField("_x", DoubleType()), StructField("_y", DoubleType()),
+                         StructField("_d", DoubleType(), False)])
+    return points.select(p_id, p_lon, p_lat).mapInArrow(run, schema)
+
+
+def _knn_schema(queries: DataFrame, points: DataFrame, names, dist: str, grid: bool) -> StructType:
+    """The large path's output schema: grid ``[q_id, q_lon, q_lat, p_id,
+    p_lon, p_lat, dist, rn]``, hex ``[q_id, p_id, dist, rn]``."""
+    q_id, p_id, q_lon, q_lat, p_lon, p_lat = names
+    cols = [q_id, q_lon, q_lat, p_id, p_lon, p_lat] if grid else [q_id, p_id]
+    fields = [(queries if c in (q_id, q_lon, q_lat) else points).schema[c] for c in cols]
+    nullable = any(queries.schema[c].nullable for c in (q_lon, q_lat)) or any(
+        points.schema[c].nullable for c in (p_lon, p_lat))
+    return StructType([*fields, StructField(dist, DoubleType(), nullable),
+                       StructField("rn", IntegerType(), False)])
+
+
+def _small_knn(points, small, k, names, ring_table, key, bound, schema, dist) -> DataFrame:
+    """kNN of a small query side (``_small_queries``' ``small``): one
+    ``_knn_pass`` over the ring table, the global top-k per query on the
+    driver, and with ``bound`` a brute-force pass for the queries that fail
+    ``_topk``'s completeness test (k neighbours, the k-th ≤ ``bound``).
+    Returns the columns of ``schema`` (the large path's), the distance
+    named ``dist``, as a local relation."""
+    ids, qx, qy = small
+    t_cell, t_q = ring_table
+    best, rn = _best(_knn_pass(points, names, k, qx, qy, t_q, t_cell, key).toArrow(), k)
+    if bound is not None:
+        q, d = best.column("_q").to_numpy(), best.column("_d").to_numpy()
+        complete = np.zeros(qx.size, dtype=bool)
+        complete[q[rn == k]] = d[rn == k] <= bound
+        residual = np.flatnonzero(~complete).astype(np.int32)
+        if residual.size:
+            brute, brute_rn = _best(_knn_pass(points, names, k, qx, qy, residual).toArrow(), k)
+            best = pa.concat_tables([best.filter(complete[q]), brute])
+            rn = np.concatenate([rn[complete[q]], brute_rn])
+    q = best.column("_q").to_numpy()
+    q_id, p_id, q_lon, q_lat, p_lon, p_lat = names
+    cols = {q_id: ids.take(q), q_lon: qx[q], q_lat: qy[q], p_id: best.column("_p"),
+            p_lon: best.column("_x"), p_lat: best.column("_y"), dist: best.column("_d"),
+            "rn": rn.astype(np.int32)}
+    table = pa.table([cols[name] for name in schema.names], names=schema.names)
+    return points.sparkSession.createDataFrame(table, schema)
+
+
+def _small_distance(points: DataFrame, small, names, schema: StructType, r2: float,
+                    ring_table, key) -> DataFrame:
+    """Distance join of a small query side (``_small_queries``' ``small``)
+    in one ``mapInArrow`` over the points: every ``_ring_pairs`` candidate
+    with dist² ≤ ``r2``, as the columns of ``schema``."""
+    ids, qx, qy = small
+    t_cell, t_q = ring_table
+    chunk = _PAIR_CHUNK
+
+    def run(batches):
+        for b in batches:
+            for i, q, d in _ring_pairs(b, qx, qy, t_q, t_cell, key, chunk):
+                hit = d <= r2
+                if hit.any():
+                    i, q = i[hit], q[hit]
+                    yield pa.RecordBatch.from_arrays(
+                        [ids.take(q), qx[q], qy[q], *(b.column(c).take(i) for c in range(3))],
+                        names=schema.names)
+
+    _, p_id, _, _, p_lon, p_lat = names
+    return points.select(p_id, p_lon, p_lat).mapInArrow(run, schema)
 
 
 def knn_join(
@@ -693,11 +919,34 @@ def knn_join(
     count() (parquet row-group metadata). Exact answers do not depend on
     the sizing; ``exact=False`` ring answers do, and may differ between
     sizings. An explicit int ``ring`` uses ``cpd`` as given.
+
+    A point whose distance is null or NaN (null or NaN coordinates) is
+    never a neighbour, on either path.
+
+    Small query sides (``euclidean_deg2``, at most 2048 rows and
+    rows·k ≤ 2²⁰, double coordinates) skip Spark's join: one bounded
+    collect of the queries (no job for a local relation), the ring cells
+    built on the driver exactly as ``_grid_ring`` packs them, and one
+    ``mapInArrow`` pass over the points that keeps each task's top-k per
+    query by (dist, p_id). The driver takes the global top-k, applies the
+    same completeness test and runs a second, brute-force pass only for the
+    queries that fail it (none with ``exact=False``). The result is a local
+    relation with this path's exact schema. Haversine stays on the Spark
+    path: its Column trig is the oracle-matched derivation. Each query row
+    is answered on its own, so ``q_id`` should be unique (Spark's window
+    would mix the candidates of two queries that share one).
     """
+    names = (q_id, p_id, q_lon, q_lat, p_lon, p_lat)
+    small = _small_queries(queries, points, names, k) if metric == "euclidean_deg2" else None
     if ring == "auto":
         ring, cpd = _auto_ring(points.count(), k, cpd)
 
     cell_deg = 1.0 / cpd
+    if small is not None:
+        schema = _knn_schema(queries, points, names, "dist_km", grid=True)
+        return _small_knn(points, small, k, names, _grid_ring_table(*small[1:], cpd, ring),
+                          partial(_grid_key, cpd=cpd), (ring * cell_deg) ** 2 if exact else None,
+                          schema, "dist_km")
     if metric == "haversine":
         dist = haversine_km(F.col(q_lon), F.col(q_lat), F.col(p_lon), F.col(p_lat))
         # completeness bound: a point outside Chebyshev ring r differs by ≥
@@ -742,7 +991,6 @@ def knn_join(
     p = points.select(
         p_id, p_lon, p_lat, grid_cell(F.col(p_lon), F.col(p_lat), cpd).alias("cell_id")
     )
-    names = (q_id, p_id, q_lon, q_lat, p_lon, p_lat)
     out_cols = [q_id, q_lon, q_lat, p_id, p_lon, p_lat, "dist_km", "rn"]
     return _topk(q.join(p, "cell_id"), queries, points, k, ("dist_km", dist),
                  bound if exact else None, safe, out_cols, names)
@@ -777,10 +1025,18 @@ def knn_join_hex(
     neighborhood is expected to hold ~4k points at the measured global
     density — a fixed fine res on sparse data sends every query down the
     brute-force fallback (same rationale as knn_join's auto ring).
+
+    A small query side (as in ``knn_join``) runs no UDF: the driver builds
+    each query's ``hex_k_ring``, the points get ``hex_cell_id`` inside the
+    one ``mapInArrow`` pass, and the merge, completeness test and residual
+    pass are ``knn_join``'s. Larger sides explode the k-ring in a pandas
+    UDF and give the points their cell in another.
     """
     from geojson_spark.functions.cells import _hex_size, hex_k_ring
     from geojson_spark.functions.spark_funcs import hex_cell_udf
 
+    names = (q_id, p_id, q_lon, q_lat, p_lon, p_lat)
+    small = _small_queries(queries, points, names, k)
     if res == "auto":
         n_points = points.count()
         ring_cells = 1 + 3 * ring * (ring + 1)
@@ -790,6 +1046,16 @@ def knn_join_hex(
             if n_points * cell_area / 64800.0 * ring_cells >= 4.0 * k:
                 res = r
                 break
+    # a point outside hex-ring r has hex-distance ≥ r+1; center separation
+    # per unit hex distance is MINIMIZED along the lattice diagonal at
+    # 1.5·size (the √3·size axis value is the maximum, not the minimum, so
+    # √3·r − 2 over-promises for r ≥ 7); points deviate ≤ size from their
+    # centers
+    bound2 = max(0.0, (1.5 * (ring + 1) - 2.0) * _hex_size(res)) ** 2
+    if small is not None:
+        schema = _knn_schema(queries, points, names, "dist2", grid=False)
+        return _small_knn(points, small, k, names, _hex_ring_table(*small[1:], res, ring),
+                          partial(_hex_key, res=res), bound2 if exact else None, schema, "dist2")
 
     @F.pandas_udf(ArrayType(LongType()))
     def _ring(lon: pd.Series, lat: pd.Series) -> pd.Series:
@@ -801,13 +1067,6 @@ def knn_join_hex(
     p = points.select(p_id, p_lon, p_lat, hex_cell_udf(res)(F.col(p_lon), F.col(p_lat)).alias("hex_id"))
     dx = F.col(p_lon) - F.col(q_lon)
     dy = F.col(p_lat) - F.col(q_lat)
-    # a point outside hex-ring r has hex-distance ≥ r+1; center separation
-    # per unit hex distance is MINIMIZED along the lattice diagonal at
-    # 1.5·size (the √3·size axis value is the maximum, not the minimum, so
-    # √3·r − 2 over-promises for r ≥ 7); points deviate ≤ size from their
-    # centers
-    bound2 = max(0.0, (1.5 * (ring + 1) - 2.0) * _hex_size(res)) ** 2
-    names = (q_id, p_id, q_lon, q_lat, p_lon, p_lat)
     return _topk(q.join(p, "hex_id"), queries, points, k, ("dist2", dx * dx + dy * dy),
                  F.lit(bound2) if exact else None, F.lit(True),
                  [q_id, p_id, "dist2", "rn"], names)
@@ -850,11 +1109,30 @@ def distance_join(
 
     Scale: one equi-join shuffle; fan-out = ring² cells per query; AQE
     skew-join splits dense cells. No UDF anywhere.
+
+    A small ``euclidean_deg2`` query side (at most 2048 rows, double
+    coordinates) joins in one ``mapInArrow`` pass over the points instead:
+    the ring table (the same cells) rides in the closure, each point finds
+    its queries with ``searchsorted`` and the pass emits the pairs with
+    dist² ≤ radius² — no exchange, no job but the bounded collect of the
+    queries (none for a local relation). A ring beyond ``max_ring`` pairs
+    every point with every query inside the same pass.
     """
     dxc = F.col(p_lon) - F.col(q_lon)
     dyc = F.col(p_lat) - F.col(q_lat)
+    names = (q_id, p_id, q_lon, q_lat, p_lon, p_lat)
     if metric == "euclidean_deg2":
         ring = int(np.ceil(radius * cpd)) + 1
+        small = _small_queries(queries, points, names)
+        if small is not None:
+            schema = StructType([queries.schema[c] for c in (q_id, q_lon, q_lat)]
+                                + [points.schema[c] for c in (p_id, p_lon, p_lat)])
+            if ring <= max_ring:
+                ring_table, key = _grid_ring_table(*small[1:], cpd, ring), partial(_grid_key, cpd=cpd)
+            else:  # the fan-out cap binds: every query by brute force
+                ring_table, key = (None, np.arange(small[1].size, dtype=np.int32)), None
+            return _small_distance(points, small, names, schema,
+                                   float(radius) * float(radius), ring_table, key)
         rx = F.lit(ring).cast("bigint")
         ry = F.lit(ring).cast("bigint")
         pred = (dxc * dxc + dyc * dyc) <= F.lit(float(radius) * float(radius))

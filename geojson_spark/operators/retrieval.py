@@ -98,7 +98,8 @@ def bm25_topk(
     returning — so repeated calls leave no corpus-sized storage behind;
     the tiny checkpoint blocks backing each returned frame are reclaimed
     by the ContextCleaner when the frame is GC'd, the same discipline as
-    ``knn_join``'s eager localCheckpoint. Note this makes the call itself
+    the eager localCheckpoint of ``knn_join``'s top-k on its Spark path
+    (query sides over 2048 rows). Note this makes the call itself
     run the corpus job. Serving workloads that score many query batches should
     pass ``corpus_stats=bm25_corpus_stats(docs)`` computed once, which
     skips the persist (and the eager materialization) entirely.

@@ -1,20 +1,24 @@
-"""The shared kNN top-k core behind knn_join and knn_join_hex: exact
-answers (ring-complete queries and the brute-force residual) and the
+"""The kNN top-k behind knn_join and knn_join_hex: exact answers
+(ring-complete queries and the brute-force residual) and the
 ``exact=False`` ring answer, each against a NumPy brute force; the auto
-ring's cell coarsening; and the plan shape of a sparse auto-ring join."""
+ring's cell coarsening; the plan shape of a sparse auto-ring join; and the
+small query side's driver-planned Arrow pass (also distance_join's)
+against the Spark path, value for value and schema for schema."""
 
 from __future__ import annotations
 
 import itertools
 import math
 import re
+from unittest import mock
 
 import numpy as np
 import pandas as pd
 import pytest
 
 from geojson_spark.functions.geometry import haversine_km
-from geojson_spark.operators.joins import _auto_ring, knn_join, knn_join_hex
+from geojson_spark.operators import joins as joins_mod
+from geojson_spark.operators.joins import _auto_ring, distance_join, knn_join, knn_join_hex
 
 K = 5
 GRID_COLS = ["q_id", "q_lon", "q_lat", "p_id", "p_lon", "p_lat", "dist_km", "rn"]
@@ -188,6 +192,7 @@ def test_knn_sparse_auto_ring_plan_shape(spark, monkeypatch):
         return original(self, *args, **kwargs)
 
     monkeypatch.setattr(cls, "localCheckpoint", recording)
+    monkeypatch.setattr(joins_mod, "_SMALL_SIDE_ROWS", 0)  # the Spark path's plan
     out = knn_join(qs, pts, k, metric="euclidean_deg2")
     monkeypatch.undo()
     assert len(out.collect()) == nq * k
@@ -199,3 +204,180 @@ def test_knn_sparse_auto_ring_plan_shape(spark, monkeypatch):
     plans = "\n".join(d._jdf.queryExecution().executedPlan().toString() for d in (topk, out))
     assert not re.search(r"HashAggregate.*(count\(1\)|max\(dist_km)", plans)
     assert re.search(r"Window \[count\(1\) windowspecdefinition\(q_id", plans)
+
+
+# ---------------------------------------------------------------------------
+# small query sides: one Arrow pass, equal to the Spark path
+# ---------------------------------------------------------------------------
+
+
+def _both_paths(fn, queries, points, *args, **kwargs):
+    """(small path, Spark path) frames of one call."""
+    small = fn(queries, points, *args, **kwargs)
+    with mock.patch.object(joins_mod, "_SMALL_SIDE_ROWS", -1):  # an empty side too
+        large = fn(queries, points, *args, **kwargs)
+    return small, large
+
+
+def _assert_same(small, large, paths: bool = True):
+    if paths:  # (the Spark path checkpoints an empty side to an empty relation)
+        plans = [df._jdf.queryExecution().analyzed().toString() for df in (small, large)]
+        assert "Join" not in plans[0] and "Join" in plans[1]
+    assert small.schema == large.schema
+    key = lambda r: tuple((v is None, v) for v in r)  # noqa: E731
+    got, want = sorted(small.collect(), key=key), sorted(large.collect(), key=key)
+    assert got == want
+    return got
+
+
+def _with_ties(pp: pd.DataFrame) -> pd.DataFrame:
+    # five copies of one spot by Paris, under shuffled ids: ties at equal
+    # distance resolve by p_id
+    extra = pd.DataFrame({"p_id": [len(pp) + i for i in (4, 0, 3, 1, 2)],
+                          "p_lon": [2.36] * 5, "p_lat": [48.86] * 5})
+    return pd.concat([pp, extra], ignore_index=True)
+
+
+SMALL_CASES = {
+    "grid-auto": (knn_join, {"metric": "euclidean_deg2"}),
+    "grid-ring1": (knn_join, {"metric": "euclidean_deg2", "ring": 1, "cpd": 2}),
+    "grid-ring-only": (knn_join, {"metric": "euclidean_deg2", "exact": False}),
+    "hex-auto": (knn_join_hex, {}),
+    # a fine fixed res: the sparse queries fail the bound, the residual fires
+    "hex-res5": (knn_join_hex, {"res": 5, "ring": 1}),
+    "hex-ring-only": (knn_join_hex, {"exact": False}),
+}
+
+
+@pytest.mark.parametrize("points", ["mixed", "hotspot", "n0", "n3"])
+@pytest.mark.parametrize("case", list(SMALL_CASES))
+def test_knn_small_side_equals_spark_path(spark, case, points):
+    fn, kwargs = SMALL_CASES[case]
+    pp = _with_ties(POINT_SETS[points][0]())
+    small, large = _both_paths(fn, spark.createDataFrame(QUERIES),
+                               spark.createDataFrame(pp, "p_id long, p_lon double, p_lat double"),
+                               K, **kwargs)
+    got = _assert_same(small, large)
+    assert len(got) == (3 * K if kwargs.get("exact", True) and len(pp) >= K else len(got))
+
+
+@pytest.mark.parametrize("fn,kwargs", [(knn_join, {"metric": "euclidean_deg2"}),
+                                       (knn_join_hex, {"res": 5, "ring": 1})])
+def test_knn_small_side_string_ids_and_ties(spark, fn, kwargs):
+    # string ids order by their bytes, not by the numbers inside them
+    pp = _with_ties(_mixed())
+    pp["p_id"] = [f"img{(7 * i) % 10007:d}" for i in pp.p_id]
+    small, large = _both_paths(fn, spark.createDataFrame(QUERIES), spark.createDataFrame(pp),
+                               K, **kwargs)
+    got = _assert_same(small, large)
+    paris = [r for r in got if r.q_id == 0]
+    assert len(paris) == K and len({r.p_id for r in paris}) == K
+
+
+@pytest.mark.parametrize("fn,kwargs", [(knn_join, {"metric": "euclidean_deg2"}),
+                                       (knn_join_hex, {}),
+                                       (distance_join, {"radius": 1.0})])
+def test_ring_join_small_side_empty_queries(spark, fn, kwargs):
+    qs = spark.createDataFrame(QUERIES.iloc[:0], "q_id long, q_lon double, q_lat double")
+    pts = spark.createDataFrame(_mixed())
+    args = () if fn is distance_join else (K,)
+    small, large = _both_paths(fn, qs, pts, *args, **kwargs)
+    assert _assert_same(small, large, paths=False) == []
+
+
+@pytest.mark.parametrize("points", ["mixed", "hotspot", "n0", "n3"])
+@pytest.mark.parametrize("radius,max_ring", [(0.5, 32), (2.0, 32), (2.0, 4)])
+def test_distance_join_small_side_equals_spark_path(spark, points, radius, max_ring):
+    # radius 2.0 at cpd 8 needs ring 17: over a max_ring of 4, every
+    # query is brute force
+    pp = _with_ties(POINT_SETS[points][0]())
+    small, large = _both_paths(distance_join, spark.createDataFrame(QUERIES),
+                               spark.createDataFrame(pp), radius, max_ring=max_ring)
+    got = _assert_same(small, large)
+    d = _dist("deg2", QUERIES.iloc[0], pp)
+    assert sum(r.q_id == 0 for r in got) == int((d <= radius * radius).sum())
+
+
+def test_knn_small_side_pair_slices(spark, monkeypatch):
+    # the hotspot puts ~19k candidates on the Paris query: slices of 64
+    # pairs split every batch and every point's run, with the same answer
+    qs = spark.createDataFrame(QUERIES)
+    pts = spark.createDataFrame(_hotspot())
+    want = {}
+    for chunk in (joins_mod._PAIR_CHUNK, 64):
+        monkeypatch.setattr(joins_mod, "_PAIR_CHUNK", chunk)
+        for fn, kwargs in ((knn_join, {"metric": "euclidean_deg2"}), (knn_join_hex, {})):
+            rows = sorted(map(tuple, fn(qs, pts, K, **kwargs).collect()))
+            assert want.setdefault(fn.__name__, rows) == rows
+        rows = sorted(map(tuple, distance_join(qs, pts, 0.01).collect()))
+        assert want.setdefault("distance", rows) == rows
+    assert len(want["distance"]) > 10_000
+
+
+def _job_ids(sc):
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup())
+
+
+@pytest.mark.parametrize("fn,kwargs", [(knn_join, {"metric": "euclidean_deg2"}),
+                                       (knn_join_hex, {}),
+                                       (distance_join, {})])
+def test_ring_join_small_side_plan(spark, monkeypatch, fn, kwargs):
+    # one Arrow pass over the points: no exchange but the auto sizing's
+    # count, no Python UDF, no checkpoint; count + pass + output collect
+    from perfbench.spans import Tracer
+
+    rng = np.random.default_rng(11)
+    n, nq = 40_000, 120
+    pts = spark.createDataFrame(pd.DataFrame({
+        "p_id": np.arange(n), "p_lon": rng.uniform(-180, 180, n),
+        "p_lat": rng.uniform(-85, 85, n)}))
+    qs = spark.createDataFrame(pd.DataFrame({
+        "q_id": np.arange(nq), "q_lon": rng.uniform(-170, 170, nq),
+        "q_lat": rng.uniform(-75, 75, nq)}))
+    monkeypatch.setattr(type(pts), "localCheckpoint", mock.Mock(side_effect=AssertionError))
+    args = (0.5,) if fn is distance_join else (10,)
+    tracer = Tracer(spark, plans=True)
+    before = _job_ids(spark.sparkContext)
+    try:
+        with tracer.span("join") as rec:
+            rows = fn(qs, pts, *args, **kwargs).collect()
+    finally:
+        tracer.close()
+    assert len(_job_ids(spark.sparkContext) - before) <= (2 if fn is distance_join else 3)
+    names = [name for a in rec["actions"] for name, _ in a["rows"]]
+    assert sum(a["exchanges"] for a in rec["actions"]) == (0 if fn is distance_join else 1)
+    assert [n for n in names if n.startswith("MapInArrow")] == ["MapInArrow"]
+    assert not [n for n in names if n.startswith(("ArrowEvalPython", "BatchEvalPython"))]
+    assert len(rows) == (nq * 10 if fn is not distance_join else len(rows))
+
+
+@pytest.mark.parametrize("path", ["small", "spark"])
+@pytest.mark.parametrize("fn,kwargs", [(knn_join, {"metric": "euclidean_deg2"}),
+                                       (knn_join, {"metric": "haversine"}),
+                                       (knn_join_hex, {"res": 5, "ring": 1})])
+def test_knn_never_returns_points_without_coordinates(spark, monkeypatch, path, fn, kwargs):
+    # a null or NaN distance is no neighbour: Spark sorts nulls first, so
+    # the null-lon point used to come back at rn 1 for a query that fell
+    # to the brute-force residual, pushing out the true third neighbour
+    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+    rng = np.random.default_rng(3)
+    lon, lat = rng.uniform(-10, 10, 400), rng.uniform(-10, 10, 400)
+    rows = [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(lon, lat))]
+    rows += [(1000, None, 0.0), (1001, float("nan"), 0.0)]
+    schema = StructType([StructField("p_id", LongType()), StructField("p_lon", DoubleType()),
+                         StructField("p_lat", DoubleType())])
+    pts = spark.createDataFrame(rows, schema)
+    qs = spark.createDataFrame(pd.DataFrame({"q_id": [0, 1], "q_lon": [-170.0, 0.0],
+                                             "q_lat": [0.0, 0.0]}))
+    if path == "spark":
+        monkeypatch.setattr(joins_mod, "_SMALL_SIDE_ROWS", 0)
+    got = fn(qs, pts, 3, **kwargs).toPandas()
+    for q_id, qx, qy in ((0, -170.0, 0.0), (1, 0.0, 0.0)):
+        if kwargs.get("metric") == "haversine":
+            d = haversine_km(np.full(lon.size, qx), np.full(lon.size, qy), lon, lat)
+        else:
+            d = (lon - qx) ** 2 + (lat - qy) ** 2
+        g = got[got.q_id == q_id].sort_values("rn")
+        assert g.p_id.tolist() == np.lexsort((np.arange(lon.size), d))[:3].tolist(), q_id

@@ -203,7 +203,7 @@ def test_refine_rows_bounds_each_edge_table(spark, monkeypatch):
         {"poly_id": "big", "coords": big.tolist(), "ring_offsets": [0, 5001], "dim": 2,
          "bbox": [-1.0, -1.0, 1.0, 1.0]}]), POLY_SCHEMA)
     pts = spark.createDataFrame(pd.DataFrame({"p": np.arange(n), "lon": px, "lat": py}))
-    with mock.patch.object(joins_mod, "_PIP_EXACT_ROWS", 0):
+    with mock.patch.object(joins_mod, "_SMALL_SIDE_ROWS", 0):
         got = sorted(r.p for r in pip_join(pts, polys, broadcast_polygons=False).collect())
     inside = points_in_polygon(px, py, big, np.array([0, 5001]), 2)
     assert got == np.flatnonzero(inside).tolist()
@@ -269,7 +269,7 @@ def test_pip_small_and_large_side_paths_agree(spark, rects, seed, index):
     polys = spark.createDataFrame(pd.DataFrame(rows), POLY_SCHEMA)
 
     small = pip_join(pts, polys, index=index)
-    with mock.patch.object(joins_mod, "_PIP_EXACT_ROWS", 0):
+    with mock.patch.object(joins_mod, "_SMALL_SIDE_ROWS", 0):
         large = pip_join(pts, polys, index=index, broadcast_polygons=False)
     assert "_pip_idx" in small._jdf.queryExecution().analyzed().toString()
     assert "_pip_idx" not in large._jdf.queryExecution().analyzed().toString()
@@ -294,7 +294,7 @@ def test_pip_grid_paths_agree_beyond_packed_cpd(spark):
     pts = spark.createDataFrame(pd.DataFrame({"p": [1, 2, 3, 4], "lon": [0.5, 1.5, 100.1, 100.3],
                                               "lat": [0.5, 0.5, 60.1, 60.1]}))
     small = pip_join(pts, polys, cpd=32)
-    with mock.patch.object(joins_mod, "_PIP_EXACT_ROWS", 0):
+    with mock.patch.object(joins_mod, "_SMALL_SIDE_ROWS", 0):
         large = pip_join(pts, polys, cpd=32, broadcast_polygons=False)
     for joined in (small, large):
         assert sorted(map(tuple, joined.select("p", "poly_id").collect())) == [(1, "a"), (3, "b")]

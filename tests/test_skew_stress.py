@@ -149,9 +149,12 @@ def test_pip_join_hotcell_skew_split_and_bruteforce(spark):
     assert "skew=true" in plan, f"no AQE skew split in executed plan:\n{plan[-3000:]}"
 
 
-def test_distance_join_hotcell_skew_split_and_bruteforce(spark):
+def test_distance_join_hotcell_skew_split_and_bruteforce(spark, monkeypatch):
     """Queries ringed against a 30%-hot point table: exact pair parity vs
-    NumPy and the skew-split marker on the executed shuffled join."""
+    NumPy on both paths, and the skew-split marker on the executed
+    shuffled join of the Spark path (300 queries would otherwise take the
+    small query side's Arrow pass, which has no join to split)."""
+    from geojson_spark.operators import joins as joins_mod
     from geojson_spark.operators.joins import distance_join
 
     xy = _skewed_points(40_000, 0.30, seed=13)
@@ -174,6 +177,8 @@ def test_distance_join_hotcell_skew_split_and_bruteforce(spark):
         pd.DataFrame({"q_id": np.arange(len(q)), "q_lon": q[:, 0], "q_lat": q[:, 1]})
     )
 
+    small = distance_join(queries, pts, radius=radius).select("q_id", "p_id").collect()
+    monkeypatch.setattr(joins_mod, "_SMALL_SIDE_ROWS", 0)
     with _skew_confs(spark):
         out = distance_join(queries, pts, radius=radius).select("q_id", "p_id")
         rows = out.collect()
@@ -184,6 +189,7 @@ def test_distance_join_hotcell_skew_split_and_bruteforce(spark):
     qi, pi = np.where(d2 <= radius * radius)
     exp = {(int(a), int(b)) for a, b in zip(qi, pi)}
     assert got == exp
+    assert len(small) == len(exp) and {(r.q_id, r.p_id) for r in small} == exp
     assert len(exp) > 50_000  # the hot queries × hot blob really stress it
 
     assert "isFinalPlan=true" in plan
