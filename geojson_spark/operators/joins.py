@@ -46,8 +46,12 @@ Scale notes (100 TB design point):
   re-rank's own partitioning (no extra exchange), and the brute-force
   fallback touches only unsatisfied queries (usually none), so the
   crossJoin never sees the big table.
-- A small side's kNN pass yields at most ``rows·k ≤ _PAIR_CHUNK`` rows per
-  task; the driver merges tasks × that many rows at most.
+- A small side's ring table holds at most ``_PAIR_CHUNK`` (query, cell)
+  entries; a wider ring (a large distance radius, an explicit kNN ring)
+  goes through Spark. Its kNN pass yields at most rows·k rows per task and
+  runs only when tasks·rows·k ≤ ``_PAIR_CHUNK``, so what the driver merges
+  is bounded whatever the point table's partition count; more tasks go
+  through Spark.
 """
 
 from __future__ import annotations
@@ -658,8 +662,11 @@ def _topk(cand, queries, points, k, dist, bound, safe, out_cols, names) -> DataF
     # .cache() here would leak storage across repeated calls)
     topk = topk.withColumn("_ok", ok).localCheckpoint(eager=True)
     complete = topk.where("_ok")
-    done = complete.where(F.col("rn") == 1).select(q_id)
-    residual = queries.join(F.broadcast(done), q_id, "left_anti").select(q_id, q_lon, q_lat)
+    done = complete.where(F.col("rn") == 1).select(F.col(q_id).alias("_done"))
+    # null-safe: a complete query with a null q_id must not be re-solved
+    # (and answered twice) by the brute force
+    residual = queries.join(F.broadcast(done), F.col(q_id).eqNullSafe(F.col("_done")),
+                            "left_anti").select(q_id, q_lon, q_lat)
     brute = rank(residual.crossJoin(points.select(p_id, p_lon, p_lat)))
     return complete.select(*out_cols).unionByName(brute.select(*out_cols))
 
@@ -691,23 +698,28 @@ _KNN_PASS = ("_q", "_p", "_x", "_y", "_d")
 _KNN_ORDER = [("_q", "ascending"), ("_d", "ascending"), ("_p", "ascending")]
 
 
-def _small_queries(queries: DataFrame, points: DataFrame, names, k: int = 1):
+def _small_queries(queries: DataFrame, points: DataFrame, names, cells: int, k: int | None = None):
     """``(ids, qx, qy)`` of a query side of at most ``_SMALL_SIDE_ROWS``
-    rows with ``rows·k ≤ _PAIR_CHUNK`` (the kNN pass yields at most that
-    many rows per task), double coordinates on both sides and ``k ≥ 1``;
-    None for any other side. ``ids`` is an Arrow array of the ``q_id``
-    values, ``qx``/``qy`` float64 (a null reads NaN). One bounded collect,
-    which starts no Spark job for a local relation."""
+    rows whose ring table, ``cells`` per query, holds at most
+    ``_PAIR_CHUNK`` entries, with double coordinates on both sides; None
+    for any other side. kNN passes its ``k``: it needs ``k ≥ 1`` and each
+    ``q_id`` at most once (the Spark path's window pools the candidates of
+    a repeated one, so such a side goes there). ``ids`` is an Arrow array
+    of the ``q_id`` values, ``qx``/``qy`` float64 (a null reads NaN). One
+    bounded collect, which starts no Spark job for a local relation."""
     from pyspark.sql.pandas.types import to_arrow_type
 
     q_id, _, q_lon, q_lat, p_lon, p_lat = names
-    if k < 1 or any(side.schema[c].dataType != DoubleType()
-                    for side, c in ((queries, q_lon), (queries, q_lat), (points, p_lon), (points, p_lat))):
+    if (k is not None and k < 1) or any(
+            side.schema[c].dataType != DoubleType()
+            for side, c in ((queries, q_lon), (queries, q_lat), (points, p_lon), (points, p_lat))):
         return None
     rows = queries.select(q_id, q_lon, q_lat).limit(_SMALL_SIDE_ROWS + 1).collect()
-    if len(rows) > _SMALL_SIDE_ROWS or len(rows) * k > _PAIR_CHUNK:
+    if len(rows) > _SMALL_SIDE_ROWS or len(rows) * cells > _PAIR_CHUNK:
         return None
     ids = pa.array([r[0] for r in rows], type=to_arrow_type(queries.schema[q_id].dataType))
+    if k is not None and len(pc.unique(ids)) < len(ids):
+        return None
     qx, qy = (np.array([r[i] for r in rows], dtype=np.float64) for i in (1, 2))
     return ids, qx, qy
 
@@ -835,10 +847,16 @@ def _small_knn(points, small, k, names, ring_table, key, bound, schema, dist) ->
     driver, and with ``bound`` a brute-force pass for the queries that fail
     ``_topk``'s completeness test (k neighbours, the k-th ≤ ``bound``).
     Returns the columns of ``schema`` (the large path's), the distance
-    named ``dist``, as a local relation."""
+    named ``dist``, as a local relation; None when the point side has so
+    many partitions that the tasks' top-k rows (partitions·rows·k) would
+    exceed ``_PAIR_CHUNK``. The brute-force pass has as many tasks and at
+    most as many queries."""
     ids, qx, qy = small
     t_cell, t_q = ring_table
-    best, rn = _best(_knn_pass(points, names, k, qx, qy, t_q, t_cell, key).toArrow(), k)
+    ring_pass = _knn_pass(points, names, k, qx, qy, t_q, t_cell, key)
+    if ring_pass.rdd.getNumPartitions() * qx.size * k > _PAIR_CHUNK:
+        return None  # the driver would merge too many tasks' top-k
+    best, rn = _best(ring_pass.toArrow(), k)
     if bound is not None:
         q, d = best.column("_q").to_numpy(), best.column("_d").to_numpy()
         complete = np.zeros(qx.size, dtype=bool)
@@ -923,30 +941,36 @@ def knn_join(
     A point whose distance is null or NaN (null or NaN coordinates) is
     never a neighbour, on either path.
 
-    Small query sides (``euclidean_deg2``, at most 2048 rows and
-    rows·k ≤ 2²⁰, double coordinates) skip Spark's join: one bounded
-    collect of the queries (no job for a local relation), the ring cells
-    built on the driver exactly as ``_grid_ring`` packs them, and one
-    ``mapInArrow`` pass over the points that keeps each task's top-k per
-    query by (dist, p_id). The driver takes the global top-k, applies the
-    same completeness test and runs a second, brute-force pass only for the
-    queries that fail it (none with ``exact=False``). The result is a local
-    relation with this path's exact schema. Haversine stays on the Spark
-    path: its Column trig is the oracle-matched derivation. Each query row
-    is answered on its own, so ``q_id`` should be unique (Spark's window
-    would mix the candidates of two queries that share one).
+    Small query sides skip Spark's join: ``euclidean_deg2``, double
+    coordinates, at most 2048 rows with distinct ``q_id``s, rows·(2r+1)²
+    ≤ 2²⁰ ring cells, and partitions·rows·k ≤ 2²⁰ top-k rows from the
+    point side's tasks. One bounded collect of the queries (no job for a
+    local relation), the ring cells built on the driver exactly as
+    ``_grid_ring`` packs them, and one ``mapInArrow`` pass over the points
+    that keeps each task's top-k per query by (dist, p_id). The driver
+    takes the global top-k, applies the same completeness test and runs a
+    second, brute-force pass only for the queries that fail it (none with
+    ``exact=False``). The result is a local relation with this path's
+    exact schema and rows. Haversine stays on the Spark path: its Column
+    trig is the oracle-matched derivation. A repeated ``q_id`` also goes
+    through Spark, whose window ranks the candidates of all its rows
+    together.
     """
     names = (q_id, p_id, q_lon, q_lat, p_lon, p_lat)
-    small = _small_queries(queries, points, names, k) if metric == "euclidean_deg2" else None
     if ring == "auto":
         ring, cpd = _auto_ring(points.count(), k, cpd)
 
     cell_deg = 1.0 / cpd
+    small = None
+    if metric == "euclidean_deg2":
+        small = _small_queries(queries, points, names, (2 * abs(ring) + 1) ** 2, k)
     if small is not None:
         schema = _knn_schema(queries, points, names, "dist_km", grid=True)
-        return _small_knn(points, small, k, names, _grid_ring_table(*small[1:], cpd, ring),
-                          partial(_grid_key, cpd=cpd), (ring * cell_deg) ** 2 if exact else None,
-                          schema, "dist_km")
+        out = _small_knn(points, small, k, names, _grid_ring_table(*small[1:], cpd, ring),
+                         partial(_grid_key, cpd=cpd), (ring * cell_deg) ** 2 if exact else None,
+                         schema, "dist_km")
+        if out is not None:
+            return out
     if metric == "haversine":
         dist = haversine_km(F.col(q_lon), F.col(q_lat), F.col(p_lon), F.col(p_lat))
         # completeness bound: a point outside Chebyshev ring r differs by ≥
@@ -1026,20 +1050,20 @@ def knn_join_hex(
     density — a fixed fine res on sparse data sends every query down the
     brute-force fallback (same rationale as knn_join's auto ring).
 
-    A small query side (as in ``knn_join``) runs no UDF: the driver builds
-    each query's ``hex_k_ring``, the points get ``hex_cell_id`` inside the
-    one ``mapInArrow`` pass, and the merge, completeness test and residual
-    pass are ``knn_join``'s. Larger sides explode the k-ring in a pandas
-    UDF and give the points their cell in another.
+    A small query side (as in ``knn_join``, with 1+3r(r+1) ring cells per
+    query) runs no UDF: the driver builds each query's ``hex_k_ring``, the
+    points get ``hex_cell_id`` inside the one ``mapInArrow`` pass, and the
+    merge, completeness test and residual pass are ``knn_join``'s. Larger
+    sides explode the k-ring in a pandas UDF and give the points their
+    cell in another.
     """
     from geojson_spark.functions.cells import _hex_size, hex_k_ring
     from geojson_spark.functions.spark_funcs import hex_cell_udf
 
     names = (q_id, p_id, q_lon, q_lat, p_lon, p_lat)
-    small = _small_queries(queries, points, names, k)
+    ring_cells = 1 + 3 * ring * (ring + 1)
     if res == "auto":
         n_points = points.count()
-        ring_cells = 1 + 3 * ring * (ring + 1)
         res = 0
         for r in range(15, -1, -1):  # finest acceptable wins
             cell_area = 1.5 * (3.0**0.5) * _hex_size(r) ** 2
@@ -1052,10 +1076,13 @@ def knn_join_hex(
     # √3·r − 2 over-promises for r ≥ 7); points deviate ≤ size from their
     # centers
     bound2 = max(0.0, (1.5 * (ring + 1) - 2.0) * _hex_size(res)) ** 2
+    small = _small_queries(queries, points, names, ring_cells, k)
     if small is not None:
         schema = _knn_schema(queries, points, names, "dist2", grid=False)
-        return _small_knn(points, small, k, names, _hex_ring_table(*small[1:], res, ring),
-                          partial(_hex_key, res=res), bound2 if exact else None, schema, "dist2")
+        out = _small_knn(points, small, k, names, _hex_ring_table(*small[1:], res, ring),
+                         partial(_hex_key, res=res), bound2 if exact else None, schema, "dist2")
+        if out is not None:
+            return out
 
     @F.pandas_udf(ArrayType(LongType()))
     def _ring(lon: pd.Series, lat: pd.Series) -> pd.Series:
@@ -1111,19 +1138,22 @@ def distance_join(
     skew-join splits dense cells. No UDF anywhere.
 
     A small ``euclidean_deg2`` query side (at most 2048 rows, double
-    coordinates) joins in one ``mapInArrow`` pass over the points instead:
-    the ring table (the same cells) rides in the closure, each point finds
-    its queries with ``searchsorted`` and the pass emits the pairs with
-    dist² ≤ radius² — no exchange, no job but the bounded collect of the
-    queries (none for a local relation). A ring beyond ``max_ring`` pairs
-    every point with every query inside the same pass.
+    coordinates, rows·(2r+1)² ≤ 2²⁰ ring cells) joins in one
+    ``mapInArrow`` pass over the points instead: the ring table (the same
+    cells) rides in the closure, each point finds its queries with
+    ``searchsorted`` and the pass emits the pairs with dist² ≤ radius² —
+    no exchange, no job but the bounded collect of the queries (none for a
+    local relation). A ring beyond ``max_ring`` pairs every point with
+    every query inside the same pass. A wider side pays that collect, one
+    warm job, before the Spark plan.
     """
     dxc = F.col(p_lon) - F.col(q_lon)
     dyc = F.col(p_lat) - F.col(q_lat)
     names = (q_id, p_id, q_lon, q_lat, p_lon, p_lat)
     if metric == "euclidean_deg2":
         ring = int(np.ceil(radius * cpd)) + 1
-        small = _small_queries(queries, points, names)
+        # a ring past max_ring pairs each query with every point: one entry
+        small = _small_queries(queries, points, names, (2 * ring + 1) ** 2 if ring <= max_ring else 1)
         if small is not None:
             schema = StructType([queries.schema[c] for c in (q_id, q_lon, q_lat)]
                                 + [points.schema[c] for c in (p_id, p_lon, p_lat)])

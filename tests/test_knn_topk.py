@@ -381,3 +381,78 @@ def test_knn_never_returns_points_without_coordinates(spark, monkeypatch, path, 
             d = (lon - qx) ** 2 + (lat - qy) ** 2
         g = got[got.q_id == q_id].sort_values("rn")
         assert g.p_id.tolist() == np.lexsort((np.arange(lon.size), d))[:3].tolist(), q_id
+
+
+def _spread(spark, n: int, parts: int):
+    # n points in ±20° over `parts` partitions, with no exchange to undo
+    from pyspark.sql import functions as F
+
+    i = F.col("id")
+    return spark.range(0, n, 1, numPartitions=parts).select(
+        i.alias("p_id"), (i * 0.37 % 40.0 - 20.0).alias("p_lon"),
+        (i * 0.61 % 40.0 - 20.0).alias("p_lat"))
+
+
+def _small(df) -> bool:
+    return "Join" not in df._jdf.queryExecution().analyzed().toString()
+
+
+@pytest.mark.parametrize("fn,kwargs", [(knn_join, {"metric": "euclidean_deg2", "ring": 1}),
+                                       (knn_join_hex, {"res": 5, "ring": 1})])
+def test_knn_small_side_bounds_the_driver_merge(spark, monkeypatch, fn, kwargs):
+    # each task yields up to rows·k rows and the driver merges them all:
+    # the small path runs only while partitions·rows·k fits the pair chunk
+    qs = spark.createDataFrame(QUERIES)
+    monkeypatch.setattr(joins_mod, "_PAIR_CHUNK", 3 * K * 8)
+    for parts, small in ((8, True), (9, False), (64, False)):
+        pts = _spread(spark, 4000, parts)
+        out = fn(qs, pts, K, **kwargs)
+        assert _small(out) is small, parts
+        monkeypatch.setattr(joins_mod, "_SMALL_SIDE_ROWS", -1)
+        want = fn(qs, pts, K, **kwargs)
+        monkeypatch.setattr(joins_mod, "_SMALL_SIDE_ROWS", 2048)
+        assert out.schema == want.schema
+        assert sorted(out.collect()) == sorted(want.collect())
+
+
+def test_ring_join_small_side_bounds_the_ring_table(spark, monkeypatch):
+    # the ring table rides in every task's closure: rows·cells must fit the
+    # pair chunk, or the side goes through Spark. The auto ring's 81 cells
+    # and hex ring 2's 19 fit at the full side.
+    assert joins_mod._SMALL_SIDE_ROWS * max(81, 19) <= joins_mod._PAIR_CHUNK
+    qs = spark.createDataFrame(QUERIES)
+    pts = _spread(spark, 4000, 4)
+    monkeypatch.setattr(joins_mod, "_PAIR_CHUNK", 1000)
+    cases = [
+        (distance_join, 0.5, {}, True),                 # ring 5: 3·121 cells
+        (distance_join, 1.5, {}, False),                # ring 13: 3·729 cells
+        (distance_join, 1.5, {"max_ring": 4}, True),    # brute force: 3 entries
+        (knn_join, K, {"metric": "euclidean_deg2", "ring": 1}, True),
+        (knn_join, K, {"metric": "euclidean_deg2", "ring": 10}, False),  # 3·441
+        (knn_join_hex, K, {"res": 5, "ring": 2}, True),
+        (knn_join_hex, K, {"res": 5, "ring": 15}, False),  # 3·721
+    ]
+    for fn, arg, kwargs, small in cases:
+        out = fn(qs, pts, arg, **kwargs)
+        assert _small(out) is small, (fn.__name__, arg, kwargs)
+        if small:
+            _assert_same(*_both_paths(fn, qs, pts, arg, **kwargs))
+
+
+@pytest.mark.parametrize("fn,kwargs", [(knn_join, {"metric": "euclidean_deg2"}),
+                                       (knn_join_hex, {"res": 5, "ring": 1})])
+def test_knn_repeated_and_null_query_ids(spark, fn, kwargs):
+    # a repeated q_id pools its rows' candidates on both paths (the small
+    # path hands such a side to Spark); a null q_id is one query, answered
+    # once — the residual's anti-join used to miss it and add its brute
+    # force answer to the complete one
+    pts = spark.createDataFrame(_mixed())
+    dup = spark.createDataFrame(pd.DataFrame({"q_id": [0, 0, 1], "q_lon": [2.35, 10.0, 0.0],
+                                              "q_lat": [48.85, 20.0, 0.0]}))
+    small, large = _both_paths(fn, dup, pts, K, **kwargs)
+    assert not _small(small)
+    _assert_same(small, large, paths=False)
+    null = spark.createDataFrame(
+        [(None, 2.35, 48.85), (1, 10.0, 20.0)], "q_id long, q_lon double, q_lat double")
+    got = _assert_same(*_both_paths(fn, null, pts, K, **kwargs))
+    assert sorted(r.rn for r in got if r.q_id is None) == list(range(1, K + 1))
